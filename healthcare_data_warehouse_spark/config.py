@@ -113,9 +113,9 @@ TABLES = (
 # Scratch space for sinks exercised by tests (CSV roundtrip, audit log,
 # upsert rewrites). Kept inside the repo and gitignored. Overridable via
 # SPARK_GRAFT_SCRATCH so concurrent processes (pytest vs a parallel
-# oracle/bench run) don't share mutable state like the audit log — two
-# writers on one append-only log is fine in production, but tests that
-# COUNT events need their own log.
+# oracle/bench run) don't share mutable state like the audit log — any
+# number of processes may append to its one JSON-lines file, but tests
+# that COUNT events need their own log.
 SCRATCH_DIR = os.environ.get(
     "SPARK_GRAFT_SCRATCH",
     os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"),

@@ -54,6 +54,7 @@ import decimal
 import hmac
 import hashlib
 import json
+import logging
 import secrets
 import threading
 import time
@@ -63,6 +64,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 
 from .serving import ParameterError, QueryService
+
+_log = logging.getLogger(__name__)
 
 TOKEN_TTL_SECONDS = 30 * 60          # api.py:35 ACCESS_TOKEN_EXPIRE_MINUTES
 CACHE_TTL_SECONDS = 300              # dashboard.py:77 st.cache_data(ttl=300)
@@ -192,6 +195,14 @@ def _json_default(o: Any) -> Any:
     return str(o)
 
 
+def _root_detail(exc: BaseException) -> str:
+    """``Type: message`` of the exception that started ``exc``'s chain."""
+    while exc.__cause__ is not None or (
+            exc.__context__ is not None and not exc.__suppress_context__):
+        exc = exc.__cause__ or exc.__context__
+    return f"{type(exc).__name__}: {exc}"
+
+
 @dataclass
 class ApiServer:
     """The wired-up HTTP frontend. Start with ``serve()``; stop with
@@ -214,17 +225,21 @@ class ApiServer:
 
     # -- query execution ---------------------------------------------------
 
-    def run_cached(self, name: str, params: dict[str, Any],
-                   limit: int | None) -> list[dict[str, Any]]:
+    def run_cached(self, name: str, params: dict[str, Any], limit: int | None,
+                   user: str | None = None) -> list[dict[str, Any]]:
         """Execute through QueryService (typed params, audit, budget) with
-        the row cap and the TTL cache in front."""
+        the row cap and the TTL cache in front. Logs one READ event for
+        ``user`` (default: the service's) per call, cache hits included."""
+        service = self.service if user is None else self.service.as_user(user)
         limit = min(int(limit), self.max_rows) if limit is not None else self.max_rows
         key = self.cache.key(name, {**params, "__limit": limit})
         rows = self.cache.get(key)
         if rows is None:
-            df = self.service.run(name, limit=limit, **params)
+            df = service.run(name, limit=limit, **params)
             rows = [r.asDict(recursive=True) for r in df.collect()]
             self.cache.put(key, rows)
+        else:
+            service.log_cached_read(name, params)
         return rows
 
     # -- lifecycle ---------------------------------------------------------
@@ -279,16 +294,24 @@ class _Handler(BaseHTTPRequestHandler):
         qs = urllib.parse.urlparse(self.path).query
         return {k: v[-1] for k, v in urllib.parse.parse_qs(qs).items()}
 
-    def _run(self, name: str, params: dict[str, Any], limit: Any) -> None:
+    def _rows(self, user: str, name: str, params: dict[str, Any],
+              limit: Any) -> list[dict[str, Any]] | None:
+        """The query's rows, or None once an error reply has been sent."""
         try:
-            rows = self.server_api.run_cached(name, params, limit)
+            return self.server_api.run_cached(name, params, limit, user)
         except KeyError:
             self._error(404, f"unknown query {name!r}")
-            return
         except (ParameterError, ValueError) as e:
             self._error(422, str(e))  # FastAPI validation-error status
-            return
-        self._send(200, rows)
+        except Exception as e:  # noqa: BLE001 — logged and reported to the client
+            _log.exception("serving %r failed", name)
+            self._error(500, _root_detail(e))
+        return None
+
+    def _run(self, user: str, name: str, params: dict[str, Any], limit: Any) -> None:
+        rows = self._rows(user, name, params, limit)
+        if rows is not None:
+            self._send(200, rows)
 
     # -- routes ------------------------------------------------------------
 
@@ -324,16 +347,14 @@ class _Handler(BaseHTTPRequestHandler):
         if path in ANALYTICS_ROUTES:
             name, remap = ANALYTICS_ROUTES[path]
             params = {remap[k]: v for k, v in q.items() if k in remap}
-            self._run(name, params, q.get("limit"))
+            self._run(user, name, params, q.get("limit"))
             return
 
         parts = path.strip("/").split("/")
         if len(parts) == 3 and parts[0] == "patients" and parts[2] == "visits":
-            try:
-                rows = self.server_api.run_cached(
-                    "patient_history", {"patient_key": parts[1]}, q.get("limit"))
-            except (ParameterError, ValueError) as e:
-                self._error(422, str(e))
+            rows = self._rows(user, "patient_history",
+                              {"patient_key": parts[1]}, q.get("limit"))
+            if rows is None:
                 return
             if not rows:  # api.py:329
                 self._error(404, "Patient not found or has no visits")
@@ -342,7 +363,7 @@ class _Handler(BaseHTTPRequestHandler):
             return
         if len(parts) == 2 and parts[0] == "query":
             limit = q.pop("limit", None)
-            self._run(parts[1], q, limit)
+            self._run(user, parts[1], q, limit)
             return
 
         self._error(404, "Not Found")

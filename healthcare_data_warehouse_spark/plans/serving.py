@@ -14,7 +14,8 @@ query registry, not the planner — this module is that registry wrapper:
   literals/kwargs — there is no string-formatted SQL anywhere, so the
   reference's injection surface (query_builder.py:170 ``query.format``)
   does not exist here by construction;
-- every query execution appends a READ event to the audit log (S7);
+- every query execution appends a READ event to the audit log (S7),
+  naming the user the service acts for (``as_user``);
 - queries that spend differential-privacy budget charge epsilon at the
   EXECUTION boundary: the noisy result is materialized under the charge
   (so re-reading the returned frame re-reads the same released noise, it
@@ -25,6 +26,7 @@ query registry, not the planner — this module is that registry wrapper:
 
 from __future__ import annotations
 
+import dataclasses
 import datetime
 from dataclasses import dataclass, field
 from typing import Any, Callable
@@ -113,6 +115,18 @@ PARAM_SPECS: dict[str, dict[str, ParamSpec]] = {
 }
 
 
+def _bind(name: str, params: dict[str, Any]) -> dict[str, Any]:
+    """Validate ``params`` against the query's specs; return the typed values."""
+    specs = PARAM_SPECS.get(name, {})
+    unknown = set(params) - set(specs)
+    if unknown:
+        raise ParameterError(
+            f"{name} does not take parameter(s) {sorted(unknown)}; "
+            f"allowed: {sorted(specs) or 'none'}"
+        )
+    return {p: specs[p].bind(name, p, v) for p, v in params.items()}
+
+
 @dataclass
 class QueryService:
     """Audited, budget-enforced, parameterized access to the query catalog."""
@@ -130,19 +144,16 @@ class QueryService:
     def params_for(self, name: str) -> list[str]:
         return sorted(PARAM_SPECS.get(name, {}))
 
+    def as_user(self, user: str) -> QueryService:
+        """This service acting for ``user``: its READ events name them,
+        and it spends the same privacy budget."""
+        return dataclasses.replace(self, user=user)
+
     def run(self, name: str, limit: int | None = None, **params: Any) -> DataFrame:
         qs = catalog.queries()
         if name not in qs:
             raise KeyError(f"unknown query {name!r}; see available_queries()")
-
-        specs = PARAM_SPECS.get(name, {})
-        unknown = set(params) - set(specs)
-        if unknown:
-            raise ParameterError(
-                f"{name} does not take parameter(s) {sorted(unknown)}; "
-                f"allowed: {sorted(specs) or 'none'}"
-            )
-        bound = {p: specs[p].bind(name, p, v) for p, v in params.items()}
+        bound = _bind(name, params)
 
         # Build the plan BEFORE charging: a malformed query must not spend
         # budget (ADVICE r01: charge at the execution boundary).
@@ -166,10 +177,20 @@ class QueryService:
             except Exception:
                 self.budget.refund(name, epsilon)
                 raise
+        self._log_read(name, bound, epsilon=epsilon)
+        return df
+
+    def log_cached_read(self, name: str, params: dict[str, Any]) -> None:
+        """Log the READ event of a result the caller serves from its own
+        cache, as ``run`` logs one for a result it computes."""
+        self._log_read(name, _bind(name, params), cache_hit=True)
+
+    def _log_read(self, name: str, bound: dict[str, Any],
+                  epsilon: float | None = None, cache_hit: bool = False) -> None:
         log_audit(
             self.spark, "READ", name, user_name=self.user,
             details=f"sf_dir={self.sf_dir}"
             + (f" epsilon={epsilon}" if epsilon else "")
-            + (f" params={sorted(bound.items())}" if bound else ""),
+            + (f" params={sorted(bound.items())}" if bound else "")
+            + (" cache=hit" if cache_hit else ""),
         )
-        return df

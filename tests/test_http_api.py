@@ -6,14 +6,17 @@ ThreadingHTTPServer on an ephemeral port.
 """
 
 import json
+import shutil
 import urllib.error
 import urllib.parse
 import urllib.request
 
 import pytest
 
+from healthcare_data_warehouse_spark.plans import catalog
 from healthcare_data_warehouse_spark.plans.http_api import ApiServer, TokenAuthority
 from healthcare_data_warehouse_spark.plans.serving import QueryService
+from healthcare_data_warehouse_spark.sources.audit import audit_log_path, read_audit_log
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -41,9 +44,9 @@ def _call(url, method="GET", token=None, body=None, content_type=None):
         return e.code, json.loads(e.read())
 
 
-def _token(base):
+def _token(base, username="admin", password="s3cret"):
     status, payload = _call(f"{base}/auth/token", "POST",
-                            body={"username": "admin", "password": "s3cret"})
+                            body={"username": username, "password": password})
     assert status == 200 and payload["token_type"] == "bearer"
     return payload["access_token"]
 
@@ -137,6 +140,53 @@ def test_cache_hit_on_repeat(api):
     _call(f"{base}/cache/clear", "POST", token=token)
     status, _ = _call(f"{base}/analytics/age-groups", token=token)
     assert status == 200 and server.cache.hits == before + 1
+
+
+def test_every_served_response_audits_its_caller(spark):
+    # One READ event per 200 response, naming the token's user, whether
+    # the rows were computed or came from the cache another user filled.
+    shutil.rmtree(audit_log_path(), ignore_errors=True)
+    server = ApiServer(QueryService(spark, SF_DIR), users={"alice": "a", "bob": "b"})
+    base = f"http://127.0.0.1:{server.serve()}"
+    try:
+        alice, bob = _token(base, "alice", "a"), _token(base, "bob", "b")
+        for token, route in [(alice, "age-groups"), (bob, "age-groups"),
+                             (bob, "kpis"), (alice, "kpis")]:
+            status, _ = _call(f"{base}/analytics/{route}", token=token)
+            assert status == 200
+        assert (server.cache.hits, server.cache.misses) == (2, 2)
+        # A user= query parameter is an unknown parameter, not an identity.
+        status, _ = _call(f"{base}/query/agg_global_kpis?user=mallory", token=alice)
+        assert status == 422
+    finally:
+        server.shutdown()
+    events = sorted((r["table_name"], r["user_name"], r["action_type"],
+                     "cache=hit" in r["details"])
+                    for r in read_audit_log(spark).collect())
+    assert events == [("agg_by_agegroup", "alice", "READ", False),
+                      ("agg_by_agegroup", "bob", "READ", True),
+                      ("kpi_block", "alice", "READ", True),
+                      ("kpi_block", "bob", "READ", False)]
+    shutil.rmtree(audit_log_path(), ignore_errors=True)
+
+
+def test_unexpected_error_is_a_500_with_root_message(api, monkeypatch):
+    base, server = api
+    registry = catalog.queries
+
+    def broken(spark, sf_dir, **params):
+        try:
+            raise OSError("disk gone")
+        except OSError as e:
+            raise RuntimeError("plan build failed") from e
+
+    monkeypatch.setattr(catalog, "queries", lambda: {
+        **registry(), "agg_global_kpis": broken, "patient_history": broken})
+    server.cache.clear()
+    token = _token(base)
+    for route in ("/query/agg_global_kpis", "/patients/1/visits"):
+        status, payload = _call(f"{base}{route}", token=token)
+        assert (status, payload) == (500, {"detail": "OSError: disk gone"})
 
 
 def test_token_expiry_claim_checked():

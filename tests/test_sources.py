@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import shutil
+import sys
+import threading
 
 import pyspark.sql.functions as F
 
@@ -11,6 +14,7 @@ from healthcare_data_warehouse_spark.config import SCRATCH_DIR
 from healthcare_data_warehouse_spark.sources.audit import (
     audit_log_path,
     audited_read,
+    log_audit,
     read_audit_log,
 )
 from healthcare_data_warehouse_spark.sources.sinks import upsert, upsert_to_path
@@ -51,6 +55,57 @@ def test_audited_read_logs_event(spark):
     # second read appends, never overwrites
     audited_read(spark, SF_SMOKE, "nation", user_name="tester")
     assert read_audit_log(spark).count() == 2
+    shutil.rmtree(audit_log_path(), ignore_errors=True)
+
+
+def test_audit_log_concurrent_appends_one_file(spark):
+    # Eight writer threads share the log: no event is lost or torn, and
+    # the directory stays at one file however many events land in it.
+    shutil.rmtree(audit_log_path(), ignore_errors=True)
+    errors = []
+
+    def writer(t):
+        try:
+            for i in range(125):
+                log_audit(spark, "READ", f"t{t}", user_name="stress", details=f"i={i}")
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=writer, args=(t,)) for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not errors and not any(th.is_alive() for th in threads)
+
+    log = read_audit_log(spark)
+    assert log.count() == 1000
+    assert log.select("audit_id").distinct().count() == 1000
+    assert {r["table_name"]: r["count"] for r in log.groupBy("table_name").count().collect()} \
+        == {f"t{t}": 125 for t in range(8)}
+    assert len(os.listdir(audit_log_path())) == 1
+    shutil.rmtree(audit_log_path(), ignore_errors=True)
+
+
+def test_audit_timestamp_roundtrip_is_utc(spark):
+    # The log stores an instant; read back under the UTC session zone it
+    # is the naive-UTC wall time at which the event was written.
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    shutil.rmtree(audit_log_path(), ignore_errors=True)
+    before = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    log_audit(spark, "LOAD", "ts_probe")
+    after = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    got = read_audit_log(spark).select(
+        F.date_format("action_timestamp", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts")
+    ).collect()
+    assert len(got) == 1
+    ts = dt.datetime.fromisoformat(got[0]["ts"])
+    assert before - dt.timedelta(seconds=1) <= ts <= after + dt.timedelta(seconds=1)
     shutil.rmtree(audit_log_path(), ignore_errors=True)
 
 
