@@ -32,55 +32,36 @@ PRIVACY_BUDGET_MAX_EPSILON = 1.0
 # shuffles at all, so adding a pre-aggregation exchange would be pure
 # overhead. Above it the dims stop fitting broadcast, every joined byte
 # rides a shuffle, and shrinking the fact FIRST is the dominant term.
-STAGED_JOIN_CUTOVER_BYTES = int(
-    os.environ.get("SPARK_GRAFT_STAGED_JOIN_BYTES", str(512 << 20))
-)
+STAGED_JOIN_CUTOVER_BYTES = 512 << 20
 
-# Bulk approximate k-NN regime OVERRIDE (r10): the recall_fraction →
-# fixed_list_size cutover is decided by the per-block cost model in
+# Bulk approximate k-NN regime: the recall_fraction → fixed_list_size
+# cutover is decided by the per-block cost model in
 # operators/similarity.ann_regime_costs (whichever regime estimates
 # fewer scored candidates per row — they cross at 20k rows, and the
 # old 100k row threshold left a measured superlinear pocket between:
 # sf3 ann_knn_join ran SLOWER than sf10 on the committed r9 curve).
-# Set SPARK_GRAFT_ANN_JOIN_CUTOVER_ROWS to force a row threshold for
-# A/B probes and regime tests (0 = always fixed-list); unset (default)
-# = cost model. Stamped into decisions either way.
-ANN_JOIN_FIXED_LIST_CUTOVER_ROWS = (
-    int(os.environ["SPARK_GRAFT_ANN_JOIN_CUTOVER_ROWS"])
-    if "SPARK_GRAFT_ANN_JOIN_CUTOVER_ROWS" in os.environ else None
-)
-
-# ivf_knn_join pinned-exchange width OVERRIDE (r11): width is normally
-# derived from the data (probe bytes / 4 MB, capped by base_w·8 and by
-# 4 partitions per scoring group — similarity.ivf_knn_join). Set
-# SPARK_GRAFT_ANN_WIDE to pin both exchanges to a fixed width for
-# interleaved A/B probes (e.g. the r10 formula's value). Unset = derive.
-ANN_WIDE_OVERRIDE = (
-    int(os.environ["SPARK_GRAFT_ANN_WIDE"])
-    if "SPARK_GRAFT_ANN_WIDE" in os.environ else None
-)
+# None (the value the engine runs with) = cost model. A row count here
+# forces a threshold instead (0 = always fixed-list); the regime tests
+# set it to pin each regime. Stamped into decisions either way.
+ANN_JOIN_FIXED_LIST_CUTOVER_ROWS: int | None = None
 
 # spread()'s data-derived width floor (r11): a CPU-spreading exchange
 # gets min(defaultParallelism, input_bytes // this) partitions, so a
 # byte-tiny input stops paying one task per core in fixed per-task
 # overhead (the 8c-faster-than-32c inversion the r10 driver scaling
 # block measured), while anything >= cores x quantum keeps the full
-# core fan-out. Default 64 KB/task: the CPU-amplifying stages this
+# core fan-out. 64 KB/task: the CPU-amplifying stages this
 # feeds (tokenize/shingle/decode, ~50x fan-out) turn 64 KB of input
 # into a few ms of real work — comparable to the task's fixed cost, the
-# break-even. 0 restores the unconditional core floor (A/B arm).
-SPREAD_MIN_TASK_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_MIN_TASK_BYTES", str(64 << 10))
-)
+# break-even.
+SPREAD_MIN_TASK_BYTES = 64 << 10
 
 # When the ingest-time order-bucketed layout is already materialized
 # (sources/bucketing.py), order-grained queries auto-route onto it —
 # the zero-fact-exchange plan becomes the DEFAULT path rather than a
 # separate query id. Attach-only: routing never triggers the layout
-# build. Off switch exists for A/B probes and the regime plan tests.
-BUCKETED_AUTO_ROUTE = (
-    os.environ.get("SPARK_GRAFT_BUCKETED_AUTO_ROUTE", "1") != "0"
-)
+# build. The regime plan tests set it False to pin the unbucketed plans.
+BUCKETED_AUTO_ROUTE = True
 
 # Materialize-for-reuse cutover: when a corpus-derived intermediate
 # feeds multiple consumers with no exchange for ReuseExchange to dedupe
@@ -90,9 +71,7 @@ BUCKETED_AUTO_ROUTE = (
 # materialization round-trip — measured both ways on quality_bigram_lm
 # (sf1: checkpoint +5 s; sf10: checkpoint −2.5 s). Order-of-magnitude
 # gate, same discipline as STAGED_JOIN_CUTOVER_BYTES.
-CHECKPOINT_REUSE_CUTOVER_BYTES = int(
-    os.environ.get("SPARK_GRAFT_CHECKPOINT_REUSE_BYTES", str(32 << 20))
-)
+CHECKPOINT_REUSE_CUTOVER_BYTES = 32 << 20
 
 # Driver test data (TESTDATA.md).
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

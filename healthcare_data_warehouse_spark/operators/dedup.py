@@ -13,13 +13,15 @@ than the hash choice:
   signature splits into h+1 equal chunks and any qualifying pair matches
   at least one chunk exactly, so recall is perfect without an n² join.
 - Degenerate-bucket guard (both LSH and SimHash): buckets larger than
-  ``max_bucket_size`` are dropped before the within-bucket join, bounding
+  ``max_bucket_size`` are dropped before the within-bucket pairing, bounding
   the candidate count under skew; identical docs are exact-dedup's job.
 - n-gram Jaccard: the verify step on candidate pairs (set intersection /
   union on shingle arrays).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -186,6 +188,55 @@ def minhash_signatures_df(df: DataFrame, text_col: str = "text", id_col: str = "
     return sh.groupBy(id_col).agg(*aggs)
 
 
+def _id_pair(x: Column, y: Column) -> list[Column]:
+    return [x.alias("id_a"), y.alias("id_b")]
+
+
+def bucket_pairs(df: DataFrame, key_cols: Sequence[str], member: Column,
+                 pair: Callable[[Column, Column], list[Column]] = _id_pair
+                 ) -> DataFrame:
+    """Distinct pairs of ``df`` rows sharing a bucket ``key_cols``: the
+    within-bucket pairing every candidate generator here shares.
+
+    Array-native (r11, guide §2.4 — collapse same-key stages): ONE
+    groupBy on the bucket key collects each bucket's ``member`` values
+    into a sorted array, and element i pairs with every later element
+    (1-indexed slice from i+2) task-locally. When the caller's
+    bucket-size window already hash-partitioned ``df`` on ``key_cols``
+    the groupBy reuses that partitioning (no second exchange). The
+    caller bounds bucket sizes (a size guard, a document-frequency cap):
+    a bucket of s members emits s·(s−1)/2 pairs from one task. The
+    within-bucket SELF-JOIN this replaced computed the same pairs, but
+    its aliased branches never share subtrees, so the plan paid the
+    whole upstream subtree twice plus a broadcast build of one side.
+
+    ``pair(x, y)`` maps two members, x sorting before y, to the output
+    columns; they must include ``id_a`` and ``id_b`` (the default: the
+    members themselves are the ids). A struct member sorts by its first
+    field, so put the id first and carry payload after it (SimHash
+    carries its signature to compute the hamming distance in the
+    fan-out). The strict ``id_a < id_b`` filter reproduces the old
+    join's strict inequality even for a duplicate id in one bucket."""
+    members = (
+        df.groupBy(*key_cols)
+        .agg(F.sort_array(F.collect_list(member)).alias("__m"))
+        .filter(F.size("__m") >= 2)
+    )
+    fanned = F.flatten(F.transform(
+        F.col("__m"),
+        lambda x, i: F.transform(
+            F.slice(F.col("__m"), i + F.lit(2), F.size(F.col("__m"))),
+            lambda y: F.struct(*pair(x, y)),
+        ),
+    ))
+    return (
+        members.select(F.explode(fanned).alias("__p"))
+        .select("__p.*")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .distinct()
+    )
+
+
 def lsh_candidate_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                         num_hashes: int = 16, bands: int = 4,
                         max_bucket_size: int = 64) -> DataFrame:
@@ -202,18 +253,12 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     buckets are near-exact duplicates anyway — the exact-dedup pass
     (``drop_exact_dups``) owns those.
 
-    Pairing is ARRAY-native (r11, guide §2.4 — collapse same-key
-    stages): the bucket-size window, the per-bucket id list, and the
-    pair fan-out all run on ONE (band, band_hash) hash-partitioning —
-    the window installs it, the groupBy reuses it (no second exchange),
-    and the pairs explode from a ≤``max_bucket_size`` sorted array
-    task-locally. The pre-r11 within-bucket self-join computed the same
-    pairs by joining the capped bucket stream against itself — one more
+    Pairing is ``bucket_pairs``: the bucket-size window, the per-bucket
+    id list, and the pair fan-out all run on ONE (band, band_hash)
+    hash-partitioning. The pre-r11 within-bucket self-join cost one more
     exchange plus an 8.9 MB broadcast build at sf0.1, and at 100 TB a
     broadcast (or sort-merge re-sort) of the ENTIRE capped banded
-    relation, all replaced by the per-bucket array whose size the guard
-    already bounds. Output identical: same buckets, same a<b pairs,
-    same distinct."""
+    relation."""
     from pyspark.sql import Window
 
     rows_per_band = num_hashes // bands
@@ -238,29 +283,7 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
         .filter(F.col("__bucket_n") <= max_bucket_size)
         .drop("__bucket_n")
     )
-    # One agg on the window's own partitioning (no exchange), then all
-    # ordered pairs from the sorted, guard-bounded id array: element i
-    # pairs with every later element (1-indexed slice from i+2), giving
-    # exactly the a<b pairs of the old self-join.
-    bucket_ids = (
-        banded.groupBy("band", "band_hash")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("__ids"))
-        .filter(F.size("__ids") >= 2)
-    )
-    pairs = F.flatten(F.transform(
-        F.col("__ids"),
-        lambda x, i: F.transform(
-            F.slice(F.col("__ids"), i + F.lit(2),
-                    F.size(F.col("__ids"))),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-        ),
-    ))
-    return (
-        bucket_ids.select(F.explode(pairs).alias("__p"))
-        .select(F.col("__p.id_a").alias("id_a"),
-                F.col("__p.id_b").alias("id_b"))
-        .distinct()
-    )
+    return bucket_pairs(banded, ["band", "band_hash"], F.col(id_col))
 
 
 # ---------------------------------------------------------------------------
@@ -355,17 +378,11 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc
     bounds the pair fan-out under skew (identical docs belong to exact
     dedup, not here).
 
-    Pairing is ARRAY-native (r11, guide §2.4 — the lsh_candidate_pairs
-    rewrite applied here, carrying the signature through the struct):
-    the bucket-size window installs hashpartitioning(chunk, chunk_val),
-    the groupBy reuses it (no second exchange), and the ordered pairs —
-    each with both signatures for the hamming computation — explode
-    from a ≤max_bucket_size id-sorted struct array task-locally. The
-    pre-r11 within-bucket SELF-JOIN computed the same pairs by joining
-    the capped banded stream against itself: aliased branches never
-    share subtrees, so the plan paid the ENTIRE
-    tokenize→simhash-signature→chunk→window subtree twice plus a
-    broadcast build of one whole side."""
+    Pairing is ``bucket_pairs`` on the (chunk, chunk_val) partitioning
+    the bucket-size window installs; each member carries its signature,
+    so the hamming distance computes in the fan-out. The pre-r11
+    within-bucket SELF-JOIN paid the ENTIRE
+    tokenize→simhash-signature→chunk→window subtree twice."""
     from pyspark.sql import Window
 
     chunks = max_hamming + 1
@@ -388,41 +405,15 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc
         .filter(F.col("__bucket_n") <= max_bucket_size)
         .drop("__bucket_n")
     )
-    # One agg on the window's own partitioning (no exchange); pairs
-    # carry both signatures out of the id-sorted struct array, so the
-    # hamming computes task-locally exactly as the old join condition
-    # did. array_sort orders by the struct's first field (id), and the
-    # strict id_a < id_b filter reproduces the old join's strict
-    # inequality even for duplicate ids in one bucket.
-    bucket_members = (
-        banded.groupBy("chunk", "chunk_val")
-        .agg(F.array_sort(F.collect_list(
-            F.struct(F.col(id_col).alias("id"),
-                     F.col("simhash").alias("sig")))).alias("__m"))
-        .filter(F.size("__m") >= 2)
-    )
-    pair_structs = F.flatten(F.transform(
-        F.col("__m"),
-        lambda x, i: F.transform(
-            F.slice(F.col("__m"), i + F.lit(2), F.size(F.col("__m"))),
-            lambda y: F.struct(
-                x["id"].alias("id_a"),
-                y["id"].alias("id_b"),
-                F.bit_count(x["sig"].bitwiseXOR(y["sig"])).alias("hamming"),
-            ),
-        ),
-    ))
-    return (
-        bucket_members.select(F.explode(pair_structs).alias("__p"))
-        .select(
-            F.col("__p.id_a").alias("id_a"),
-            F.col("__p.id_b").alias("id_b"),
-            F.col("__p.hamming").alias("hamming"),
-        )
-        .filter((F.col("id_a") < F.col("id_b"))
-                & (F.col("hamming") <= max_hamming))
-        .distinct()
-    )
+    member = F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("sig"))
+    return bucket_pairs(
+        banded, ["chunk", "chunk_val"], member,
+        lambda x, y: [
+            x["id"].alias("id_a"),
+            y["id"].alias("id_b"),
+            F.bit_count(x["sig"].bitwiseXOR(y["sig"])).alias("hamming"),
+        ],
+    ).filter(F.col("hamming") <= max_hamming)
 
 
 # ---------------------------------------------------------------------------
@@ -524,36 +515,10 @@ def rare_feature_pairs(df: DataFrame, text_col: str = "text",
         .select("f")
     )
     rd = ds.join(rare, "f")
-    # Pairing is ARRAY-native (r11, guide §2.4 — the lsh_candidate_pairs
-    # rewrite applied here): one groupBy on the shingle key collects the
-    # ≤max_df sorted doc-id list per rare shingle and fans out the a<b
-    # pairs task-locally. The pre-r11 within-shingle SELF-JOIN computed
-    # the same pairs by joining rd against itself — its aliased branches
-    # never share subtrees, so the plan paid the checkpoint explode AND
-    # the whole document-frequency aggregate TWICE (two broadcast
-    # builds), plus the join itself. The strict id_a < id_b filter
-    # reproduces the old join condition exactly even under a 64-bit
-    # shingle-hash collision inside one doc (duplicate f per id).
-    bucket_ids = (
-        rd.groupBy("f")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("__ids"))
-        .filter(F.size("__ids") >= 2)
-    )
-    pair_structs = F.flatten(F.transform(
-        F.col("__ids"),
-        lambda x, i: F.transform(
-            F.slice(F.col("__ids"), i + F.lit(2),
-                    F.size(F.col("__ids"))),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-        ),
-    ))
-    pairs = (
-        bucket_ids.select(F.explode(pair_structs).alias("__p"))
-        .select(F.col("__p.id_a").alias("id_a"),
-                F.col("__p.id_b").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .distinct()
-    )
+    # One groupBy on the shingle key pairs the ≤max_df doc ids of each
+    # rare shingle (bucket_pairs); the old self-join of rd paid the
+    # checkpoint explode AND the document-frequency aggregate twice.
+    pairs = bucket_pairs(rd, ["f"], F.col(id_col))
     sa = t.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("sh_a"))
     sb = t.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("sh_b"))
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))

@@ -783,10 +783,9 @@ def routed_ivf_params(max_big_rows: int,
     ``ivf_knn_join`` shares one quantizer across blocks, and smaller
     routed blocks just see fewer members per list, never more).
 
-    ``config.ANN_JOIN_FIXED_LIST_CUTOVER_ROWS`` (env
-    SPARK_GRAFT_ANN_JOIN_CUTOVER_ROWS) remains as an explicit OVERRIDE
-    row threshold for A/B probes and regime tests; unset (the default)
-    means the cost model decides."""
+    ``config.ANN_JOIN_FIXED_LIST_CUTOVER_ROWS`` is None, so the cost
+    model decides; the regime tests set it to a row threshold to pin a
+    regime."""
     from ..config import ANN_JOIN_FIXED_LIST_CUTOVER_ROWS
 
     costs = ann_regime_costs(max_big_rows, target_recall)
@@ -1622,7 +1621,6 @@ def ivf_knn_join(df: DataFrame, id_col: str = "vec_id",
     # (catalog/route paths — exact, immune to the derived-frame
     # estimate inflation the r10 advice flagged), else from the
     # scan-adjacent Catalyst estimate as before.
-    from ..config import ANN_WIDE_OVERRIDE
     from .skew import relation_size_bytes
 
     dim = X.shape[1]
@@ -1636,8 +1634,6 @@ def ivf_knn_join(df: DataFrame, id_col: str = "vec_id",
     n_wide = max(1, min(base_w * 8,
                         probe_bytes // (4 << 20),
                         4 * n_groups))
-    if ANN_WIDE_OVERRIDE is not None:  # A/B escape hatch (r11 item 4)
-        n_wide = ANN_WIDE_OVERRIDE
 
     def _score(key, pdf):
         mem = pdf[pdf["rank"] == 0]

@@ -104,9 +104,7 @@ def spread(df: DataFrame, key_col: str, n_partitions: int | None = None) -> Data
     cores than 32). The floor is now min(defaultParallelism, est //
     SPREAD_MIN_TASK_BYTES): inputs below ~1 task-quantum per core stop
     fanning to every core, while anything ≥ cores × quantum (every
-    mid/large SF) keeps the exact r10 width. SPREAD_MIN_TASK_BYTES is
-    env-tunable (SPARK_GRAFT_SPREAD_MIN_TASK_BYTES; 0 restores the
-    unconditional core floor) for interleaved A/B probes."""
+    mid/large SF) keeps the exact r10 width."""
     if n_partitions:
         n = n_partitions
     else:
@@ -114,8 +112,7 @@ def spread(df: DataFrame, key_col: str, n_partitions: int | None = None) -> Data
 
         est = relation_size_bytes(df)
         cores = df.sparkSession.sparkContext.defaultParallelism
-        floor = (min(cores, max(1, est // SPREAD_MIN_TASK_BYTES))
-                 if SPREAD_MIN_TASK_BYTES > 0 else cores)
+        floor = min(cores, max(1, est // SPREAD_MIN_TASK_BYTES))
         n = max(floor, min(4096, est // (8 << 20)))
     return df.repartition(n, F.col(key_col))
 

@@ -119,11 +119,6 @@ def load_table(spark: SparkSession, sf_dir: str | None, name: str) -> DataFrame:
     nodes are stripped from canonicalized plans."""
     sf_dir = sf_dir or DEFAULT_SF_DIR
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.environ.get("SPARK_GRAFT_NO_RELCACHE"):  # A/B escape hatch
-        if name == "events":
-            _ensure_nanos_conf(spark)
-            return _events_ts_fixup(spark.read.parquet(path)).alias(name)
-        return spark.read.parquet(path).alias(name)
     try:
         cache = spark._hdw_table_cache
     except AttributeError:

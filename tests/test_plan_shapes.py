@@ -384,15 +384,6 @@ def test_spread_width_scales_with_relation_size(spark):
             max(dp, (1 << 30) // (8 << 20))
         skew.relation_size_bytes = lambda df: 1 << 50  # absurd -> capped
         assert skew.spread(big, "k").rdd.getNumPartitions() == 4096
-        # A/B escape hatch: 0 restores the unconditional core floor
-        from healthcare_data_warehouse_spark import config
-        old = config.SPREAD_MIN_TASK_BYTES
-        try:
-            config.SPREAD_MIN_TASK_BYTES = 0
-            skew.relation_size_bytes = lambda df: 8 << 10
-            assert skew.spread(big, "k").rdd.getNumPartitions() == dp
-        finally:
-            config.SPREAD_MIN_TASK_BYTES = old
     finally:
         skew.relation_size_bytes = orig
 

@@ -3,8 +3,8 @@ old self-join formulations they replaced.
 
     python tools/r11b_pair_equiv.py <sf_dir>
 
-For simhash_near_pairs and rare_feature_pairs (via
-dedup_rare_shingle_pairs' input), builds the OLD self-join pair
+For lsh_candidate_pairs, simhash_near_pairs and rare_feature_pairs
+(via dedup_rare_shingle_pairs' input), builds the OLD self-join pair
 formulation inline (byte-identical to the removed code) on the same
 inputs and asserts set-equality of the collected results against HEAD.
 For market_basket_pairs — where the array rewrite was REJECTED on
@@ -47,11 +47,44 @@ def main() -> None:
     docs = load_table(spark, sf_dir, "documents")
     ok = True
 
+    from pyspark.sql import Window
+
+    # --- lsh_candidate_pairs: old = capped-bucket self-join -------------
+    new = {(r.id_a, r.id_b) for r in D.lsh_candidate_pairs(docs).collect()}
+    sig = D.minhash_signatures_df(docs, "text", "doc_id", 16)
+    band_structs = [
+        F.struct(F.lit(b).alias("band"),
+                 D.hash52(F.concat_ws(",", *[F.col(f"h{b * 4 + r}")
+                                             for r in range(4)]),
+                          D.BAND_SALT).alias("band_hash"))
+        for b in range(4)
+    ]
+    banded = (
+        sig.select("doc_id", F.explode(F.array(*band_structs)).alias("bb"))
+        .select("doc_id", "bb.band", "bb.band_hash")
+    )
+    bucket_w = Window.partitionBy("band", "band_hash")
+    banded = (
+        banded.withColumn("__bucket_n", F.count("*").over(bucket_w))
+        .filter(F.col("__bucket_n") <= 64)
+        .drop("__bucket_n")
+    )
+    a, b = banded.alias("a"), banded.alias("b")
+    old_df = (
+        a.join(b, (F.col("a.band") == F.col("b.band"))
+               & (F.col("a.band_hash") == F.col("b.band_hash"))
+               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("id_a"),
+                F.col("b.doc_id").alias("id_b"))
+        .distinct()
+    )
+    old = {(r.id_a, r.id_b) for r in old_df.collect()}
+    ok &= check("lsh_candidate_pairs", new, old)
+
     # --- simhash_near_pairs: old = within-bucket self-join -------------
     new = {(r.id_a, r.id_b, r.hamming)
            for r in D.simhash_near_pairs(docs).collect()}
     bits, max_hamming, max_bucket_size = 48, 3, 64
-    from pyspark.sql import Window
     chunks = max_hamming + 1
     width = bits // chunks
     mask = (1 << width) - 1

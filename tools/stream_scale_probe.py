@@ -21,7 +21,7 @@ each checkpoint) — the thing a single-batch drain cannot show and the
 reason RocksDB is the provider at all (r9 verdict item 6).
 
 Prints ONE JSON line: drain wall, output rows, and per-batch state rows
-/ memory / RocksDB SST bytes. tools/r10_rerecord.sh combines the probe
+/ memory / RocksDB SST bytes. tools/chain.py combines the probe
 matrix into BENCH_stream.json.
 """
 
