@@ -14,6 +14,7 @@ outlier score, which is both distributed and oracle-checkable.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -44,6 +45,32 @@ def build_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _vectors(assembler, features: DataFrame) -> DataFrame:
+    """Assembled features, round-robin over ``defaultParallelism``.
+
+    The feature plan ends in an AQE byte-coalesced shuffle (window over
+    customer), often one partition, and MLlib freezes whatever
+    partitioning it finds into the training RDD — a handful of skewed
+    partitions serializes every per-depth stats aggregation, and one
+    partition scores all 100 trees in one task. Round-robin evens both
+    (~2.5x faster training at sf0.1; same model, seed-stable)."""
+    n = features.sparkSession.sparkContext.defaultParallelism
+    return assembler.transform(features).repartition(n)
+
+
+def _fit(estimator, assembler, features: DataFrame):
+    """Fit on an 80/20 seeded split (ml_pipeline.py:138-140) of the
+    vectors, persisted for the fit only: MLlib's metadata, split-finding
+    and bagging passes then read them instead of re-running the feature
+    window each time. Returns (model, test)."""
+    vec = _vectors(assembler, features).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        train, test = vec.randomSplit([0.8, 0.2], seed=SEED)
+        return estimator.fit(train), test
+    finally:
+        vec.unpersist()
+
+
 def train_readmission_model(features: DataFrame):
     """RandomForestClassifier(100 trees, depth 10) on the readmission
     label — the reference's model config (ml_pipeline.py:143-148)."""
@@ -58,19 +85,11 @@ def train_readmission_model(features: DataFrame):
         featuresCol="features_vec", labelCol="readmitted_30d",
         numTrees=100, maxDepth=10, seed=SEED,
         # perf-only: bigger node-split batches per stats round (fewer
-        # treeAggregate passes); does not change the learned model
-        maxMemoryInMB=1024,
+        # treeAggregate passes) and cached per-row node ids (no tree
+        # re-shipped per round); neither changes the learned model
+        maxMemoryInMB=1024, cacheNodeIds=True,
     )
-    # Pin training parallelism: the feature plan ends in an AQE
-    # byte-coalesced shuffle (window over customer), and MLlib freezes
-    # whatever partitioning it finds into the training RDD — a handful of
-    # skewed partitions serializes every per-depth stats aggregation.
-    # Round-robin to defaultParallelism evens the tree-building stages
-    # (~2.5x faster at sf0.1; same model, seed-stable).
-    n = features.sparkSession.sparkContext.defaultParallelism
-    vec = assembler.transform(features).repartition(n)
-    train, test = vec.randomSplit([0.8, 0.2], seed=SEED)  # ml_pipeline.py:138-140
-    model = rf.fit(train)
+    model, test = _fit(rf, assembler, features)
     return model, assembler, test
 
 
@@ -86,7 +105,7 @@ def predict_readmission(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("int").alias("predicted_readmit"),
         ).limit(0)
     model, assembler, _ = train_readmission_model(features)
-    scored = model.transform(assembler.transform(features))
+    scored = model.transform(_vectors(assembler, features))
     prob = F.element_at(vector_to_array("probability"), 2)
     return scored.select(
         "customer_id", "visit_id",
@@ -106,12 +125,10 @@ def train_cost_model(features: DataFrame):
     )
     rf = RandomForestRegressor(
         featuresCol="features_vec", labelCol="cost", numTrees=100, maxDepth=15,
-        seed=SEED, maxMemoryInMB=1024,
+        seed=SEED, maxMemoryInMB=1024, cacheNodeIds=True,
     )
-    n = features.sparkSession.sparkContext.defaultParallelism
-    vec = assembler.transform(features).repartition(n)  # see classifier note
-    train, test = vec.randomSplit([0.8, 0.2], seed=SEED)
-    return rf.fit(train), assembler, test
+    model, test = _fit(rf, assembler, features)
+    return model, assembler, test
 
 
 def anomaly_scores(spark: SparkSession, sf_dir: str, q: float = 0.99) -> DataFrame:

@@ -36,6 +36,7 @@ def add_dense_key(
     key_col: str = "surrogate_key",
     offset: int = 0,
     num_partitions: int | None = None,
+    pins: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Add a dense 1-based surrogate key ordered by ``order_by``.
 
@@ -45,7 +46,11 @@ def add_dense_key(
 
     The range-partitioned intermediate is persisted so the count job and
     the downstream job see the same partitioning (range boundaries come
-    from sampling; persisting also avoids a double scan).
+    from sampling; persisting also avoids a double scan). Pass ``pins``,
+    a list the caller owns, to get that persist appended to it; the
+    caller releases it with :func:`release` once the job consuming the
+    result has returned (releasing earlier would let a re-run re-sample
+    the boundaries under the fixed offsets).
     """
     spark = df.sparkSession
     if num_partitions is None:
@@ -54,6 +59,8 @@ def add_dense_key(
 
     part = df.repartitionByRange(num_partitions, *cols).withColumn(_PID, F.spark_partition_id())
     part.persist(StorageLevel.MEMORY_AND_DISK)
+    if pins is not None:
+        pins.append(part)
 
     counts = part.groupBy(_PID).count().collect()  # numPartitions rows — tiny
     if not counts:  # empty input: keep the schema, no rows to number
@@ -71,3 +78,10 @@ def add_dense_key(
         .withColumn(key_col, (omap[F.col(_PID)] + F.col(_RN)).cast("long"))
         .drop(_PID, _RN)
     )
+
+
+def release(pins: list[DataFrame]) -> None:
+    """Unpersist what ``add_dense_key(..., pins=pins)`` appended to
+    ``pins`` — that caller's blocks only — and empty the list."""
+    while pins:
+        pins.pop().unpersist()

@@ -8,8 +8,9 @@ generalization transforms (:77-122), and a session epsilon budget
 (:291-318).
 
 All audits are pure DataFrame aggregations: one shuffle on the
-quasi-identifier columns each; the t-closeness grid is built with a
-cross join of two *aggregated* (tiny) relations, never the raw data.
+quasi-identifier columns each (the full audit derives all three from one
+(QI, sensitive) pair-count aggregate); the t-closeness grid is built with
+a cross join of two *aggregated* (tiny) relations, never the raw data.
 """
 
 from __future__ import annotations
@@ -44,6 +45,40 @@ def l_diversity_report(df: DataFrame, qi_cols: list[str], sensitive: str,
     )
 
 
+def _pair_counts(df: DataFrame, qi_cols: list[str], sensitive: str) -> DataFrame:
+    """Rows per (quasi-identifier tuple, sensitive value): column ``c``.
+    t-closeness and the full audit are functions of this one aggregate."""
+    return df.groupBy(*qi_cols, sensitive).agg(F.count("*").alias("c"))
+
+
+def _tvd_by_group(pairs: DataFrame, qi: list[str], sensitive: str) -> DataFrame:
+    """Per-QI-group ``tvd`` from ``_pair_counts`` output.
+
+    TVD = ½ Σ|p - q| over the full category grid (missing categories
+    count as p=0, hence the aggregated cross join — global_dist is bounded
+    by the sensitive attribute's cardinality, so its broadcast is safe at
+    any data scale). The row total is an in-plan scalar, as in the
+    oracle's ``(SELECT count(*) ...)``, so building the frame runs no
+    job. The per-category |p-q| terms are accumulated in DECIMAL so the
+    distributed sum is bit-reproducible (see functions.expressions.dsum).
+    """
+    total = pairs.agg(F.sum("c").alias("__total"))
+    global_dist = (
+        pairs.groupBy(sensitive).agg(F.sum("c").alias("__n"))
+        .crossJoin(total)
+        .select(sensitive, (F.col("__n").cast("double") / F.col("__total")).alias("q"))
+    )
+    group_sizes = pairs.groupBy(*qi).agg(F.sum("c").alias("seg_n"))
+    grid = (
+        group_sizes.crossJoin(F.broadcast(global_dist))
+        .join(pairs, [*qi, sensitive], "left")
+        .withColumn("c", F.coalesce(F.col("c"), F.lit(0)))
+        .withColumn("p", F.col("c").cast("double") / F.col("seg_n"))
+    )
+    term = F.abs(F.col("p") - F.col("q")).cast("decimal(18,12)")
+    return grid.groupBy(*qi).agg((F.sum(term).cast("double") / 2).alias("tvd"))
+
+
 def t_closeness_report(df: DataFrame, qi_cols: str | list[str], sensitive: str,
                        t: float = T_CLOSENESS) -> DataFrame:
     """Total-variation distance between each equivalence class's
@@ -54,32 +89,10 @@ def t_closeness_report(df: DataFrame, qi_cols: str | list[str], sensitive: str,
     reference computes EMD per equivalence class over all QIs, and
     single-column groups are coarser (their distributions sit closer to
     the global one), which under-reports violations.
-
-    TVD = ½ Σ|p - q| over the full category grid (missing categories
-    count as p=0, hence the aggregated cross join — global_dist is bounded
-    by the sensitive attribute's cardinality, so its broadcast is safe at
-    any data scale). The per-category |p-q| terms are accumulated in
-    DECIMAL so the distributed sum is bit-reproducible (see
-    functions.expressions.dsum).
     """
     qi = [qi_cols] if isinstance(qi_cols, str) else list(qi_cols)
-    total = df.count()
-    global_dist = (
-        df.groupBy(sensitive)
-        .agg((F.count("*").cast("double") / F.lit(total)).alias("q"))
-    )
-    group_sizes = df.groupBy(*qi).agg(F.count("*").alias("seg_n"))
-    pair_counts = df.groupBy(*qi, sensitive).agg(F.count("*").alias("c"))
-    grid = (
-        group_sizes.crossJoin(F.broadcast(global_dist))
-        .join(pair_counts, [*qi, sensitive], "left")
-        .withColumn("c", F.coalesce(F.col("c"), F.lit(0)))
-        .withColumn("p", F.col("c").cast("double") / F.col("seg_n"))
-    )
-    term = F.abs(F.col("p") - F.col("q")).cast("decimal(18,12)")
     return (
-        grid.groupBy(*qi)
-        .agg((F.sum(term).cast("double") / 2).alias("tvd"))
+        _tvd_by_group(_pair_counts(df, qi, sensitive), qi, sensitive)
         .withColumn("is_violation", F.col("tvd") > t)
     )
 
@@ -113,42 +126,47 @@ def privacy_audit_report(df: DataFrame, qi_cols: list[str], sensitive: str,
                          t: float = T_CLOSENESS) -> dict:
     """Full privacy audit as a JSON-able dict (privacy_engine.py:321-400's
     report shape): k-anonymity, l-diversity, and t-closeness summaries
-    with violation counts and worst offenders."""
-    k_rep = k_anonymity_report(df, qi_cols, k)
-    l_rep = l_diversity_report(df, qi_cols, sensitive, l)
+    with violation counts and worst offenders.
+
+    One pass: group sizes (k), distinct non-null sensitive values (l) and
+    the TVD grid (t) all derive from one (QI, sensitive) pair-count
+    aggregate, and the three summaries come back in one ``collect``. The
+    values equal the ones the three public report frames give.
+    """
+    pairs = _pair_counts(df, qi_cols, sensitive)
+    groups = pairs.groupBy(*qi_cols).agg(
+        F.sum("c").alias("group_size"),
+        F.count(sensitive).alias("l_distinct"),
+    )
+    kl = groups.agg(
+        F.count("*").alias("groups"),
+        F.count_if(F.col("group_size") < k).alias("k_violations"),
+        F.min("group_size").alias("min_group_size"),
+        F.count_if(F.col("l_distinct") < l).alias("l_violations"),
+        F.min("l_distinct").alias("min_l"),
+    )
     # Full QI tuple, matching the reference's per-equivalence-class EMD
     # (privacy_engine.py:168-220) — single-column groups are coarser and
     # would under-report violations.
-    t_rep = t_closeness_report(df, qi_cols, sensitive, t)
-
-    k_stats = k_rep.agg(
-        F.count("*").alias("groups"),
-        F.sum(F.col("is_violation").cast("int")).alias("violations"),
-        F.min("group_size").alias("min_group_size"),
-    ).collect()[0]
-    l_stats = l_rep.agg(
-        F.count("*").alias("groups"),
-        F.sum(F.col("is_violation").cast("int")).alias("violations"),
-        F.min("l_distinct").alias("min_l"),
-    ).collect()[0]
-    t_stats = t_rep.agg(
-        F.count("*").alias("groups"),
-        F.sum(F.col("is_violation").cast("int")).alias("violations"),
+    tc = _tvd_by_group(pairs, qi_cols, sensitive).agg(
+        F.count("*").alias("t_groups"),
+        F.count_if(F.col("tvd") > t).alias("t_violations"),
         F.max("tvd").alias("max_tvd"),
-    ).collect()[0]
+    )
+    r = kl.crossJoin(tc).collect()[0]
     return {
-        "k_anonymity": {"k": k, "groups": k_stats["groups"],
-                        "violations": int(k_stats["violations"] or 0),
-                        "min_group_size": k_stats["min_group_size"],
-                        "passed": int(k_stats["violations"] or 0) == 0},
-        "l_diversity": {"l": l, "groups": l_stats["groups"],
-                        "violations": int(l_stats["violations"] or 0),
-                        "min_l": l_stats["min_l"],
-                        "passed": int(l_stats["violations"] or 0) == 0},
-        "t_closeness": {"t": t, "groups": t_stats["groups"],
-                        "violations": int(t_stats["violations"] or 0),
-                        "max_tvd": float(t_stats["max_tvd"] or 0.0),
-                        "passed": int(t_stats["violations"] or 0) == 0},
+        "k_anonymity": {"k": k, "groups": r["groups"],
+                        "violations": r["k_violations"],
+                        "min_group_size": r["min_group_size"],
+                        "passed": r["k_violations"] == 0},
+        "l_diversity": {"l": l, "groups": r["groups"],
+                        "violations": r["l_violations"],
+                        "min_l": r["min_l"],
+                        "passed": r["l_violations"] == 0},
+        "t_closeness": {"t": t, "groups": r["t_groups"],
+                        "violations": r["t_violations"],
+                        "max_tvd": float(r["max_tvd"] or 0.0),
+                        "passed": r["t_violations"] == 0},
     }
 
 

@@ -83,8 +83,10 @@ def stg_orders(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def dim_customer(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
-    """Customer dimension (analog of dim_patients.sql:34-45)."""
+def dim_customer(spark: SparkSession, sf_dir: str | None = None,
+                 pins: list[DataFrame] | None = None) -> DataFrame:
+    """Customer dimension (analog of dim_patients.sql:34-45). ``pins``
+    collects the key build's persist (``operators.keys.add_dense_key``)."""
     stg = stg_customer(spark, sf_dir)
     dim = stg.select(
         F.col("c_custkey"),
@@ -96,11 +98,13 @@ def dim_customer(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
         F.lit(None).cast("timestamp").alias("valid_to"),
         F.lit(True).alias("is_current"),
     )
-    return add_dense_key(dim, ["c_custkey"], key_col="customer_key")
+    return add_dense_key(dim, ["c_custkey"], key_col="customer_key", pins=pins)
 
 
-def dim_supplier(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
-    """Supplier dimension (analog of dim_providers.sql:32-42)."""
+def dim_supplier(spark: SparkSession, sf_dir: str | None = None,
+                 pins: list[DataFrame] | None = None) -> DataFrame:
+    """Supplier dimension (analog of dim_providers.sql:32-42). ``pins``
+    as in :func:`dim_customer`."""
     stg = stg_supplier(spark, sf_dir)
     dim = stg.select(
         F.col("s_suppkey"),
@@ -110,7 +114,7 @@ def dim_supplier(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
         F.lit(None).cast("timestamp").alias("valid_to"),
         F.lit(True).alias("is_current"),
     )
-    return add_dense_key(dim, ["s_suppkey"], key_col="supplier_key")
+    return add_dense_key(dim, ["s_suppkey"], key_col="supplier_key", pins=pins)
 
 
 # ---------------------------------------------------------------------------
@@ -120,7 +124,8 @@ def dim_supplier(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
 
 
 def fact_orders(spark: SparkSession, sf_dir: str | None = None,
-                dim_c: DataFrame | None = None) -> DataFrame:
+                dim_c: DataFrame | None = None,
+                pins: list[DataFrame] | None = None) -> DataFrame:
     """Order fact with resolved surrogate keys and DP-noised measure.
 
     Analog of fact_visits.sql:29-66: join the staging fact to the dims on
@@ -131,10 +136,11 @@ def fact_orders(spark: SparkSession, sf_dir: str | None = None,
     ``cost_with_privacy`` (Laplace, fact_visits.sql:40-51), derive the
     partition column, and mint dense fact keys ordered by
     (o_orderdate, o_orderkey) — the reference's ORDER BY visit_date,
-    visit_id (fact_visits.sql:64).
+    visit_id (fact_visits.sql:64). ``pins`` collects the key builds'
+    persists (see :func:`dim_customer`).
     """
     o = stg_orders(spark, sf_dir)
-    c = dim_c if dim_c is not None else dim_customer(spark, sf_dir)
+    c = dim_c if dim_c is not None else dim_customer(spark, sf_dir, pins=pins)
     ckeys = c.select("customer_key", "c_custkey")
     fact = (
         o.join(ckeys, o["o_custkey"] == ckeys["c_custkey"], "inner")
@@ -142,7 +148,8 @@ def fact_orders(spark: SparkSession, sf_dir: str | None = None,
         .withColumn("cost_with_privacy", with_privacy_noise_hash("o_totalprice", "o_orderkey"))
         .withColumn("order_year", F.year("o_orderdate"))
     )
-    fact = add_dense_key(fact, ["o_orderdate", "o_orderkey"], key_col="order_key")
+    fact = add_dense_key(fact, ["o_orderdate", "o_orderkey"], key_col="order_key",
+                         pins=pins)
     # Enforced (not just conventional) PII invariant: the ETL builders
     # are LICENSED to scan c_name (staging's validity filter checks it,
     # the dim hashes it) but the fact's OUTPUT must not carry it — a

@@ -59,3 +59,15 @@ def test_rejects_unpaired_or_single_samples():
         verdict(A, A[:-1])
     with pytest.raises(ValueError):
         verdict([1.0], [0.5])
+
+
+def test_higher_is_better_mirrors_the_rule():
+    # a rate (ops/s): B higher on 9/10 pairs by more than A's IQR is a gain
+    b = _faster(9)
+    assert verdict(A, b, better="higher") == (1, "regression")
+    up = [a + 0.2 if i < 9 else a - 0.2 for i, a in enumerate(A)]
+    assert verdict(A, up, better="higher") == (9, "gain")
+    assert verdict(A, up) == (1, "regression")  # the same data as seconds
+    assert verdict(A, [a + 0.005 for a in A], better="higher") == (10, "not met")
+    with pytest.raises(ValueError):
+        verdict(A, up, better="sideways")

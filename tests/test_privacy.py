@@ -103,3 +103,55 @@ def test_privacy_audit_report_uses_full_qi_tuple(spark):
     rep = privacy_audit_report(df, ["q1", "q2"], "dx")
     assert rep["t_closeness"]["violations"] == 4  # all 4 equivalence classes
     assert not rep["t_closeness"]["passed"]
+
+
+def test_privacy_audit_report_equals_the_public_reports(spark):
+    """The one-pass audit gives exactly what the three public report
+    frames give, with null QI values, null sensitive values and a QI
+    group that lacks some sensitive categories."""
+    from healthcare_data_warehouse_spark.operators.privacy import privacy_audit_report
+
+    rows = (
+        [("A", 1, "x")] * 6 + [("A", 1, "y")] * 2          # no "z"
+        + [("A", 2, "x"), ("A", 2, None)] + [("A", 2, "z")] * 3
+        + [(None, 1, "y")] * 4 + [(None, 1, None)]          # null QI
+        + [("B", None, "z")] * 2 + [("B", None, "x")]
+        + [("B", 3, "y")] * 5 + [("B", 3, "x"), ("B", 3, "z")]
+        + [(None, None, None)]
+    )
+    df = spark.createDataFrame(rows, "q1 string, q2 int, dx string")
+    qi = ["q1", "q2"]
+    k = k_anonymity_report(df, qi, k=5).collect()
+    lv = l_diversity_report(df, qi, "dx", l=3).collect()
+    t = t_closeness_report(df, qi, "dx", t=0.2).collect()
+
+    def summary(rep, col, worst):
+        v = sum(r["is_violation"] for r in rep)
+        return len(rep), v, worst(r[col] for r in rep), v == 0
+
+    kg, kv, kmin, kok = summary(k, "group_size", min)
+    lg, lvv, lmin, lok = summary(lv, "l_distinct", min)
+    tg, tv, tmax, tok = summary(t, "tvd", max)
+    want = {
+        "k_anonymity": {"k": 5, "groups": kg, "violations": kv,
+                        "min_group_size": kmin, "passed": kok},
+        "l_diversity": {"l": 3, "groups": lg, "violations": lvv,
+                        "min_l": lmin, "passed": lok},
+        "t_closeness": {"t": 0.2, "groups": tg, "violations": tv,
+                        "max_tvd": tmax, "passed": tok},
+    }
+    assert kg == 6 and kmin == 1  # the null QI tuples are groups too
+    assert privacy_audit_report(df, qi, "dx", k=5, l=3, t=0.2) == want
+
+
+def test_t_closeness_report_builds_without_a_job(spark):
+    """The row total is in-plan, so building the frame runs no job."""
+    df = spark.createDataFrame([("A", "x"), ("B", "y")], ["seg", "dx"])
+    sc = spark.sparkContext
+    sc.setJobGroup("t-closeness-build", "build only")
+    try:
+        rep = t_closeness_report(df, "seg", "dx")
+        assert sc.statusTracker().getJobIdsForGroup("t-closeness-build") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(r["tvd"] for r in rep.collect()) == [0.5, 0.5]
