@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import AS_OF_DATE
-from ..functions.expressions import round2
+from ..functions.expressions import dsum, round2
 from ..sources.loaders import load_table
 
 SEED = 42
@@ -38,8 +38,7 @@ def build_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("visit_id"),
         F.col("o_totalprice").alias("cost"),
         F.count("*").over(w).alias("visit_count"),
-        (F.sum(F.col("o_totalprice").cast("decimal(18,4)")).over(w).cast("double")
-         / F.count("*").over(w)).alias("avg_cost"),
+        (dsum("o_totalprice", over=w) / F.count("*").over(w)).alias("avg_cost"),
         F.datediff(F.lit(AS_OF_DATE).cast("date"), cur).alias("days_since_visit"),
         F.when(F.datediff(nxt, cur) <= 30, 1).otherwise(0).cast("int").alias("readmitted_30d"),
     )

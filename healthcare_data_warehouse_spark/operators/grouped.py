@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.expressions import dsum
+
 X_EPOCH = "1970-01-01"
 
 
@@ -27,9 +29,9 @@ def trend_slope_native(df: DataFrame, key: str, date_col: str, y_col: str) -> Da
     """Per-group OLS slope of y over time, closed form:
     slope = (n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²).
 
-    All sums accumulate exactly (long / DECIMAL; scale 2 keeps the
-    unscaled value under 2^53 so the decimal->double cast is exact in any
-    engine) before one deterministic
+    All sums accumulate exactly (long / DECIMAL / ``dsum``; scale 2 keeps
+    the unscaled Σxy under 2^53 so its decimal->double cast is exact in
+    any engine) before one deterministic
     double evaluation — bit-reproducible across partitionings and
     replayable by the DuckDB oracle. Degenerate groups (single visit or
     zero x-variance) yield NULL."""
@@ -38,13 +40,13 @@ def trend_slope_native(df: DataFrame, key: str, date_col: str, y_col: str) -> Da
     g = df.groupBy(key).agg(
         F.count("*").alias("n"),
         F.sum(x.cast("long")).alias("sx"),
-        F.sum(y.cast("decimal(18,4)")).alias("sy"),
+        dsum(y_col).alias("sy"),
         F.sum((x * y).cast("decimal(28,2)")).alias("sxy"),
         F.sum((x * x).cast("long")).alias("sxx"),
     )
     n = F.col("n").cast("double")
     sx = F.col("sx").cast("double")
-    sy = F.col("sy").cast("double")
+    sy = F.col("sy")
     sxy = F.col("sxy").cast("double")
     sxx = F.col("sxx").cast("double")
     denom = n * sxx - sx * sx

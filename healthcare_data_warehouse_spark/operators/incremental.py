@@ -24,14 +24,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_DEC = "decimal(18,4)"
+from ..functions.expressions import dec_sum
 
 
 def partial_agg(df: DataFrame, keys: list[str], measure: str) -> DataFrame:
     """Aggregate one load into its mergeable per-key state."""
     return df.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("cnt"),
-        F.sum(F.col(measure).cast(_DEC)).alias("sum_dec"),
+        dec_sum(measure).alias("sum_dec"),
         F.min(measure).alias("min_v"),
         F.max(measure).alias("max_v"),
     )

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.expressions import dec_sum, dsum
+
 _SALT = "__salt"
 
 
@@ -251,7 +253,7 @@ def explode_salted_agg(df: DataFrame, key: str, measure: str, salt_buckets: int 
     salted = df.withColumn(_SALT, (F.rand(seed=7) * salt_buckets).cast("int"))
     partial = salted.groupBy(key, _SALT).agg(
         F.count("*").alias("__cnt"),
-        F.sum(F.col(measure).cast("decimal(18,4)")).alias("__sum"),
+        dec_sum(measure).alias("__sum"),
     )
     return partial.groupBy(key).agg(
         F.sum("__cnt").alias("cnt"),
@@ -384,6 +386,5 @@ def auto_agg(df: DataFrame, key: str, measure: str,
     decisions.record(**{f"auto_agg[{key}]": "plain_partial_agg"})
     return df.groupBy(key).agg(
         F.count("*").alias("cnt"),
-        F.sum(F.col(measure).cast("decimal(18,4)"))
-        .cast("double").alias("total"),
+        dsum(measure).alias("total"),
     )

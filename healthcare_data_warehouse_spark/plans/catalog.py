@@ -34,6 +34,7 @@ from ..functions.expressions import (
     anonymize,
     balance_bucket,
     davg,
+    dec_sum,
     dsum,
     round2,
     ohash52,
@@ -290,6 +291,10 @@ def _oavg(x: str) -> str:
     return f"{_osum(x)} / count({x})"
 
 
+# Line revenue, as the SQL text ``dsum``/``dec_sum`` take.
+_REVENUE = "l_extendedprice * (1 - l_discount)"
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
@@ -481,13 +486,11 @@ def join_3way(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("c_mktsegment")
             .agg(
                 F.count("*").alias("order_line_count"),
-                dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
+                dsum(_REVENUE).alias("revenue"),
             )
         )
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(18,4)")
     per_order = li.groupBy("l_orderkey").agg(
-        F.count("*").alias("__cnt"), F.sum(rev).alias("__rev"))
+        F.count("*").alias("__cnt"), dec_sum(_REVENUE).alias("__rev"))
     per_cust = (
         per_order.join(o, per_order["l_orderkey"] == o["o_orderkey"])
         .groupBy("o_custkey")
@@ -551,12 +554,10 @@ def _join_3way_bucketed_plan(spark: SparkSession, sf_dir: str,
     shared by join_3way_bucketed and join_3way's auto-route."""
     li, o = spark.table(li_t), spark.table(ord_t)
     c = _t(spark, sf_dir, "customer")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(18,4)")
     per_cust = (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .groupBy("o_custkey")
-        .agg(F.count("*").alias("__cnt"), F.sum(rev).alias("__rev"))
+        .agg(F.count("*").alias("__cnt"), dec_sum(_REVENUE).alias("__rev"))
     )
     return (
         per_cust.join(c, per_cust["o_custkey"] == c["c_custkey"])
@@ -921,10 +922,8 @@ def window_patient_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderkey",
         F.count("*").over(w).alias("visit_count"),
-        round2(
-            F.sum(F.col("o_totalprice").cast("decimal(18,4)")).over(w).cast("double")
-            / F.count("*").over(w)
-        ).alias("avg_cost"),
+        round2(dsum("o_totalprice", over=w) / F.count("*").over(w))
+        .alias("avg_cost"),
         F.min(F.col("o_orderdate").cast("date")).over(w).alias("first_visit"),
         F.max(F.col("o_orderdate").cast("date")).over(w).alias("last_visit"),
     )
@@ -1464,7 +1463,7 @@ def privacy_noise_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return noised.agg(
         round2(davg("o_totalprice")).alias("avg_cost"),
         round2(davg("noisy")).alias("avg_cost_with_privacy"),
-        round2(davg(F.abs(F.col("noisy") - F.col("o_totalprice")))).alias("avg_abs_noise"),
+        round2(davg("abs(noisy - o_totalprice)")).alias("avg_abs_noise"),
     )
 
 
@@ -2914,8 +2913,7 @@ def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy("day").rowsBetween(-6, Window.currentRow)
     return d.select(
         "day",
-        (F.sum(F.col("daily").cast("decimal(18,4)")).over(w).cast("double")
-         / F.count("*").over(w)).alias("ma7"),
+        (dsum("daily", over=w) / F.count("*").over(w)).alias("ma7"),
     )
 
 
@@ -2945,8 +2943,7 @@ def window_range_30d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return o2.select(
         "o_custkey", "o_orderkey",
-        F.sum(F.col("o_totalprice").cast("decimal(18,4)")).over(w).cast("double")
-        .alias("trailing_30d_cost"),
+        dsum("o_totalprice", over=w).alias("trailing_30d_cost"),
     )
 
 
@@ -5525,7 +5522,7 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment", "yr",
     ).agg(
         F.count(F.lit(1)).alias("n_visits"),
-        dsum(F.col("o_totalprice")).alias("total_cost"),
+        dsum("o_totalprice").alias("total_cost"),
     )
     return g.select(
         F.coalesce("c_mktsegment", F.lit("ALL")).alias("seg"),
@@ -5583,8 +5580,7 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return q.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vals"),
         F.max(F.abs(F.col("v") - recon)).alias("max_abs_err"),
-        (F.sum(F.col("code").cast("decimal(18,4)")).cast("double")
-         / F.count(F.lit(1))).alias("avg_code"),
+        (dsum("code") / F.count(F.lit(1))).alias("avg_code"),
     )
 
 
@@ -6233,12 +6229,8 @@ def part_qty_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("p_partkey")
     j = li.join(p, li.l_partkey == p.p_partkey)
     w = Window.partitionBy("l_partkey")
-    avg_qty = (
-        F.sum(F.col("l_quantity").cast("decimal(18,4)")).over(w).cast("double")
-        / F.count("l_quantity").over(w)
-    )
     return (
-        j.withColumn("avg_qty", avg_qty)
+        j.withColumn("avg_qty", davg("l_quantity", over=w))
         .filter(F.col("l_quantity") * F.lit(5.0) < F.col("avg_qty"))
         .agg((dsum("l_extendedprice") / F.lit(7.0)).alias("avg_yearly"))
     )
@@ -6448,11 +6440,9 @@ def market_share_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("sn.n_name") == "NATION_3").alias("is_target"),
         )
     )
-    target_vol = F.when(F.col("is_target"), F.col("volume")).otherwise(F.lit(0.0))
     return vol.groupBy("o_year").agg(
-        (F.sum(target_vol.cast("decimal(18,4)")).cast("double")
-         / F.sum(F.col("volume").cast("decimal(18,4)")).cast("double")
-         ).alias("mkt_share")
+        (dsum("CASE WHEN is_target THEN volume ELSE 0.0D END")
+         / dsum("volume")).alias("mkt_share")
     )
 
 
@@ -6957,7 +6947,7 @@ def supplier_value_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(s, li.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .groupBy("s_suppkey", "s_name")
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+        .agg(dsum(_REVENUE)
              .alias("supp_value"))
     )
     tot = g.agg(dsum("supp_value").alias("tot"))
@@ -6997,7 +6987,7 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < "1996-04-01"))
     rev = (
         li.groupBy(F.col("l_suppkey").alias("s_suppkey"))
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+        .agg(dsum(_REVENUE)
              .alias("total_revenue"))
     )
     mx = rev.agg(F.max("total_revenue").alias("mx"))
@@ -7044,7 +7034,7 @@ def promo_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
            & F.col("l_quantity").between(20, 30))
     )
     return li.join(p, cond).agg(
-        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+        dsum(_REVENUE)
         .alias("revenue"),
         F.count(F.lit(1)).alias("n_lines"),
     )
@@ -7092,7 +7082,7 @@ def excess_qty_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = (
         li.join(p, li.l_partkey == p.p_partkey)
         .groupBy("l_partkey", "l_suppkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,4)")).alias("__dq"))
+        .agg(dec_sum("l_quantity").alias("__dq"))
     )
     w = Window.partitionBy("l_partkey")
     ps = ps.select(
@@ -7291,7 +7281,7 @@ def regional_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                      & (s_red.s_nationkey == c_red.c_nationkey))
         .join(F.broadcast(n), c_red.c_nationkey == n.n_nationkey)
         .groupBy("n_name")
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+        .agg(dsum(_REVENUE)
              .alias("revenue"))
     )
 
@@ -7378,7 +7368,7 @@ def bilateral_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_extendedprice", "l_discount",
         )
         .groupBy("supp_nation", "cust_nation", "l_year")
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+        .agg(dsum(_REVENUE)
              .alias("volume"))
     )
 
@@ -7425,7 +7415,7 @@ def returns_revenue_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+            dsum(_REVENUE)
             .alias("revenue"),
             F.count(F.lit(1)).alias("n_returned_lines"),
         )
@@ -7858,7 +7848,7 @@ def unshipped_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate").cast("date").alias("order_date"),
             "o_orderpriority",
         )
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+        .agg(dsum(_REVENUE)
              .alias("revenue"))
         .select("l_orderkey", "revenue", "order_date", "o_orderpriority")
         .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
@@ -7899,10 +7889,7 @@ def nation_profit_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     n = _t(spark, sf_dir, "nation")
-    profit = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - F.col("l_quantity") * F.col("p_retailprice")
-    )
+    profit = f"{_REVENUE} - l_quantity * p_retailprice"
     return (
         li.join(p, li.l_partkey == p.p_partkey)
         .join(s, li.l_suppkey == s.s_suppkey)
@@ -7975,11 +7962,10 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < "1996-10-01")
     ).select("l_partkey", "l_extendedprice", "l_discount")
     p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
+    promo = f"CASE WHEN p_type = 'PROMO' THEN {_REVENUE} ELSE 0.0D END"
     return (
         li.join(p, li.l_partkey == p.p_partkey)
-        .agg((F.lit(100.0) * dsum(promo) / dsum(rev)).alias("promo_pct"))
+        .agg((F.lit(100.0) * dsum(promo) / dsum(_REVENUE)).alias("promo_pct"))
     )
 
 
@@ -8466,12 +8452,10 @@ def gini_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     num = F.sum(((2 * F.col("i") - F.col("n") - 1) * F.col("c_acctbal"))
                 .cast("decimal(24,4)")).cast("double")
-    den = F.col("n") * F.sum(F.col("c_acctbal").cast("decimal(18,4)")).cast("double")
     return (
         r.groupBy("c_mktsegment", "n")
         .agg(num.alias("__num"),
-             F.sum(F.col("c_acctbal").cast("decimal(18,4)"))
-             .cast("double").alias("__den"),
+             dsum("c_acctbal").alias("__den"),
              F.max("n").alias("n_accounts"))
         .select(
             "c_mktsegment",
@@ -8936,7 +8920,7 @@ def ab_test_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n"),
             dsum("o_totalprice").alias("s"),
-            dsum(F.col("o_totalprice") * F.col("o_totalprice")).alias("sq"),
+            dsum("o_totalprice * o_totalprice").alias("sq"),
         )
     )
     m = g.select(
@@ -9065,10 +9049,8 @@ def abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     wt = Window.partitionBy("c_nationkey")
     w = r.select(
         "c_nationkey",
-        F.sum(F.col("rev").cast("decimal(18,4)")).over(wc)
-        .cast("double").alias("cum_rev"),
-        F.sum(F.col("rev").cast("decimal(18,4)")).over(wt)
-        .cast("double").alias("tot_rev"),
+        dsum("rev", over=wc).alias("cum_rev"),
+        dsum("rev", over=wt).alias("tot_rev"),
     )
     cls = w.select(
         "c_nationkey",
@@ -9211,8 +9193,7 @@ def cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return m.select(
         "cohort_month", "age_months", "rev",
-        F.sum(F.col("rev").cast("decimal(18,4)")).over(w)
-        .cast("double").alias("cum_ltv"),
+        dsum("rev", over=w).alias("cum_ltv"),
     )
 
 
@@ -9260,11 +9241,11 @@ def forecast_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cur.rev").alias("rev"),
         F.col("prev.rev").alias("forecast"),
     )
-    err = F.abs(F.col("rev") - F.col("forecast"))
+    err = "abs(rev - forecast)"
     return j.groupBy("yr").agg(
         F.count(F.lit(1)).alias("n_months"),
         (dsum(err) / F.count(F.lit(1))).alias("mae"),
-        (dsum(err) / dsum(F.abs(F.col("rev")))).alias("wape"),
+        (dsum(err) / dsum("abs(rev)")).alias("wape"),
     )
 
 
@@ -9477,13 +9458,13 @@ def agg_retractable_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = (
         o.groupBy("o_orderstatus")
         .agg(F.count(F.lit(1)).alias("n"),
-             F.sum(F.col("o_totalprice").cast("decimal(18,4)")).alias("s"))
+             dec_sum("o_totalprice").alias("s"))
     )
     deletes = (
         o.filter(F.col("o_orderkey") % 10 == 3)
         .groupBy("o_orderstatus")
         .agg((-F.count(F.lit(1))).alias("n"),
-             (-F.sum(F.col("o_totalprice").cast("decimal(18,4)"))).alias("s"))
+             (-dec_sum("o_totalprice")).alias("s"))
     )
     merged = (
         base.unionAll(deletes)

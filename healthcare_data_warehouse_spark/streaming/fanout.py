@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.expressions import dsum
+from ..functions.expressions import dec_sum, dsum
 
 HIGH_VALUE_ALERT = 500.0
 
@@ -70,7 +70,7 @@ def run_event_fanout(
             (
                 b.groupBy("user_id", "event_type")
                 .agg(F.count("*").alias("cnt"),
-                     F.sum(F.col("value").cast("decimal(18,4)")).alias("value_sum"))
+                     dec_sum("value").alias("value_sum"))
                 .write.mode("overwrite")
                 .parquet(f"{agg}/batch_id={batch_id}")
             )

@@ -83,7 +83,9 @@ def batch_user_profiles(events: DataFrame) -> DataFrame:
     micro-batch boundaries, so parity covers the batch-invariant columns)."""
     from pyspark.sql import functions as F
 
+    from ..functions.expressions import dsum
+
     return events.groupBy("user_id").agg(
         F.count("*").alias("total_events"),
-        F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("total_value"),
+        dsum("value").alias("total_value"),
     )

@@ -2,7 +2,9 @@
 
 The engine's oracle story rests on three claims:
 1. ``dsum``/``davg`` are invariant under partitioning (decimal
-   accumulation is exact, so combine order can't matter);
+   accumulation is exact, so combine order can't matter), and
+   ``dec_sum``/``dsum``/``davg`` return the bits of the decimal(18,4) sum
+   they replace, grouped and over a window;
 2. ``round2`` matches DuckDB's binary-double rounding bit-for-bit;
 3. dense surrogate keys equal ROW_NUMBER regardless of partition count.
 
@@ -18,7 +20,8 @@ import pyspark.sql.functions as F
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from healthcare_data_warehouse_spark.functions.expressions import dsum, round2
+from healthcare_data_warehouse_spark.functions.expressions import (
+    davg, dec_sum, dsum, round2)
 
 DOUBLES = st.floats(min_value=-1e6, max_value=1e6, allow_nan=False, allow_infinity=False)
 
@@ -31,6 +34,97 @@ def test_dsum_invariant_under_partitioning(spark, values, parts):
     a = df.repartition(parts).agg(dsum("x").alias("s")).collect()[0]["s"]
     b = df.coalesce(1).agg(dsum("x").alias("s")).collect()[0]["s"]
     assert a == b  # bit equality, not approx
+
+
+# Inputs where a double shortcut to CAST(x AS DECIMAL(18,4)) goes wrong:
+# exact 5th-decimal ties (HALF_UP on the shortest decimal string, not on
+# the binary value), values next to the ±1e14 overflow, the |x·1e4| ≥ 1e15
+# exact path, subnormals, signed zeros and nulls.
+ADVERSARIAL = [
+    0.00005, -0.00005, 0.00015, 1.00005, -2.00015, 12345.67895, 0.12345,
+    4201.31505, 99999999999999.98, -99999999999999.98, 99999999999999.9,
+    99999999999.99995, -12345678901.23455, 1e11 + 0.00005, 5e-324, -5e-324,
+    2.2250738585072014e-308, 0.0, -0.0, None,
+]
+SUM_INPUTS = st.one_of(
+    st.floats(min_value=-1e13, max_value=1e13, allow_nan=False,
+              allow_infinity=False),
+    st.integers(-2 * 10**9, 2 * 10**9).map(lambda k: k / 20000),
+    st.sampled_from(ADVERSARIAL),
+)
+
+
+def _bits(v):
+    import struct
+    return struct.pack(">d", v) if isinstance(v, float) else v
+
+
+def _old_sum(x, w=None):
+    s = F.sum(F.col(x).cast("decimal(18,4)"))
+    return s.over(w) if w is not None else s
+
+
+def _sum_forms(w=None):
+    """(reference, kernel) column pairs: decimal, double and average."""
+    old = _old_sum("x", w)
+    n = F.count("x").over(w) if w is not None else F.count("x")
+    return [(old, dec_sum("x", over=w)),
+            (old.cast("double"), dsum("x", over=w)),
+            (old.cast("double") / n, davg("x", over=w))]
+
+
+@settings(max_examples=5, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(st.lists(SUM_INPUTS, min_size=1, max_size=200), st.integers(1, 5))
+def test_dec_sum_bit_identical_to_decimal_sum(spark, values, parts):
+    """The int64-limb kernel returns the decimal(28,4) and double bits of
+    ``sum(CAST(x AS DECIMAL(18,4)))``, grouped and ``.over(w)`` (a running
+    frame and a whole-partition frame), on any partitioning."""
+    from pyspark.sql import Window
+
+    rows = [(i % 3, i, v) for i, v in enumerate(values + ADVERSARIAL)]
+    df = spark.createDataFrame(rows, "g int, i long, x double").repartition(parts)
+    cols = [c.alias(f"c{j}") for j, pair in enumerate(_sum_forms())
+            for c in pair]
+    got = df.groupBy("g").agg(*cols).collect()
+    running = (Window.partitionBy("g").orderBy("i")
+               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    for w in (running, Window.partitionBy("g")):
+        cols = [c.alias(f"c{j}") for j, pair in enumerate(_sum_forms(w))
+                for c in pair]
+        got += df.select("g", *cols).collect()
+    for r in got:
+        for j in range(0, 6, 2):
+            assert _bits(r[j + 1]) == _bits(r[j + 2]), (r, j)
+
+
+def test_dec_sum_error_and_null_parity_under_ansi(spark):
+    """|x| ≥ 1e14 overflows decimal(18,4): the kernel raises the same
+    error class as the cast it replaces. NaN/±Inf cast to NULL, so both
+    skip them. (The window forms are the decimal sum itself.)"""
+    from pyspark.errors import PySparkException
+
+    def outcome(col):
+        try:
+            return [tuple(r) for r in df.agg(col.alias("s")).collect()]
+        except PySparkException as e:
+            return e.getCondition()
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        for v in (1e14, -1e14):
+            df = spark.createDataFrame([(v,), (1.5,)], "x double")
+            want = outcome(_old_sum("x"))
+            assert str(want).startswith("NUMERIC_VALUE_OUT_OF_RANGE"), want
+            assert outcome(dec_sum("x")) == want
+        for v in (float("nan"), float("inf"), float("-inf")):
+            df = spark.createDataFrame([(v,), (1.5,)], "x double")
+            for old, new in _sum_forms():
+                assert outcome(new) == outcome(old), v
+            assert outcome(davg("x")) == [(0.75,)]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 @settings(max_examples=5, deadline=None,

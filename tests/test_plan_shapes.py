@@ -642,3 +642,26 @@ def test_profile_has_no_sorted_aggregate_phase(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     import re
     assert not re.search(r"\bSort \[", plan), plan[:2000]
+
+
+def test_join_3way_sums_revenue_in_long_limbs(spark, monkeypatch):
+    """The direct regime's revenue sum runs on ``dec_sum``'s int64 limbs:
+    no partial aggregate sums a ``cast(... as decimal(18,4))`` (a
+    ``BigDecimal`` per lineitem row), and every partial sum buffer is a
+    bigint (a decimal sum buffer would carry an ``isEmpty`` flag)."""
+    import re
+
+    from healthcare_data_warehouse_spark import config, decisions
+
+    monkeypatch.setattr(config, "BUCKETED_AUTO_ROUTE", False)
+    decisions.drain()
+    plan = _plan(spark, "join_3way")
+    assert decisions.drain()["join_3way"]["plan"] == "direct"
+    assert not re.search(
+        r"partial_sum\(cast\([^\]]*? as decimal\(18,4\)\)\)", plan)
+    partial = next(line for line in plan.splitlines()
+                   if "partial_sum(" in line)
+    buffers = re.search(r"output=\[([^\]]*)\]", partial).group(1).split(", ")
+    sums = [b for b in buffers if b.startswith("sum#")]
+    assert len(sums) == 3 and all(b.endswith("L") for b in sums), buffers
+    assert "isEmpty" not in partial
