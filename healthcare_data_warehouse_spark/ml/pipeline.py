@@ -27,7 +27,9 @@ SEED = 42
 
 def build_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-visit ML features (Q15 analog, ml_pipeline.py:52-73): window
-    aggregates per customer + the 30-day-readmission label from LEAD."""
+    aggregates per customer + the 30-day-readmission label from LEAD.
+    The window count is selected once and divided above the window (one
+    window function per reference: naming it twice counts twice)."""
     o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey")
     wo = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -38,9 +40,13 @@ def build_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("visit_id"),
         F.col("o_totalprice").alias("cost"),
         F.count("*").over(w).alias("visit_count"),
-        (dsum("o_totalprice", over=w) / F.count("*").over(w)).alias("avg_cost"),
+        dsum("o_totalprice", over=w).alias("__sum"),
         F.datediff(F.lit(AS_OF_DATE).cast("date"), cur).alias("days_since_visit"),
         F.when(F.datediff(nxt, cur) <= 30, 1).otherwise(0).cast("int").alias("readmitted_30d"),
+    ).select(
+        "customer_id", "visit_id", "cost", "visit_count",
+        (F.col("__sum") / F.col("visit_count")).alias("avg_cost"),
+        "days_since_visit", "readmitted_30d",
     )
 
 

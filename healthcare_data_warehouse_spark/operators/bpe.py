@@ -19,8 +19,8 @@ Shape, and why it scales:
   argmax (count desc, then lexicographic pair — a DETERMINISTIC
   tie-break, so the learned merge table is reproducible run-to-run and
   partitioning-invariant), then rewrite each word's symbol array with the
-  merged pair. The rewrite is a per-row sequential fold (``F.aggregate``)
-  — BPE's left-to-right merge order — entirely JVM-side.
+  merged pair. The rewrite is a per-row sequential fold (SQL
+  ``aggregate``) — BPE's left-to-right merge order — entirely JVM-side.
 - The loop re-plans per round, so the vocabulary DataFrame is
   ``localCheckpoint``-ed every few rounds to keep the lineage flat
   (the same pattern as the connected-components loop in graph.py).
@@ -34,38 +34,47 @@ composes (pass a sampled df).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .text import tokens
 
 
+# SQL: the column ``word`` as its character-symbol array with the
+# conventional </w> end-of-word marker appended
+_WORD_SYMS = "concat(split(word, ''), array('</w>'))"
+
+
 def _word_types(df: DataFrame, text_col: str) -> DataFrame:
-    """(word, count) vocabulary; each word becomes its character-symbol
-    array with the conventional </w> end-of-word marker appended."""
+    """(word, count) vocabulary; each word becomes its symbol array."""
     words = df.select(F.explode(tokens(F.col(text_col))).alias("word")).filter(
         F.col("word") != ""
     )
     vocab = words.groupBy("word").agg(F.count("*").alias("cnt"))
-    syms = F.concat(F.split(F.col("word"), ""), F.array(F.lit("</w>")))
-    return vocab.select(F.col("cnt"), syms.alias("syms"))
+    return vocab.select(F.col("cnt"), F.expr(_WORD_SYMS).alias("syms"))
 
 
-def _adjacent_pairs(syms: Column) -> Column:
-    """array of "a b"-keyed adjacent symbol pairs of ``syms``."""
-    n = F.size(syms)
-    idx = F.sequence(F.lit(1), n - 1)
-    return F.when(n < 2, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(" ", F.element_at(syms, i), F.element_at(syms, i + 1)),
-        )
-    )
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal: backslash and quote escaped,
+    and ``$`` written as ``\\u0024`` so a ``${...}`` token is not taken
+    for a variable reference (the parser substitutes those in the raw
+    text before it reads the literal)."""
+    body = s.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+    return f"'{body}'"
 
 
-def _apply_merge(syms: Column, left: str, right: str) -> Column:
-    """Left-to-right single-pass merge of adjacent (left, right) into
-    left||right — the BPE rewrite — as a sequential fold.
+def _adjacent_pairs(syms: str) -> str:
+    """SQL: array of "a b"-keyed adjacent symbol pairs of the array
+    expression ``syms``."""
+    return (f"CASE WHEN size({syms}) < 2 THEN CAST(array() AS ARRAY<STRING>) "
+            f"ELSE transform(sequence(1, size({syms}) - 1), i -> concat_ws(' ', "
+            f"element_at({syms}, i), element_at({syms}, i + 1))) END")
+
+
+def _merge_fold(syms: str, left: str, right: str) -> str:
+    """SQL: left-to-right single-pass merge of adjacent (left, right) in
+    the array expression ``syms`` into left||right — the BPE rewrite — as
+    a sequential fold.
 
     The accumulator is the output array; at each step, if the output's
     last element is ``left`` and the incoming symbol is ``right``, the
@@ -73,20 +82,18 @@ def _apply_merge(syms: Column, left: str, right: str) -> Column:
     ``left+right`` is a NEW symbol, a just-merged element never
     re-triggers as ``left`` unless left==left+right, impossible for
     non-empty right — giving the same non-overlapping semantics as the
-    reference algorithm's regex replace)."""
-    merged = F.lit(left + right)
+    reference algorithm's regex replace).
 
-    def step(acc: Column, s: Column) -> Column:
-        last = F.element_at(acc, -1)
-        return (
-            F.when(
-                (F.size(acc) > 0) & (last == F.lit(left)) & (s == F.lit(right)),
-                F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(merged)),
-            )
-            .otherwise(F.concat(acc, F.array(s)))
-        )
-
-    return F.aggregate(syms, F.array().cast("array<string>"), step)
+    The folds are SQL text, parsed by one ``F.expr`` per call site: built
+    from PySpark Column operations, ``bpe_segment``'s eight merge folds
+    and its stats fold took 1,935 py4j round trips per plan build (1,055
+    without PySpark's call-site capture, see ``session.py``); as text the
+    whole build takes about 130."""
+    lq, rq, mq = _sql_str(left), _sql_str(right), _sql_str(left + right)
+    return (f"aggregate({syms}, CAST(array() AS ARRAY<STRING>), (acc, s) -> "
+            f"CASE WHEN size(acc) > 0 AND element_at(acc, -1) = {lq} AND s = {rq} "
+            f"THEN concat(slice(acc, 1, size(acc) - 1), array({mq})) "
+            f"ELSE concat(acc, array(s)) END)")
 
 
 def learn_bpe_merges(df: DataFrame, text_col: str = "text",
@@ -99,7 +106,7 @@ def learn_bpe_merges(df: DataFrame, text_col: str = "text",
     out: list[tuple[int, str, str, int]] = []
     for rank in range(num_merges):
         best = (
-            vocab.select(F.col("cnt"), F.explode(_adjacent_pairs(F.col("syms"))).alias("pair"))
+            vocab.select(F.col("cnt"), F.explode(F.expr(_adjacent_pairs("syms"))).alias("pair"))
             .groupBy("pair")
             .agg(F.sum("cnt").alias("n"))
             .orderBy(F.desc("n"), F.asc("pair"))
@@ -112,7 +119,7 @@ def learn_bpe_merges(df: DataFrame, text_col: str = "text",
         left, right = pair.split(" ", 1)
         out.append((rank, left, right, n))
         vocab = vocab.select(
-            F.col("cnt"), _apply_merge(F.col("syms"), left, right).alias("syms")
+            F.col("cnt"), F.expr(_merge_fold("syms", left, right)).alias("syms")
         )
         if (rank + 1) % checkpoint_every == 0:
             vocab = vocab.localCheckpoint(eager=True)
@@ -135,7 +142,7 @@ def bpe_segment(df: DataFrame, merges: list[tuple[int, str, str, int]],
     subword-token count and mean subword length — the 'how well does this
     vocab compress my corpus' readout used to size tokenizer vocabs.
 
-    The merge folds (``F.aggregate`` higher-order functions — interpreted
+    The merge folds (``aggregate`` higher-order functions — interpreted
     per element, not codegen'd) run ONCE per word TYPE, never per
     occurrence: the corpus collapses to its distinct-word vocabulary
     (Heaps' law: ~O(corpus^0.5) types), the rank-ordered folds rewrite
@@ -161,16 +168,12 @@ def bpe_segment(df: DataFrame, merges: list[tuple[int, str, str, int]],
     word = F.explode(tokens(F.col(text_col)))
     per_word = spread(df, id_col).select(
         F.col(id_col), word.alias("word")).filter(F.col("word") != "")
-    syms = F.concat(F.split(F.col("word"), ""), F.array(F.lit("</w>")))
-    col = syms
+    syms = _WORD_SYMS
     for _, left, right, _ in sorted(merges):
-        col = _apply_merge(col, left, right)
-    zero = F.struct(F.lit(0).cast("long").alias("n"),
-                    F.lit(0).cast("long").alias("c"))
-    stats = F.aggregate(
-        col, zero,
-        lambda a, s: F.struct((a["n"] + 1).alias("n"),
-                              (a["c"] + F.length(s)).alias("c")))
+        syms = _merge_fold(syms, left, right)
+    stats = F.expr(
+        f"aggregate({syms}, struct(CAST(0 AS BIGINT) AS n, CAST(0 AS BIGINT) AS c), "
+        "(a, s) -> struct(a.n + 1 AS n, a.c + length(s) AS c))")
     wstats = (
         df.select(F.explode(tokens(F.col(text_col))).alias("word"))
         .filter(F.col("word") != "")

@@ -915,17 +915,26 @@ def window_rownumber_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_patient_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3: per-patient analytic aggregates on every row
-    (ml_pipeline.py:65-68). Partitioned window — parallel by key."""
+    (ml_pipeline.py:65-68). Partitioned window — parallel by key. The
+    count is selected once and divided above the window: Spark plans one
+    window function per reference, so ``count(*) over w`` named twice is
+    counted twice."""
     o = _t(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey")
     return o.select(
         "o_custkey",
         "o_orderkey",
         F.count("*").over(w).alias("visit_count"),
-        round2(dsum("o_totalprice", over=w) / F.count("*").over(w))
-        .alias("avg_cost"),
+        dsum("o_totalprice", over=w).alias("__sum"),
         F.min(F.col("o_orderdate").cast("date")).over(w).alias("first_visit"),
         F.max(F.col("o_orderdate").cast("date")).over(w).alias("last_visit"),
+    ).select(
+        "o_custkey",
+        "o_orderkey",
+        "visit_count",
+        round2(F.col("__sum") / F.col("visit_count")).alias("avg_cost"),
+        "first_visit",
+        "last_visit",
     )
 
 
@@ -4363,7 +4372,7 @@ def _bpe_oracle(rounds: int = 8) -> str:
     ``US l US US r US`` with ``US lr US`` — the DOUBLE separator keeps
     adjacent matches independent ([a,a,a,a] → [aa,aa], not [aa,a,a]),
     which is exactly the left-to-right fold semantics of
-    ``operators.bpe._apply_merge``. MATERIALIZED pins each round to run
+    ``operators.bpe._merge_fold``. MATERIALIZED pins each round to run
     once (the chain is referenced twice per level)."""
     union = " UNION ALL ".join(
         f'SELECT CAST({r - 1} AS INTEGER) AS rank, l AS "left", r2 AS "right",'

@@ -6,6 +6,8 @@ medians to differ by more than A's interquartile range."""
 from __future__ import annotations
 
 import os
+import shutil
+import subprocess
 import sys
 
 import pytest
@@ -13,6 +15,7 @@ import pytest
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "tools"))
 
+import ab  # noqa: E402
 from ab import verdict  # noqa: E402
 
 # parent runs: median 1.005, IQR 0.02
@@ -71,3 +74,35 @@ def test_higher_is_better_mirrors_the_rule():
     assert verdict(A, [a + 0.005 for a in A], better="higher") == (10, "not met")
     with pytest.raises(ValueError):
         verdict(A, up, better="sideways")
+
+
+def _git(repo, *args):
+    return subprocess.run(["git", "-C", str(repo), *args], check=True,
+                          capture_output=True, text=True).stdout.strip()
+
+
+def test_add_worktree_recovers_from_a_killed_run(tmp_path, monkeypatch):
+    # a killed run skips its cleanup: its worktrees stay registered, one
+    # with its directory still there and one whose directory is gone
+    repo = tmp_path / "repo"
+    repo.mkdir()
+    _git(repo, "init", "-q")
+    (repo / "f").write_text("x\n")
+    _git(repo, "add", "f")
+    _git(repo, "-c", "user.name=t", "-c", "user.email=t@t", "commit", "-qm", "c")
+    sha = _git(repo, "rev-parse", "HEAD")
+    work = tmp_path / "work"
+    trees = [str(work / "A"), str(work / "B")]
+    for tree in trees:
+        _git(repo, "worktree", "add", "--detach", tree, sha)
+    shutil.rmtree(trees[1])
+    with pytest.raises(subprocess.CalledProcessError):
+        _git(repo, "worktree", "add", "--detach", trees[0], sha)
+
+    monkeypatch.setattr(ab, "REPO", str(repo))
+    for tree in trees:
+        ab.add_worktree(tree, sha)
+        assert (work / os.path.basename(tree) / "f").read_text() == "x\n"
+    listed = _git(repo, "worktree", "list", "--porcelain")
+    assert sorted(line.split(" ", 1)[1] for line in listed.splitlines()
+                  if line.startswith("worktree ")) == sorted([str(repo), *trees])

@@ -665,3 +665,18 @@ def test_join_3way_sums_revenue_in_long_limbs(spark, monkeypatch):
     sums = [b for b in buffers if b.startswith("sum#")]
     assert len(sums) == 3 and all(b.endswith("L") for b in sums), buffers
     assert "isEmpty" not in partial
+
+
+def test_window_count_computed_once_per_spec(spark):
+    """Spark plans one window function per reference to a window
+    expression (no dedupe), so a builder that names ``count(*) over w``
+    twice counts every partition twice. The W3 features and the ML
+    feature query select the count once and divide above the window."""
+    import re
+    from collections import Counter
+
+    for name in ("window_patient_features", "ml_features"):
+        plan = _plan(spark, name)
+        specs = Counter(re.findall(
+            r"count\(1\) (windowspecdefinition\(.*?specifiedwindowframe)", plan))
+        assert specs and set(specs.values()) == {1}, (name, specs)

@@ -27,7 +27,8 @@ win at least 9/10 of all pairs run (ties count for neither side) and the
 medians to differ by more than A's interquartile range; "regression" is
 the same rule with the arms swapped; anything else is "not met". The
 JSON result line(s) of every run are kept in the work dir; the worktrees
-are removed on exit.
+are removed on exit, and a rerun with the ``--workdir`` of a killed run
+first clears the worktrees that run left registered.
 """
 
 from __future__ import annotations
@@ -82,6 +83,22 @@ def verdict(a: list[float], b: list[float],
 def _git(*args: str) -> str:
     return subprocess.run(["git", "-C", REPO, *args], check=True,
                           capture_output=True, text=True).stdout.strip()
+
+
+def _remove_worktree(tree: str) -> None:
+    subprocess.run(["git", "-C", REPO, "worktree", "remove", "--force", tree],
+                   capture_output=True)
+
+
+def add_worktree(tree: str, sha: str) -> None:
+    """Check ``sha`` out, detached, at ``tree``. A killed run never
+    reaches its cleanup and leaves its worktrees registered, and ``git
+    worktree add`` then refuses the same path (exit 128): prune the
+    registrations whose directory is gone and force-remove any worktree
+    still at ``tree`` first."""
+    _git("worktree", "prune")
+    _remove_worktree(tree)
+    _git("worktree", "add", "--detach", tree, sha)
 
 
 def _run(cmd: list[str], tree: str, env: dict, out_stem: str,
@@ -171,7 +188,7 @@ def main() -> None:
     samples: dict[str, list[dict[str, float]]] = {arm: [] for arm in arms}
     try:
         for arm, sha in arms.items():
-            _git("worktree", "add", "--detach", trees[arm], sha)
+            add_worktree(trees[arm], sha)
         for i in range(args.pairs):
             for arm in ("A", "B") if i % 2 == 0 else ("B", "A"):
                 samples[arm].append(
@@ -180,8 +197,7 @@ def main() -> None:
                   flush=True)
     finally:
         for tree in trees.values():
-            subprocess.run(["git", "-C", REPO, "worktree", "remove",
-                            "--force", tree], capture_output=True)
+            _remove_worktree(tree)
         _git("worktree", "prune")
 
     what = (f"workload={args.perfbench}  seeds={args.first_seed}.."

@@ -177,16 +177,19 @@ SAFE_GLOBAL_WINDOW = {
 
 
 def _has_single_partition_window(plan: str) -> bool:
-    """True only when a Window operator's OWN input exchange is
-    SinglePartition — i.e. an unpartitioned window spec collapsing data
-    to one task. A plan that merely CONTAINS both a Window and an
-    unrelated `Exchange SinglePartition` (every 1-row scalar aggregate
-    produces one) is fine; the old substring check flagged those.
+    """True only when a Window operator's OWN input exchange is the
+    SinglePartition that EnsureRequirements plans for an unpartitioned
+    window spec — i.e. data collapsed to one task because the spec has
+    no key. A plan that merely CONTAINS both a Window and an unrelated
+    `Exchange SinglePartition` (every 1-row scalar aggregate produces
+    one) is fine; the old substring check flagged those. So is a keyed
+    window over `spread()`'s data-sized repartition when that width is 1
+    (`SinglePartition, REPARTITION_BY_NUM`): it grows with the data.
 
     Formatted explain keeps partitioning only in the details section,
     so: find each Window node in the TREE, take the first Exchange node
     id in its subtree (its input shuffle, if any), then check that
-    exchange's detail block for SinglePartition."""
+    exchange's detail block for `SinglePartition, ENSURE_REQUIREMENTS`."""
     lines = plan.splitlines()
     # detail blocks: "(N) Exchange" header → lines until next "(M) Op"
     single_exchanges: set[str] = set()
@@ -197,7 +200,7 @@ def _has_single_partition_window(plan: str) -> bool:
             if cur_is_exchange and cur_single:
                 single_exchanges.add(cur_id)
             cur_id, cur_is_exchange, cur_single = m.group(1), m.group(2) == "Exchange", False
-        elif cur_is_exchange and "SinglePartition" in line:
+        elif cur_is_exchange and "SinglePartition, ENSURE_REQUIREMENTS" in line:
             cur_single = True
     if cur_is_exchange and cur_single:
         single_exchanges.add(cur_id)
