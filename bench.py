@@ -11,6 +11,12 @@ execution, not py4j row serialization (collect() on a row-per-input
 query like window_patient_features at sf1 spends ~7s of its 8.7s moving
 1.5M rows into the driver process, drowning the 1.4s of engine work the
 benchmark exists to track). Session startup is excluded.
+
+``SPARK_GRAFT_BENCH_ONLY="q1,q2"`` times just those queries: any name in
+``__spark_entry__.queries()``, headline or not. The top-level ``layers``
+field splits each query's best timed run into its plan build
+(``build_s``: the builder call, eager driver jobs included) and the
+Spark jobs, stages and tasks the run submitted.
 """
 
 from __future__ import annotations
@@ -134,6 +140,21 @@ HEADLINE = [
 ]
 
 
+def resolve_queries(only: str, registry) -> list[str]:
+    """The queries a run times: HEADLINE when ``only`` is blank, else the
+    comma-separated names in ``only`` (any ``registry`` name, in the
+    order given). Exits non-zero on a name not in ``registry``."""
+    if not only.strip():
+        return list(HEADLINE)
+    wanted = list(dict.fromkeys(s.strip() for s in only.split(",")
+                                if s.strip()))
+    unknown = [q for q in wanted if q not in registry]
+    if unknown:
+        sys.exit("SPARK_GRAFT_BENCH_ONLY names not in "
+                 f"__spark_entry__.queries(): {', '.join(unknown)}")
+    return wanted
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # tolerate variant suffixes ("sf10skew" -> 10.0): the numeric part is
@@ -143,37 +164,29 @@ def main() -> None:
     _m = _re.match(r"sf([0-9.]+)", os.path.basename(sf_dir.rstrip("/")))
     sf = float(_m.group(1)) if _m else 0.1
 
-    # Triage subset: SPARK_GRAFT_BENCH_ONLY="q1,q2" times just those
-    # headline queries (full-list totals are NOT comparable to a subset
-    # run — use for before/after deltas on individual queries only).
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "")
-    if only.strip():
-        wanted = {s.strip() for s in only.split(",") if s.strip()}
-        unknown = sorted(wanted - set(HEADLINE))
-        if unknown:
-            sys.exit(
-                "SPARK_GRAFT_BENCH_ONLY names not in HEADLINE: "
-                + ", ".join(unknown)
-                + "\nvalid: " + ", ".join(HEADLINE)
-            )
-        headline = [q for q in HEADLINE if q in wanted]
-    else:
-        headline = HEADLINE
-
     import __spark_entry__ as entrymod
     from healthcare_data_warehouse_spark.session import get_spark
 
-    spark = get_spark("hdw-bench")
+    # Triage subset (full-list totals are NOT comparable to a subset run —
+    # use it for before/after deltas on individual queries only).
     qs = entrymod.queries()
+    headline = resolve_queries(
+        os.environ.get("SPARK_GRAFT_BENCH_ONLY", ""), qs)
+
+    spark = get_spark("hdw-bench")
 
     # Warm-up: run every headline query once at the smallest SF so JIT,
     # codegen compilation, and shuffle machinery are hot before timing
     # (standard steady-state benchmarking; data at the target SF is only
     # touched by the timed runs below, after a footer-only warm).
-    def run(name: str, d: str) -> None:
+    def run(name: str, d: str) -> float:
+        """Build and materialize one query; returns the build seconds."""
+        t0 = time.perf_counter()
         df = qs[name](spark, d)
+        build_s = time.perf_counter() - t0
         assert df.columns  # schema resolved; noop executes the full plan
         df.write.format("noop").mode("overwrite").save()
+        return build_s
 
     # The explicit JVM GC below costs ~30 ms per call — worth it only
     # when the run is big enough to age the heap (measured: saves 100+ s
@@ -269,18 +282,48 @@ def main() -> None:
                 return line.strip()[:300]
         return f"{type(exc).__name__}: {s[:200]}"
 
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def job_counts(group: str, seen: set[int]) -> dict[str, int]:
+        """Jobs, stages and tasks of ``group``'s jobs not yet in ``seen``
+        (which it then extends), once the status store has caught up."""
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        new = set(tracker.getJobIdsForGroup(group)) - seen
+        seen |= new
+        stages = tasks = 0
+        for j in new:
+            info = tracker.getJobInfo(j)
+            for sid in info.stageIds if info is not None else ():
+                si = tracker.getStageInfo(sid)
+                if si is not None:
+                    stages += 1
+                    tasks += si.numTasks
+        return {"jobs": len(new), "stages": stages, "tasks": tasks}
+
     _decisions.drain()  # discard warm-up decisions; stamp only timed ones
     timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     regimes: dict[str, dict] = {}
     errors: dict[str, str] = {}
     for name in headline:
         best = float("inf")
+        # one job group per query: the jobs its builder and its noop
+        # write submit, read back per run outside the timed region
+        group = f"bench:{name}"
+        sc.setJobGroup(group, name)
+        seen: set[int] = set()
         try:
             for _ in range(2):  # min-of-2: steady-state, robust to noise
                 t0 = time.perf_counter()
-                run(name, sf_dir)
-                best = min(best, time.perf_counter() - t0)
+                build_s = run(name, sf_dir)
+                wall = time.perf_counter() - t0
+                counts = job_counts(group, seen)
+                if wall < best:
+                    best = wall
+                    best_layers = {"build_s": round(build_s, 3), **counts}
             timings[name] = round(best, 3)
+            layers[name] = best_layers
         except Exception as exc:  # noqa: BLE001 — one query must not
             # zero out a 40-minute curve point; record WHY and continue
             # (a guard refusing an oversized block at a big SF is a
@@ -314,6 +357,7 @@ def main() -> None:
         "errors": errors,  # {} normally; query -> root message on failure
         "sf": sf,
         "regimes": regimes,
+        "layers": layers,  # see the module docstring
         "provenance": {
             "sf_dir": os.path.basename(sf_dir.rstrip("/")),
             "fresh_jvm": True,  # this harness always builds its own session

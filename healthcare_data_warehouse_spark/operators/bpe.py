@@ -23,7 +23,9 @@ Shape, and why it scales:
   ``aggregate``) — BPE's left-to-right merge order — entirely JVM-side.
 - The loop re-plans per round, so the vocabulary DataFrame is
   ``localCheckpoint``-ed every few rounds to keep the lineage flat
-  (the same pattern as the connected-components loop in graph.py).
+  (the same pattern as the connected-components loop in graph.py); each
+  checkpoint's blocks are released once the next one is materialized,
+  and the last one before the function returns.
 
 At 100 TB only step 1 sees the full corpus; the iterative part works on
 the vocab (typically < 10M rows even for web-scale corpora), so rounds
@@ -102,28 +104,41 @@ def learn_bpe_merges(df: DataFrame, text_col: str = "text",
     """Learn ``num_merges`` BPE merges; returns [(rank, left, right,
     pair_count)] in merge order. Deterministic: ties broken by pair
     lexicographic order."""
-    vocab = _word_types(df, text_col).localCheckpoint(eager=True)
+    vocab = held = _word_types(df, text_col).localCheckpoint(eager=True)
     out: list[tuple[int, str, str, int]] = []
-    for rank in range(num_merges):
-        best = (
-            vocab.select(F.col("cnt"), F.explode(F.expr(_adjacent_pairs("syms"))).alias("pair"))
-            .groupBy("pair")
-            .agg(F.sum("cnt").alias("n"))
-            .orderBy(F.desc("n"), F.asc("pair"))
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        pair, n = best[0]["pair"], int(best[0]["n"])
-        left, right = pair.split(" ", 1)
-        out.append((rank, left, right, n))
-        vocab = vocab.select(
-            F.col("cnt"), F.expr(_merge_fold("syms", left, right)).alias("syms")
-        )
-        if (rank + 1) % checkpoint_every == 0:
-            vocab = vocab.localCheckpoint(eager=True)
+    try:
+        for rank in range(num_merges):
+            best = (
+                vocab.select(F.col("cnt"), F.explode(F.expr(_adjacent_pairs("syms"))).alias("pair"))
+                .groupBy("pair")
+                .agg(F.sum("cnt").alias("n"))
+                .orderBy(F.desc("n"), F.asc("pair"))
+                .limit(1)
+                .collect()
+            )
+            if not best:
+                break
+            pair, n = best[0]["pair"], int(best[0]["n"])
+            left, right = pair.split(" ", 1)
+            out.append((rank, left, right, n))
+            vocab = vocab.select(
+                F.col("cnt"), F.expr(_merge_fold("syms", left, right)).alias("syms")
+            )
+            if (rank + 1) % checkpoint_every == 0:
+                vocab = vocab.localCheckpoint(eager=True)
+                _release_checkpoint(held)  # the new one no longer reads it
+                held = vocab
+    finally:
+        _release_checkpoint(held)
     return out
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of ``df``, a ``localCheckpoint``-ed frame, now
+    rather than whenever a JVM GC lets the ContextCleaner reap them; an
+    action on ``df`` afterwards fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def bpe_merge_table(spark, df: DataFrame, text_col: str = "text",

@@ -39,14 +39,44 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def initial_partition_num(cpus: int) -> int:
-    """Initial (pre-AQE-coalesce) shuffle width for a given CPU budget.
-
-    Shared by get_spark and tune_session so both paths derive the width
-    from the SAME cpu figure — an explicit ``cpus=`` to get_spark must
-    not disagree with a later tune_session on the same session.
-    """
-    return max(8 * cpus, 256)
+def runtime_confs(cpus: int) -> dict[str, str]:
+    """The runtime-settable confs the engine needs, for a session with
+    ``cpus`` cores: ``get_spark``'s builder and ``tune_session`` both
+    apply this one table, so the two paths cannot disagree on a value."""
+    return {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        # Decouple the INITIAL shuffle width from the CPU count: with
+        # coalescing on, AQE launches only as many reduce tasks as the
+        # measured map output needs, so a high initial width costs
+        # nothing at small SF — but at the scale frontier it is the
+        # difference between a 600M-row sort-merge join spread over 256
+        # sort buffers and the same join wedged into 32 (measured: the
+        # sf100 orders⋈lineitem fact-fact join dies with
+        # UNABLE_TO_ACQUIRE_MEMORY at width 32 on a 64g heap and runs at
+        # width 256). On a 1000-executor cluster this knob, not
+        # shuffle.partitions, carries the fan-out.
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum":
+            str(max(8 * cpus, 256)),
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        # Runtime bloom-filter join pruning: when a shuffle join's build
+        # side is selective, inject its key bloom filter into the probe
+        # side's SCAN — at 100 TB this skips most of the fact before the
+        # shuffle (the win broadcast joins get, without the memory bound).
+        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+        # trust per-bucket sort order from bucketed scans (off by default
+        # since SPARK-28632) — removes the runtime Sort under every
+        # co-bucketed SortMergeJoin. This is only correct one-file-per-
+        # bucket, so EVERY path that creates or attaches a bucketed-
+        # sorted table must go through sources/bucketing.py, which
+        # enforces the invariant at write time (post-save check in
+        # write_bucketed) AND at attach time (validate_one_file_per_
+        # bucket before CREATE TABLE ... LOCATION); a split bucket fails
+        # loud instead of silently skipping the sort.
+        "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
+    }
 
 
 def get_spark(app_name: str = "healthcare-dw-spark", cpus: int | None = None) -> SparkSession:
@@ -58,41 +88,10 @@ def get_spark(app_name: str = "healthcare-dw-spark", cpus: int | None = None) ->
     n = cpus or default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config(map=runtime_confs(n))
         .config("spark.sql.shuffle.partitions", str(max(n, 8)))
-        # Decouple the INITIAL shuffle width from the CPU count: with
-        # coalescing on, AQE launches only as many reduce tasks as the
-        # measured map output needs, so a high initial width costs
-        # nothing at small SF — but at the scale frontier it is the
-        # difference between a 600M-row sort-merge join spread over 256
-        # sort buffers and the same join wedged into 32 (measured: the
-        # sf100 orders⋈lineitem fact-fact join dies with
-        # UNABLE_TO_ACQUIRE_MEMORY at width 32 on a 64g heap and runs at
-        # width 256). On a 1000-executor cluster this knob, not
-        # shuffle.partitions, carries the fan-out.
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-                str(initial_partition_num(n)))
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # no per-Column call-site capture (module docstring)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # Runtime bloom-filter join pruning: when a shuffle join's build
-        # side is selective, inject its key bloom filter into the probe
-        # side's SCAN — at 100 TB this skips most of the fact before the
-        # shuffle (the win broadcast joins get, without the memory bound).
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        # trust per-bucket sort order from bucketed scans (off by default
-        # since SPARK-28632) — removes the runtime Sort under every
-        # co-bucketed SortMergeJoin. This is only correct one-file-per-
-        # bucket, so EVERY path that creates or attaches a bucketed-
-        # sorted table must go through sources/bucketing.py, which
-        # enforces the invariant at write time (post-save check in
-        # write_bucketed) AND at attach time (validate_one_file_per_
-        # bucket before CREATE TABLE ... LOCATION); a split bucket fails
-        # loud instead of silently skipping the sort.
-        .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # `or` (not a .get default): an EMPTY env value must also fall
@@ -145,37 +144,18 @@ def tune_session(spark: SparkSession) -> SparkSession:
     The driver harness constructs its own SparkSession and hands it to
     ``entry(spark)``; static configs (master, memory) are out of our hands,
     but session timezone and AQE are runtime-settable and required for
-    correctness parity with the oracle. The call-site capture switch
+    correctness parity with the oracle: every ``runtime_confs`` entry is
+    applied. The call-site capture switch
     (``spark.python.sql.dataFrameDebugging.enabled``) is static, so it
-    is not in this list: see the module docstring.
+    is not in that table: see the module docstring.
     """
     # derive the width from the SESSION's actual core budget (its master
-    # is out of our hands), falling back to the env/cpu default — and go
-    # through the same initial_partition_num helper get_spark uses so the
-    # two paths can never disagree on the formula
+    # is out of our hands), falling back to the env/cpu default
     try:
         n = int(spark.sparkContext.defaultParallelism)
     except Exception:
         n = default_parallelism()
-    for key, val in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        # high initial shuffle width + coalescing: see get_spark — AQE
-        # shrinks it to the measured need, so it is free at small SF and
-        # load-bearing at the big-SF / many-executor frontier
-        ("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-         str(initial_partition_num(n))),
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.optimizer.runtime.bloomFilter.enabled", "true"),
-        # trust per-bucket sort order from bucketed scans: off by default
-        # since SPARK-28632 because it requires one file per bucket —
-        # which write_bucketed guarantees (key-aligned repartition before
-        # the write) — and it removes the runtime Sort under every
-        # co-bucketed SortMergeJoin
-        ("spark.sql.legacy.bucketedTableScan.outputOrdering", "true"),
-    ):
+    for key, val in runtime_confs(n).items():
         # Check-before-set (r10, measured): RuntimeConfig.set is ~13 ms
         # of py4j round-trip per key while conf.get is ~0.3 ms, and this
         # function runs on EVERY query invocation through the entry

@@ -9,10 +9,12 @@
 REV_A is the parent (baseline), REV_B the change. Each revision is
 checked out with ``git worktree add --detach`` under the work dir, and
 ``bench.py`` runs in each worktree with ``SPARK_GRAFT_BENCH_ONLY`` set to
-the queries: bench.py's small-SF warm-up, ``release_blocks()`` eviction
-and min-of-2 per query are the measurement, so every sample is one fresh
-JVM of one arm. Pairs alternate which arm runs first (A,B then B,A ...),
-so a host slow-window cannot line up with one arm.
+the queries, which may be any catalog query, headline or not (a revision
+whose bench.py predates that accepts only headline names): bench.py's
+small-SF warm-up, ``release_blocks()`` eviction and min-of-2 per query
+are the measurement, so every sample is one fresh JVM of one arm. Pairs
+alternate which arm runs first (A,B then B,A ...), so a host slow-window
+cannot line up with one arm.
 
 With ``--perfbench WORKLOAD`` each sample is instead one
 ``perfbench/run.py --workload WORKLOAD --seed S --seconds T --trace 0``

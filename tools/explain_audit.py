@@ -2,7 +2,12 @@
 queries plus an automated audit of scale invariants (broadcast joins,
 scan-level pushdown, pruned read schemas, no single-partition windows).
 
-    python tools/explain_audit.py
+    python tools/explain_audit.py              # regenerate docs/EXPLAINS.md
+    python tools/explain_audit.py q1 q2 ...    # those sections, to stdout
+
+With query names (any in the catalog) it prints just their sections, in
+the EXPLAINS.md format, and leaves docs/EXPLAINS.md alone.
+``SPARK_GRAFT_SF_DIR`` picks the fixture (default sf0.01).
 """
 
 from __future__ import annotations
@@ -286,13 +291,35 @@ def _refused_bucketed_route_section(spark) -> list[str]:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def query_section(name: str, df) -> list[str]:
+    """One query's EXPLAINS.md section: heading, audit notes, plan."""
+    plan = formatted_plan(df)
+    out = [f"## {name}\n"]
+    for note in audit(plan):
+        if note.startswith("WARNING: single-partition window") and \
+                name in SAFE_GLOBAL_WINDOW:
+            note = f"single-partition window, safe: {SAFE_GLOBAL_WINDOW[name]}"
+        out.append(f"- {note}")
+    out.append("\n```\n" + plan.strip()[:4000] + "\n```\n")
+    return out
+
+
 def main() -> None:
     from healthcare_data_warehouse_spark.plans import catalog
     from healthcare_data_warehouse_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    spark = get_spark("explain-audit")
     qs = catalog.queries()
+    names = sys.argv[1:]
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        sys.exit(f"unknown queries: {', '.join(unknown)}; see plans/catalog.py")
+    spark = get_spark("explain-audit")
+    if names:
+        for name in names:
+            print("\n".join(query_section(name, qs[name](spark, sf_dir))))
+        spark.stop()
+        return
 
     out = [
         "# EXPLAINS — physical plans of headline queries",
@@ -304,15 +331,7 @@ def main() -> None:
         "",
     ]
     for name in AUDITED:
-        df = qs[name](spark, sf_dir)
-        plan = formatted_plan(df)
-        out.append(f"## {name}\n")
-        for note in audit(plan):
-            if note.startswith("WARNING: single-partition window") and \
-                    name in SAFE_GLOBAL_WINDOW:
-                note = f"single-partition window, safe: {SAFE_GLOBAL_WINDOW[name]}"
-            out.append(f"- {note}")
-        out.append("\n```\n" + plan.strip()[:4000] + "\n```\n")
+        out.extend(query_section(name, qs[name](spark, sf_dir)))
 
     smoke = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
     if os.path.isdir(smoke):

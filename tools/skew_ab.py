@@ -12,7 +12,8 @@ Shapes probed (min-of-2, noop sink, same session):
   1. orders⋈customer  — dim fits broadcast: plain vs salted
   2. lineitem⋈orders  — fact⋈fact where skew decides plans:
      AQE skew split ON vs OFF (unhandled) vs explicit salted_join
-  3. groupBy(o_custkey) — collapsing aggregate (map-side partials)
+  3. groupBy(o_custkey) — collapsing aggregate: map-side partials vs
+     the explicit two-phase explode_salted_agg
 
 Prints a markdown table plus the fixture's _skew_manifest.json hashes so
 the record is pinned to exact fixture bytes (docs/RUNBOOK.md §6).
@@ -45,7 +46,10 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from healthcare_data_warehouse_spark.operators.skew import salted_join
+    from healthcare_data_warehouse_spark.operators.skew import (
+        explode_salted_agg,
+        salted_join,
+    )
     from healthcare_data_warehouse_spark.session import get_spark
     from healthcare_data_warehouse_spark.sources.loaders import load_table
 
@@ -120,11 +124,14 @@ def main() -> None:
                   .select("o_orderkey", "l_extendedprice", "o_totalprice"))))
     assert ff_cols  # columns doc'd above; select uses renamed key
 
-    # 3. collapsing aggregate: map-side partials absorb the hot key
+    # 3. collapsing aggregate: map-side partials absorb the hot key, so
+    # the explicit salted two-phase only adds a second shuffle
     timed("groupBy(o_custkey) count+sum (plain_partial_agg)",
           lambda: noop(o.groupBy("o_custkey").agg(
               F.count("*").alias("cnt"),
               F.sum(F.col("o_totalprice").cast("decimal(18,4)")).alias("s"))))
+    timed("explode_salted_agg(o_custkey) (explicit two-phase)",
+          lambda: noop(explode_salted_agg(o, "o_custkey", "o_totalprice")))
 
     spark.stop()
 
