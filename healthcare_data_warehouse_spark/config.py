@@ -56,13 +56,6 @@ ANN_JOIN_FIXED_LIST_CUTOVER_ROWS: int | None = None
 # break-even.
 SPREAD_MIN_TASK_BYTES = 64 << 10
 
-# When the ingest-time order-bucketed layout is already materialized
-# (sources/bucketing.py), order-grained queries auto-route onto it —
-# the zero-fact-exchange plan becomes the DEFAULT path rather than a
-# separate query id. Attach-only: routing never triggers the layout
-# build. The regime plan tests set it False to pin the unbucketed plans.
-BUCKETED_AUTO_ROUTE = True
-
 # Materialize-for-reuse cutover: when a corpus-derived intermediate
 # feeds multiple consumers with no exchange for ReuseExchange to dedupe
 # (partition-local aggregation after spread()), localCheckpoint it only

@@ -433,15 +433,13 @@ def join_fact_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_3way(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2: 3-way analytic join (analytics_examples.sql:96-98) + revenue
-    aggregate, with a size-gated physical strategy and bucketed-layout
-    auto-routing.
+    aggregate, with a size-gated physical strategy. The plan depends on
+    the input's size alone, never on what an earlier run left in the
+    warehouse; the bucketed-layout plan is its own query id
+    (``join_3way_bucketed``).
 
-    THREE stamped regimes (decisions.py → bench `regimes` block):
+    TWO stamped regimes (decisions.py → bench `regimes` block):
 
-    - ``bucketed`` — if the ingest-time order-bucketed layout is already
-      materialized (attach-only probe, never builds), the query resolves
-      to the zero-fact-exchange plan: the ingest investment is the
-      DEFAULT path, not a separate query id. Same oracle, bit parity.
     - ``direct`` — below STAGED_JOIN_CUTOVER_BYTES the direct
       join-then-aggregate plan wins: the dims broadcast (no hint —
       Catalyst/AQE decide from stats, tests/test_plan_shapes.py pins
@@ -459,16 +457,8 @@ def join_3way(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the end), so sums-of-sums equal the one-shot dsum — pinned by
     tests/test_adaptive_plans.py against the oracle either way."""
     from .. import decisions
-    from ..config import BUCKETED_AUTO_ROUTE, STAGED_JOIN_CUTOVER_BYTES
+    from ..config import STAGED_JOIN_CUTOVER_BYTES
     from ..operators.skew import relation_size_bytes
-    from ..sources.bucketing import attach_order_bucketed_layout_if_present
-
-    if BUCKETED_AUTO_ROUTE:
-        layout = attach_order_bucketed_layout_if_present(spark, sf_dir)
-        if layout is not None:
-            decisions.record(plan="bucketed", tables=list(layout),
-                             routed_from="join_3way")
-            return _join_3way_bucketed_plan(spark, sf_dir, *layout)
 
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
@@ -536,22 +526,14 @@ def join_3way_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches the staged path: decimal accumulation at every stage, one
     double cast at the end, so the gate hash-matches the same oracle.
 
-    This id BUILDS the layout if absent (the explicit ingest-investment
-    entry point); ``join_3way`` itself auto-routes onto the same plan
-    attach-only whenever the layout already exists.
+    This id builds the layout if absent, or attaches the files an
+    earlier run left (the explicit ingest-investment entry point).
     """
     from .. import decisions
     from ..sources.bucketing import ensure_order_bucketed_layout
 
     li_t, ord_t = ensure_order_bucketed_layout(spark, sf_dir)
     decisions.record(plan="bucketed", tables=[li_t, ord_t])
-    return _join_3way_bucketed_plan(spark, sf_dir, li_t, ord_t)
-
-
-def _join_3way_bucketed_plan(spark: SparkSession, sf_dir: str,
-                             li_t: str, ord_t: str) -> DataFrame:
-    """The zero-fact-exchange J2 plan over the attached layout tables —
-    shared by join_3way_bucketed and join_3way's auto-route."""
     li, o = spark.table(li_t), spark.table(ord_t)
     c = _t(spark, sf_dir, "customer")
     per_cust = (

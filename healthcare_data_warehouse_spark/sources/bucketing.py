@@ -167,9 +167,8 @@ def _source_fingerprint(sf_dir: str, tables: tuple[str, ...]) -> str:
     (relative name + size + mtime_ns of every file under each table
     path). Folding this into the layout tag means a fixture regenerated
     IN PLACE at the same path gets a different tag — the stale
-    materialization is simply never attached (auto-route falls back to
-    the size-gated plans; ensure_* builds fresh) instead of silently
-    serving old data."""
+    materialization is simply never attached (ensure_* builds fresh)
+    instead of silently serving old data."""
     parts: list[str] = []
     for t in tables:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -208,63 +207,6 @@ def _order_layout_specs(spark: SparkSession, sf_dir: str):
          lambda: load_table(spark, sf_dir, "orders")
          .select("o_orderkey", "o_custkey")),
     ]
-
-
-def bucket_size_skew(loc: str) -> float:
-    """max/mean ratio of bucket part-file sizes — a one-listdir proxy
-    for hot-key imbalance inside a bucketed layout. A uniform layout
-    reads ~1; a Zipf-hot join key concentrates its share in ONE bucket
-    (38% of rows → ratio ≈ 12 at 32 buckets)."""
-    try:
-        sizes = [os.path.getsize(os.path.join(loc, f))
-                 for f in os.listdir(loc) if f.startswith("part-")]
-    except OSError:
-        return 0.0
-    if not sizes:
-        return 0.0
-    return max(sizes) / (sum(sizes) / len(sizes))
-
-
-def attach_order_bucketed_layout_if_present(
-        spark: SparkSession, sf_dir: str, buckets: int = 32,
-        max_bucket_skew: float = 4.0) -> tuple[str, str] | None:
-    """Attach-ONLY probe for the order-bucketed layout: returns the two
-    table names iff BOTH are already materialized (session catalog, or
-    completed+valid bucket files on disk — attach is metadata-only).
-    Never builds: callers use this to auto-route order-grained queries
-    onto the layout when the ingest investment was made, without
-    smuggling a 100 TB-class write into an unrelated query.
-
-    SKEW GUARD (``max_bucket_skew``): a co-bucketed SortMergeJoin runs
-    one task per bucket with no exchange below it, so AQE's skew split
-    can never rescue a hot bucket — on the Zipf sf10skew fixture the
-    routed join_3way read 22.9 s where the ordinary staged plan (AQE
-    skew split on the shuffle) read 3.1 s. When any bucket part file
-    exceeds ``max_bucket_skew``× the mean, the probe refuses (records
-    the ratio in decisions) and the caller falls back to the size-gated
-    shuffle plans where AQE can do its job. Explicitly-requested layout
-    queries (ensure_order_bucketed_layout) are not affected — only the
-    silent auto-route."""
-    names = []
-    for table, key, df_fn in _order_layout_specs(spark, sf_dir):
-        names.append(table)
-        loc = os.path.join(_warehouse_path(spark), table)
-        if not spark.catalog.tableExists(table):
-            if not os.path.exists(os.path.join(loc, "_SUCCESS")):
-                return None
-            try:
-                _attach_bucketed(spark, df_fn, table, key, buckets, loc)
-            except RuntimeError:
-                return None  # invalid layout: don't trust, don't rebuild
-        skew = bucket_size_skew(loc)
-        if skew > max_bucket_skew:
-            from .. import decisions
-            decisions.record(bucketed_route_refused=(
-                f"{table}: bucket size skew {skew:.1f}x > "
-                f"{max_bucket_skew}x — hot bucket would serialize the "
-                "exchange-free SMJ"))
-            return None
-    return names[0], names[1]
 
 
 def ensure_order_bucketed_layout(spark: SparkSession, sf_dir: str,

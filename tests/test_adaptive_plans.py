@@ -24,9 +24,6 @@ def _rows(df):
 
 
 def test_join_3way_paths_bit_identical(spark, monkeypatch):
-    # pin the size-gated pair specifically: auto-routing onto the
-    # bucketed layout (its own parity test below) would mask them
-    monkeypatch.setattr(config, "BUCKETED_AUTO_ROUTE", False)
     q = queries()["join_3way"]
     direct = _rows(q(spark, SF_SMOKE))
     monkeypatch.setattr(config, "STAGED_JOIN_CUTOVER_BYTES", 0)
@@ -36,7 +33,6 @@ def test_join_3way_paths_bit_identical(spark, monkeypatch):
 
 
 def test_join_3way_staged_pre_reduces_before_shuffle(spark, monkeypatch):
-    monkeypatch.setattr(config, "BUCKETED_AUTO_ROUTE", False)
     monkeypatch.setattr(config, "STAGED_JOIN_CUTOVER_BYTES", 0)
     q = queries()["join_3way"]
     plan = q(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
@@ -50,38 +46,33 @@ def test_join_3way_staged_pre_reduces_before_shuffle(spark, monkeypatch):
     )
 
 
-def test_join_3way_small_input_keeps_direct_plan(spark, monkeypatch):
-    monkeypatch.setattr(config, "BUCKETED_AUTO_ROUTE", False)
+def test_join_3way_small_input_keeps_direct_plan(spark):
     q = queries()["join_3way"]
     plan = q(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
     assert "__cnt" not in plan  # no staged partials below the cutover
 
 
-def test_join_3way_auto_routes_to_bucketed_layout(spark, monkeypatch):
-    """When the order-bucketed layout is materialized (it is, for the
-    smoke fixture), join_3way itself must resolve to the zero-fact-
-    exchange bucketed plan — the ingest investment is the DEFAULT path —
-    with rows bit-identical to the size-gated paths and the regime
-    stamped for bench provenance."""
+def test_join_3way_ignores_materialized_bucketed_layout(spark):
+    """join_3way plans from its input alone: with the order-bucketed
+    layout materialized it still stamps its size regime and scans the
+    source parquet, never the layout tables. The layout plan belongs to
+    join_3way_bucketed, whose rows match join_3way's bit for bit."""
     from healthcare_data_warehouse_spark import decisions
     from healthcare_data_warehouse_spark.sources.bucketing import (
         ensure_order_bucketed_layout,
     )
 
     li_t, ord_t = ensure_order_bucketed_layout(spark, SF_SMOKE)
-    q = queries()["join_3way"]
+    qs = queries()
 
     decisions.drain()
-    routed_df = q(spark, SF_SMOKE)
-    d = decisions.drain()["join_3way"]
-    assert d["plan"] == "bucketed"
-    assert set(d["tables"]) == {li_t, ord_t}
-    # the fact join runs bucket-local: no Exchange keyed on the order key
-    plan = routed_df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning(l_orderkey" not in plan
-    assert "Exchange hashpartitioning(o_orderkey" not in plan
+    df = qs["join_3way"](spark, SF_SMOKE)
+    assert decisions.drain()["join_3way"]["plan"] == "direct"
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "li_bkt_" not in plan and "ord_bkt_" not in plan
 
-    routed = _rows(routed_df)
-    monkeypatch.setattr(config, "BUCKETED_AUTO_ROUTE", False)
-    direct = _rows(q(spark, SF_SMOKE))
-    assert routed == direct and len(routed) > 0
+    bucketed_df = qs["join_3way_bucketed"](spark, SF_SMOKE)
+    bplan = bucketed_df._jdf.queryExecution().executedPlan().toString()
+    assert li_t in bplan and ord_t in bplan  # the scan names its tables
+    bucketed = _rows(bucketed_df)
+    assert bucketed == _rows(df) and len(bucketed) > 0

@@ -222,7 +222,6 @@ def test_layout_tag_changes_when_source_regenerated(tmp_path, spark):
 
     from healthcare_data_warehouse_spark.sources.bucketing import (
         _order_layout_specs,
-        attach_order_bucketed_layout_if_present,
     )
 
     sf = str(tmp_path / "sf")
@@ -244,35 +243,24 @@ def test_layout_tag_changes_when_source_regenerated(tmp_path, spark):
                       os.path.getmtime(target) + 10))
     tag_after = _order_layout_specs(spark, sf)[0][0]
     assert tag_before != tag_after
-    # and the attach-only probe finds nothing for the new fingerprint
-    assert attach_order_bucketed_layout_if_present(spark, sf) is None
 
 
-def test_bucketed_auto_route_refuses_skewed_layout(tmp_path, spark):
-    """A hot join key concentrates in ONE bucket, and a co-bucketed SMJ
-    runs one task per bucket with no exchange for AQE to split — so the
-    silent auto-route must refuse a skewed layout (measured 22.9 s
-    routed vs 3.1 s staged on the Zipf sf10skew fixture) and fall back
-    to the shuffle plans. The explicit ensure_* path still builds and
-    serves the layout."""
+def test_join_3way_matches_oracle_on_hot_order_key(tmp_path, spark):
+    """A hot join key (90% of lineitem on one order) changes the work
+    per task, never the answer: join_3way on that fixture matches the
+    DuckDB oracle."""
     import os
     import shutil
 
-    import numpy as np
+    import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from healthcare_data_warehouse_spark import decisions
-    from healthcare_data_warehouse_spark.sources.bucketing import (
-        _warehouse_path,
-        attach_order_bucketed_layout_if_present,
-        bucket_size_skew,
-        ensure_order_bucketed_layout,
-    )
+    from healthcare_data_warehouse_spark.plans import catalog
 
     sf = str(tmp_path / "sf")
     os.makedirs(sf)
-    for t in ("orders", "customer"):  # customer: join_3way fallback parity
+    for t in ("orders", "customer"):
         src = os.path.join(SF_SMOKE, f"{t}.parquet")
         (shutil.copytree if os.path.isdir(src) else shutil.copy)(
             src, os.path.join(sf, f"{t}.parquet"))
@@ -284,49 +272,18 @@ def test_bucketed_auto_route_refuses_skewed_layout(tmp_path, spark):
                        "l_orderkey", pa.array(keys, type=kt))
     pq.write_table(li, os.path.join(sf, "lineitem.parquet"))
 
-    t1, t2 = ensure_order_bucketed_layout(spark, sf)
-    try:
-        loc = os.path.join(_warehouse_path(spark), t1)
-        assert bucket_size_skew(loc) > 4.0
-        decisions.drain()
-        assert attach_order_bucketed_layout_if_present(spark, sf) is None
-        stamped = decisions.drain().get("<anonymous>", {})
-        assert "bucket size skew" in stamped.get("bucketed_route_refused",
-                                                 "")
-        # the guard is a tunable, not a hard property of the layout
-        assert attach_order_bucketed_layout_if_present(
-            spark, sf, max_bucket_skew=1e9) == (t1, t2)
-        assert np is not None
-        # FALLBACK PARITY (r7 verdict item 7): with the skewed layout
-        # present-but-refused, the auto-routing query must land on the
-        # shuffle plan (stamped) AND still match the DuckDB oracle on
-        # this fixture — refusal degrades the plan, never the answer.
-        import duckdb
-
-        from healthcare_data_warehouse_spark.plans import catalog
-
-        decisions.drain()
-        got = catalog.queries()["join_3way"](spark, sf).toPandas()
-        stamped = decisions.drain().get("join_3way", {})
-        assert "bucket size skew" in stamped.get("bucketed_route_refused", "")
-        assert stamped.get("plan") in ("direct", "staged")
-        con = duckdb.connect()
-        for t in ("orders", "customer", "lineitem"):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                        f"read_parquet('{os.path.join(sf, t + '.parquet')}')")
-        want = con.execute(
-            catalog.oracle_sql()["join_3way"]).fetchdf()
-        con.close()
-        got = got.sort_values("c_mktsegment").reset_index(drop=True)
-        want = want.sort_values("c_mktsegment").reset_index(drop=True)
-        assert got["c_mktsegment"].tolist() == want["c_mktsegment"].tolist()
-        assert got["order_line_count"].tolist() == want["order_line_count"].tolist()
-        assert got["revenue"].tolist() == want["revenue"].tolist()
-    finally:
-        for t in (t1, t2):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            shutil.rmtree(os.path.join(_warehouse_path(spark), t),
-                          ignore_errors=True)
+    got = catalog.queries()["join_3way"](spark, sf).toPandas()
+    con = duckdb.connect()
+    for t in ("orders", "customer", "lineitem"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"read_parquet('{os.path.join(sf, t + '.parquet')}')")
+    want = con.execute(catalog.oracle_sql()["join_3way"]).fetchdf()
+    con.close()
+    got = got.sort_values("c_mktsegment").reset_index(drop=True)
+    want = want.sort_values("c_mktsegment").reset_index(drop=True)
+    assert got["c_mktsegment"].tolist() == want["c_mktsegment"].tolist()
+    assert got["order_line_count"].tolist() == want["order_line_count"].tolist()
+    assert got["revenue"].tolist() == want["revenue"].tolist()
 
 
 def test_build_claim_rename_leaves_no_temp_dirs(spark):

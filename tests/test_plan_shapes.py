@@ -590,16 +590,13 @@ def test_order_size_histogram_per_order_agg_is_exchange_free(spark):
     assert m and m.group(1).startswith("lines_per_order"), plan[:1500]
 
 
-def test_size_gated_operators_record_their_regime(spark, monkeypatch):
+def test_size_gated_operators_record_their_regime(spark):
     """The decisions log is the contract the bench provenance relies on:
     building join_3way must record which plan regime was chosen and the
-    measured size it was chosen FROM (at smoke scale with auto-routing
-    disabled: direct, below the cutover); the bucketed variant records
-    its layout tables; and with the layout present, join_3way's
-    auto-route stamps `bucketed` + `routed_from`."""
-    from healthcare_data_warehouse_spark import config, decisions
+    measured size it was chosen FROM (at smoke scale: direct, below the
+    cutover), and the bucketed variant records its layout tables."""
+    from healthcare_data_warehouse_spark import decisions
 
-    monkeypatch.setattr(config, "BUCKETED_AUTO_ROUTE", False)
     decisions.drain()
     catalog.queries()["join_3way"](spark, SF_SMOKE)
     got = decisions.drain()
@@ -611,13 +608,6 @@ def test_size_gated_operators_record_their_regime(spark, monkeypatch):
     got = decisions.drain()
     assert got["join_3way_bucketed"]["plan"] == "bucketed"
     assert len(got["join_3way_bucketed"]["tables"]) == 2
-
-    monkeypatch.setattr(config, "BUCKETED_AUTO_ROUTE", True)
-    catalog.queries()["join_3way"](spark, SF_SMOKE)
-    got = decisions.drain()
-    d = got["join_3way"]
-    assert d["plan"] == "bucketed"
-    assert d["routed_from"] == "join_3way"
 
 
 def test_vocab_bigrams_hash_aggregates(spark):
@@ -644,16 +634,15 @@ def test_profile_has_no_sorted_aggregate_phase(spark):
     assert not re.search(r"\bSort \[", plan), plan[:2000]
 
 
-def test_join_3way_sums_revenue_in_long_limbs(spark, monkeypatch):
+def test_join_3way_sums_revenue_in_long_limbs(spark):
     """The direct regime's revenue sum runs on ``dec_sum``'s int64 limbs:
     no partial aggregate sums a ``cast(... as decimal(18,4))`` (a
     ``BigDecimal`` per lineitem row), and every partial sum buffer is a
     bigint (a decimal sum buffer would carry an ``isEmpty`` flag)."""
     import re
 
-    from healthcare_data_warehouse_spark import config, decisions
+    from healthcare_data_warehouse_spark import decisions
 
-    monkeypatch.setattr(config, "BUCKETED_AUTO_ROUTE", False)
     decisions.drain()
     plan = _plan(spark, "join_3way")
     assert decisions.drain()["join_3way"]["plan"] == "direct"

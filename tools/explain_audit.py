@@ -226,71 +226,6 @@ def _has_single_partition_window(plan: str) -> bool:
     return False
 
 
-def _refused_bucketed_route_section(spark) -> list[str]:
-    """join_3way's plan when the bucketed layout EXISTS but is refused
-    for skew (r7 verdict item 7): synthesize a hot-key layout in a temp
-    dir, let the auto-route probe refuse it, and pin the fallback plan
-    beside the stamped refusal. A co-bucketed SMJ runs one task per
-    bucket with no exchange for AQE to split, so the refused path's
-    Exchange is the feature, not the bug (measured 22.9 s routed vs
-    3.1 s staged on the Zipf sf10skew fixture)."""
-    import shutil
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from healthcare_data_warehouse_spark import decisions
-    from healthcare_data_warehouse_spark.plans import catalog
-    from healthcare_data_warehouse_spark.sources.bucketing import (
-        _warehouse_path,
-        ensure_order_bucketed_layout,
-    )
-
-    # Smallest fixture wins: this section only needs orders/customer/
-    # lineitem bytes to mutate, and regeneration must not hard-require
-    # the driver's fixture root on foreign hosts (see main()'s guard).
-    smoke = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
-    tmp = tempfile.mkdtemp(prefix="skewed_layout_")
-    sf = os.path.join(tmp, "sf")
-    os.makedirs(sf)
-    try:
-        for t in ("orders", "customer"):
-            src = os.path.join(smoke, f"{t}.parquet")
-            (shutil.copytree if os.path.isdir(src) else shutil.copy)(
-                src, os.path.join(sf, f"{t}.parquet"))
-        li = pq.read_table(os.path.join(smoke, "lineitem.parquet"))
-        keys = li.column("l_orderkey").to_numpy().copy()
-        keys[: int(len(keys) * 0.9)] = keys[0]  # 90% hot order
-        kt = li.schema.field("l_orderkey").type
-        li = li.set_column(li.schema.get_field_index("l_orderkey"),
-                           "l_orderkey", pa.array(keys, type=kt))
-        pq.write_table(li, os.path.join(sf, "lineitem.parquet"))
-
-        t1, t2 = ensure_order_bucketed_layout(spark, sf)
-        try:
-            decisions.drain()
-            df = catalog.queries()["join_3way"](spark, sf)
-            plan = formatted_plan(df)
-            stamped = decisions.drain().get("join_3way", {})
-            sec = ["## join_3way — bucketed route REFUSED (skewed layout)\n"]
-            sec.append(f"- stamped: `bucketed_route_refused="
-                       f"{stamped.get('bucketed_route_refused', '?')}`")
-            sec.append(f"- fallback plan regime: `{stamped.get('plan', '?')}`"
-                       " — the shuffle plan, where AQE skew-split can act")
-            for note in audit(plan):
-                sec.append(f"- {note}")
-            sec.append("\n```\n" + plan.strip()[:4000] + "\n```\n")
-            return sec
-        finally:
-            for t in (t1, t2):
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
-                shutil.rmtree(os.path.join(_warehouse_path(spark), t),
-                              ignore_errors=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def query_section(name: str, df) -> list[str]:
     """One query's EXPLAINS.md section: heading, audit notes, plan."""
     plan = formatted_plan(df)
@@ -332,15 +267,6 @@ def main() -> None:
     ]
     for name in AUDITED:
         out.extend(query_section(name, qs[name](spark, sf_dir)))
-
-    smoke = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
-    if os.path.isdir(smoke):
-        out.extend(_refused_bucketed_route_section(spark))
-    else:
-        out.append("## join_3way — bucketed route REFUSED (skewed layout)\n")
-        out.append(f"- SKIPPED: smoke fixture `{smoke}` not present on this "
-                   "host (set SPARK_GRAFT_SMOKE_DIR); see the committed "
-                   "version of this section for the refusal evidence.\n")
 
     os.makedirs(os.path.join(REPO, "docs"), exist_ok=True)
     path = os.path.join(REPO, "docs", "EXPLAINS.md")
