@@ -219,8 +219,6 @@ def main() -> None:
     heavy = sf_bytes > 256 << 20
 
     def release_blocks() -> None:
-        if os.environ.get("SPARK_GRAFT_NO_RELEASE"):  # A/B escape hatch
-            return
         # Queries here are independent, so any block a query pinned
         # (persist for two-pass key numbering, localCheckpoint for
         # lineage truncation) is garbage once it returns — but the JVM

@@ -34,17 +34,6 @@ PRIVACY_BUDGET_MAX_EPSILON = 1.0
 # rides a shuffle, and shrinking the fact FIRST is the dominant term.
 STAGED_JOIN_CUTOVER_BYTES = 512 << 20
 
-# Bulk approximate k-NN regime: the recall_fraction → fixed_list_size
-# cutover is decided by the per-block cost model in
-# operators/similarity.ann_regime_costs (whichever regime estimates
-# fewer scored candidates per row — they cross at 20k rows, and the
-# old 100k row threshold left a measured superlinear pocket between:
-# sf3 ann_knn_join ran SLOWER than sf10 on the committed r9 curve).
-# None (the value the engine runs with) = cost model. A row count here
-# forces a threshold instead (0 = always fixed-list); the regime tests
-# set it to pin each regime. Stamped into decisions either way.
-ANN_JOIN_FIXED_LIST_CUTOVER_ROWS: int | None = None
-
 # spread()'s data-derived width floor (r11): a CPU-spreading exchange
 # gets min(defaultParallelism, input_bytes // this) partitions, so a
 # byte-tiny input stops paying one task per core in fixed per-task

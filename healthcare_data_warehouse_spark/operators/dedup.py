@@ -109,45 +109,6 @@ def drop_exact_dups(df: DataFrame, text_col: str = "text",
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(text: Column | str, num_hashes: int = 16, n: int = 3) -> Column:
-    """MinHash signature as a single array Column. Hash family is
-    Kirsch-Mitzenmacher: h_j(s) = h1(s) + j·h2(s) from TWO base md5
-    evaluations per shingle (standard for MinHash/Bloom families — j
-    independent-enough permutations at 2 hashes of cost; md5-derived so
-    the DuckDB oracle replays identical signatures). NOTE: nested
-    array lambdas run interpreted (no codegen) — fine for expression-level
-    use on small relations; the bulk pipeline uses
-    ``minhash_signatures_df`` (explode + groupBy, fully codegen'd, same
-    hash family → identical signatures)."""
-    sh = shingles(text, n)
-    pairs = F.transform(
-        sh,
-        lambda s: F.struct(
-            _mh_pair(s)[0].alias("a"),
-            _mh_pair(s)[1].alias("b"),
-        ),
-    )
-    # One fold over the shingle pairs, min-reducing all num_hashes lanes
-    # at once: `pairs` sits in ARGUMENT position (evaluated once per
-    # row); the per-j form (transform over j capturing `pairs`) re-built
-    # every shingle's md5 pair num_hashes times in interpreted eval.
-    # acc/p are lambda VARIABLES — bound values, never re-evaluated.
-    sentinel = (1 << 63) - 1  # far above any md5-52-bit-derived lane value
-    init = F.array_repeat(F.lit(sentinel).cast("long"), num_hashes)
-    lanes = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    folded = F.aggregate(
-        pairs,
-        init,
-        lambda acc, p: F.zip_with(
-            acc, lanes, lambda a, j: F.least(a, p["a"] + j * p["b"])),
-    )
-    # zero shingles → the old array_min-of-empty NULL lanes
-    return F.transform(
-        folded,
-        lambda x: F.when(x == sentinel, F.lit(None).cast("long")).otherwise(x),
-    )
-
-
 def minhash_signatures_df(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                           num_hashes: int = 16, n: int = 3) -> DataFrame:
     """MinHash signatures the scale way: explode shingles, one hash-agg

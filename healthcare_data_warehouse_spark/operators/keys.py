@@ -49,8 +49,9 @@ def add_dense_key(
     from sampling; persisting also avoids a double scan). Pass ``pins``,
     a list the caller owns, to get that persist appended to it; the
     caller releases it with :func:`release` once the job consuming the
-    result has returned (releasing earlier would let a re-run re-sample
-    the boundaries under the fixed offsets).
+    result has returned. A re-run after that re-samples the boundaries,
+    which the fixed offsets no longer match, so it fails with an error
+    naming ``add_dense_key`` instead of returning wrong keys.
     """
     spark = df.sparkSession
     if num_partitions is None:
@@ -66,16 +67,30 @@ def add_dense_key(
     if not counts:  # empty input: keep the schema, no rows to number
         return df.withColumn(key_col, F.lit(None).cast("long"))
     offsets: dict[int, int] = {}
+    sizes: dict[int, int] = {}
     acc = offset
     for row in sorted(counts, key=lambda r: r[_PID]):
         offsets[row[_PID]] = acc
+        sizes[row[_PID]] = row["count"]
         acc += row["count"]
 
     omap = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
+    smap = F.create_map(*[F.lit(x) for kv in sizes.items() for x in kv])
+    # The offsets are only valid for the partitions they were counted on.
+    # If the persist is gone, a re-planned range exchange samples new
+    # bounds; the total is unchanged, so any other split puts more rows
+    # in some partition than were counted there (or rows in a partition
+    # that had none): refuse rather than emit wrong keys.
+    stale = F.raise_error(F.lit(
+        "add_dense_key: range partitions differ from the ones the offsets "
+        "were counted on (the persisted input was released); rebuild "
+        "the keyed frame"))
+    pid, rn = F.col(_PID), F.col(_RN)
+    key = F.when(rn <= smap[pid], (omap[pid] + rn).cast("long")).otherwise(stale)
     w = Window.partitionBy(_PID).orderBy(*cols)
     return (
         part.withColumn(_RN, F.row_number().over(w))
-        .withColumn(key_col, (omap[F.col(_PID)] + F.col(_RN)).cast("long"))
+        .withColumn(key_col, key)
         .drop(_PID, _RN)
     )
 

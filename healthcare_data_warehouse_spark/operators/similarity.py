@@ -600,9 +600,24 @@ def pq_topk_indexed(spark, index_dir: str, query_vec, k: int = 10,
     )
 
 
+#: float32 GEMM prescreen margin of ``_gemm_pair_survivors``: GEMM
+#: cosine error is bounded by ~dim·eps32 ≈ 3.9e-6, so prescreening at
+#: threshold − 1e-4 is a >25x-safety superset of the exact filter.
+PRESCREEN_MARGIN = 1e-4
+#: near-tie margin of the top-1/top-k GEMM candidate emitters: GEMM and
+#: the sequential exact dot differ by < ~1.5e-14, so every true
+#: neighbor is within this of its group's GEMM cut and always emitted.
+TIE_MARGIN = 1e-9
+#: base seed of ``_srp_subblock``'s per-table Gaussian hyperplanes.
+SRP_SEED = 42
+#: neighbors per row kept by ``cosine_pairs_blas``' capped fallback.
+CAPPED_TOPK = 5
+#: chunks per block that ``cosine_topk_per_row_blas`` aims for.
+TOPK_CHUNKS_PER_BLOCK = 16
+
+
 def _gemm_pair_survivors(e: DataFrame, group_cols: list[str],
-                         chunk_rows: int, thr: float,
-                         pre_margin: float = 1e-4) -> DataFrame:
+                         chunk_rows: int, thr: float) -> DataFrame:
     """Chunk-pair GEMM core shared by the exact and the routed paths of
     ``cosine_pairs_blas``: complete within-group pair enumeration over
     ``e`` (``group_cols…, __id, __vec, __norm``), prescreened as float32
@@ -618,7 +633,7 @@ def _gemm_pair_survivors(e: DataFrame, group_cols: list[str],
     GEMM entry is a cosine with error bounded by ~dim·eps32 ≈ 3.9e-6
     regardless of vector scale (normalizing first is what makes the
     bound scale-free: raw-product GEMM underflows near-FLT_MIN vectors
-    to dot 0 and drops true matches). A ``pre_margin`` of 1e-4 thus
+    to dot 0 and drops true matches). ``PRESCREEN_MARGIN`` (1e-4) thus
     makes the prescreen a >25x-safety superset.
     Prescreen survivors — a set ~the OUTPUT size, not the candidate
     count — are then scored with numpy ``cumsum`` over the exact double
@@ -655,7 +670,7 @@ def _gemm_pair_survivors(e: DataFrame, group_cols: list[str],
     # chunk_rows and of how dense the survivor set is.
     stripe = 512
     score_batch = 1 << 18
-    pre = thr - pre_margin
+    pre = thr - PRESCREEN_MARGIN
 
     def _pairs(A32, B32, A64, B64, na, nb, aid, bid, same):
         out_a, out_b, out_s = [], [], []
@@ -705,7 +720,7 @@ def _gemm_pair_survivors(e: DataFrame, group_cols: list[str],
         # is 1.0, and the prescreen silently drops a qualifying pair
         # (hypothesis-found). Zero-norm vectors divide by 1 instead: the
         # normalized row stays all-zero and no pair involving it can
-        # reach any positive prescreen threshold; if thr <= pre_margin
+        # reach any positive prescreen threshold; if thr <= PRESCREEN_MARGIN
         # lets one through, the exact 0/0 = NaN re-score still drops it
         # exactly like the naive expression path.
         safe = np.where(norms == 0.0, 1.0, norms)
@@ -771,8 +786,7 @@ def ann_regime_costs(rows: int,
     }
 
 
-def routed_ivf_params(max_big_rows: int,
-                      target_recall: float = DEFAULT_TARGET_RECALL) -> dict:
+def routed_ivf_params(max_big_rows: int) -> dict:
     """IVF knobs for routed oversized blocks / bulk k-NN corpora: the
     regime cutover is the PER-BLOCK COST MODEL in ``ann_regime_costs``
     — whichever regime estimates fewer scored candidates per row wins,
@@ -781,19 +795,9 @@ def routed_ivf_params(max_big_rows: int,
     knobless recall_fraction defaults; otherwise the fixed-list knobs
     (n_lists scaled to ~1,250 rows/list on the LARGEST routed block —
     ``ivf_knn_join`` shares one quantizer across blocks, and smaller
-    routed blocks just see fewer members per list, never more).
-
-    ``config.ANN_JOIN_FIXED_LIST_CUTOVER_ROWS`` is None, so the cost
-    model decides; the regime tests set it to a row threshold to pin a
-    regime."""
-    from ..config import ANN_JOIN_FIXED_LIST_CUTOVER_ROWS
-
-    costs = ann_regime_costs(max_big_rows, target_recall)
-    if ANN_JOIN_FIXED_LIST_CUTOVER_ROWS is not None:
-        use_fixed = max_big_rows > ANN_JOIN_FIXED_LIST_CUTOVER_ROWS
-    else:
-        use_fixed = costs["fixed_cand_per_row"] < costs["fraction_cand_per_row"]
-    if use_fixed:
+    routed blocks just see fewer members per list, never more)."""
+    costs = ann_regime_costs(max_big_rows)
+    if costs["fixed_cand_per_row"] < costs["fraction_cand_per_row"]:
         n_lists = costs["fixed_n_lists"]
         return {"n_lists": n_lists, "n_probe": ROUTED_FIXED_PROBE,
                 "sample_cap": max(4096, 4 * n_lists)}
@@ -873,11 +877,7 @@ def _srp_subblock(big: DataFrame, n_planes: int, n_tables: int,
 def cosine_pairs_blas(df: DataFrame, block_col: str, id_col: str,
                       vec_col: str, threshold: float,
                       chunk_rows: int = 4096,
-                      pre_margin: float = 1e-4,
-                      max_block_rows: int | None = 100_000,
-                      on_oversize: str = "route",
-                      srp_seed: int = 42,
-                      cap_k: int = 5) -> DataFrame:
+                      max_block_rows: int | None = 100_000) -> DataFrame:
     """All within-block pairs with cosine >= ``threshold`` — EXACT result,
     BLAS-speed candidate scoring.
 
@@ -898,8 +898,9 @@ def cosine_pairs_blas(df: DataFrame, block_col: str, id_col: str,
        the standard blocked all-pairs matrix shape. Each group is one
        Arrow batch to one task: parallelism = blocks x nchunks^2/2.
     3. ``applyInPandas`` per group (``_gemm_pair_survivors``): float32
-       GEMM prescreen at threshold - 1e-4 (a proven superset: float32
-       GEMM cosine error is bounded by ~dim·eps32 ≈ 3.9e-6), then the
+       GEMM prescreen at threshold - ``PRESCREEN_MARGIN`` (a proven
+       superset: float32 GEMM cosine error is bounded by ~dim·eps32 ≈
+       3.9e-6), then the
        exact left-to-right double fold via ``cumsum`` — bit-identical
        to the ``aggregate(zip_with(...))`` expression and to DuckDB's
        ``list_cosine_similarity`` — on survivors only, filtered at the
@@ -914,33 +915,26 @@ def cosine_pairs_blas(df: DataFrame, block_col: str, id_col: str,
     enumeration is O(n²) per block, so one hot block (every doc under a
     single label) is a job-killer at corpus scale no matter how fast each
     candidate scores. Blocks at or under the cap take the exact path
-    above; larger blocks are governed by ``on_oversize``:
-
-    - ``"route"`` (default): candidates come from SRP-LSH multi-table
-      sub-blocking instead of complete enumeration — each oversized-block
-      row fans out to L (table, sign-bucket) keys (``_srp_subblock``) and
-      only within-bucket pairs are scored, with (n_planes, L) derived
-      from the threshold by ``srp_route_params`` (recall ≥0.95 for pairs
-      at the threshold, ~2^n_planes/L expected work reduction). Survivors
-      dedup across tables, then re-score through the same bit-exact
-      expression — so routed pairs that ARE reported carry exact scores;
-      the approximation is bounded RECALL on oversized blocks only.
-      Thresholds too low for LSH to pay (see ``srp_route_params``) fall
-      back to the output-CAPPED per-doc form: the complete listing at a
-      low threshold has near-quadratic OUTPUT, so oversized blocks emit
-      each row's top-``cap_k`` neighbors at or above the threshold via
-      the block-scoped ``ivf_knn_join`` decomposition (the
-      ``dedup_embedding_topk`` semantics — linear output, IVF-bounded
-      recall), canonicalized to undirected pairs; the ``capped_topk``
-      regime is stamped into decisions so artifacts can't pass the
-      capped output off as complete.
-    - ``"error"``: raise at RUNTIME if an oversized block exists (plans
-      on corpora with bounded blocks run unaffected).
-    - ``"exact"``: explicit opt-in to the unbounded quadratic.
+    above (``max_block_rows=None`` enumerates every block completely);
+    larger blocks are routed. Their candidates come from SRP-LSH
+    multi-table sub-blocking instead of complete enumeration — each
+    oversized-block row fans out to L (table, sign-bucket) keys
+    (``_srp_subblock``) and only within-bucket pairs are scored, with
+    (n_planes, L) derived from the threshold by ``srp_route_params``
+    (recall ≥0.95 for pairs at the threshold, ~2^n_planes/L expected
+    work reduction). Survivors dedup across tables, then re-score
+    through the same bit-exact expression — so routed pairs that ARE
+    reported carry exact scores; the approximation is bounded RECALL on
+    oversized blocks only. Thresholds too low for LSH to pay (see
+    ``srp_route_params``) fall back to the output-CAPPED per-doc form:
+    the complete listing at a low threshold has near-quadratic OUTPUT,
+    so oversized blocks emit each row's top-``CAPPED_TOPK`` neighbors at
+    or above the threshold via the block-scoped ``ivf_knn_join``
+    decomposition (the ``dedup_embedding_topk`` semantics — linear
+    output, IVF-bounded recall), canonicalized to undirected pairs; the
+    ``capped_topk`` regime is stamped into decisions so artifacts can't
+    pass the capped output off as complete.
     """
-    if on_oversize not in ("route", "error", "exact"):
-        raise ValueError(f"on_oversize must be route|error|exact, got {on_oversize!r}")
-
     e = df.select(
         F.col(block_col).alias("__blk"),
         F.col(id_col).alias("__id"),
@@ -948,36 +942,32 @@ def cosine_pairs_blas(df: DataFrame, block_col: str, id_col: str,
         norm(F.col(vec_col)).alias("__norm"),
     )
     thr = float(threshold)
-    pm = float(pre_margin)
 
     if max_block_rows is None:
-        survivors = _gemm_pair_survivors(e, ["__blk"], chunk_rows, thr, pm)
+        survivors = _gemm_pair_survivors(e, ["__blk"], chunk_rows, thr)
     else:
         bc = e.groupBy("__blk").agg(F.count("*").alias("__bn"))
         sized = e.join(F.broadcast(bc), "__blk")
         small = sized.filter(F.col("__bn") <= max_block_rows).drop("__bn")
         big = sized.filter(F.col("__bn") > max_block_rows).drop("__bn")
-        survivors = _gemm_pair_survivors(small, ["__blk"], chunk_rows, thr, pm)
-        route = srp_route_params(threshold) if on_oversize == "route" else None
-        if on_oversize == "exact":
-            survivors = survivors.unionByName(
-                _gemm_pair_survivors(big, ["__blk"], chunk_rows, thr, pm))
-        elif route is not None:
+        survivors = _gemm_pair_survivors(small, ["__blk"], chunk_rows, thr)
+        route = srp_route_params(threshold)
+        if route is not None:
             n_planes, n_tables = route
-            sub = _srp_subblock(big, n_planes, n_tables, srp_seed)
+            sub = _srp_subblock(big, n_planes, n_tables, SRP_SEED)
             # distinct: a pair found by several tables must score once
             # distinct is safe WITH the score: the exact fold gives the
             # same bits for the same pair in every table
             routed = _gemm_pair_survivors(
-                sub, ["__blk", "__t", "__b"], chunk_rows, thr, pm).distinct()
+                sub, ["__blk", "__t", "__b"], chunk_rows, thr).distinct()
             survivors = survivors.unionByName(routed)
-        elif on_oversize == "route":
+        else:
             # Threshold too low for SRP routing (near-quadratic OUTPUT —
             # no candidate generator can make the complete listing
             # sub-quadratic). Instead of refusing, oversized blocks
             # degrade to the output-CAPPED per-doc form: each row emits
-            # its top-``cap_k`` neighbors at cosine >= threshold via the
-            # block-scoped ``ivf_knn_join`` decomposition (linear, the
+            # its top-``CAPPED_TOPK`` neighbors at cosine >= threshold via
+            # the block-scoped ``ivf_knn_join`` decomposition (linear, the
             # ``dedup_embedding_topk`` semantics), canonicalized to
             # undirected pairs. Bounded blocks stay EXACT and complete;
             # the capped regime is stamped into decisions so a bench
@@ -991,13 +981,13 @@ def cosine_pairs_blas(df: DataFrame, block_col: str, id_col: str,
                 knobs = routed_ivf_params(max_big)
                 from .. import decisions
                 decisions.record(
-                    oversize_regime="capped_topk", cap_k=int(cap_k),
+                    oversize_regime="capped_topk", cap_k=CAPPED_TOPK,
                     capped_blocks=len(big_stats), capped_max_block=max_big,
                     **{f"route_{k_}": v for k_, v in knobs.items()})
                 knn = ivf_knn_join(
                     big.select("__blk", "__id", "__vec"),
                     id_col="__id", vec_col="__vec", block_col="__blk",
-                    k=cap_k, threshold=thr,
+                    k=CAPPED_TOPK, threshold=thr,
                     # exact stats (the derived frame's Catalyst estimate
                     # inflates — r10 advice; counts already in hand)
                     rows_hint=sum(r["__bn"] for r in big_stats),
@@ -1012,22 +1002,6 @@ def cosine_pairs_blas(df: DataFrame, block_col: str, id_col: str,
                     .groupBy("id_a", "id_b")
                     .agg(F.max("cosine_sim").alias("cosine_sim")))
                 survivors = survivors.unionByName(capped)
-        else:
-            msg = (
-                f"cosine_pairs_blas: a block exceeds max_block_rows="
-                f"{max_block_rows} (on_oversize='error'). Raise "
-                "max_block_rows, use a finer block_col, on_oversize="
-                "'route' (SRP sub-blocking at routable thresholds, "
-                "output-capped top-k otherwise), or on_oversize='exact' "
-                "to accept the quadratic."
-            )
-
-            def _boom(key, pdf):  # runs only if an oversized block EXISTS
-                raise ValueError(msg)
-
-            survivors = survivors.unionByName(
-                big.groupBy("__blk").applyInPandas(
-                    _boom, schema="id_a long, id_b long, cosine_sim double"))
 
     # scores are already exact (in-task sequential fold) and filtered at
     # the true threshold — no join-back stage
@@ -1036,22 +1010,20 @@ def cosine_pairs_blas(df: DataFrame, block_col: str, id_col: str,
 
 def nn_top1_blas(df: DataFrame, block_col: str, id_col: str,
                  vec_col: str, chunk_rows: int = 1024,
-                 margin: float = 1e-9,
-                 max_block_rows: int | None = 100_000,
-                 on_oversize: str = "error") -> DataFrame:
+                 max_block_rows: int | None = 100_000) -> DataFrame:
     """Each row's EXACT top-1 cosine neighbor within its block
     (deterministic argmax: score desc, neighbor id asc) — GEMM-speed
     candidate generation, bit-exact final scoring.
 
     Same chunk-pair decomposition as ``cosine_pairs_blas``, different
     reduction: each chunk-pair GEMM emits, per row, every partner in the
-    group whose GEMM cosine is within ``margin`` of that row's group
-    maximum (normally exactly one row; more only under near-ties). The
-    margin argument mirrors cosine_pairs_blas: GEMM and the sequential
-    exact dot differ by < ~1.5e-14, so the row's true argmax is always
-    within margin of its group's GEMM max and therefore always emitted
-    by its group. The union of per-group candidates (~nchunks per row)
-    is re-scored with the exact expression and reduced by one window
+    group whose GEMM cosine is within ``TIE_MARGIN`` of that row's group
+    maximum (normally exactly one row; more only under near-ties). GEMM
+    and the sequential exact dot differ by < ~1.5e-14, so the row's true
+    argmax is always within the margin of its group's GEMM max and
+    therefore always emitted by its group. The union of per-group
+    candidates (~nchunks per row) is re-scored with the exact
+    expression and reduced by one window
     argmax with the deterministic tie-break — identical output to
     scoring all pairs exactly, at GEMM cost per candidate.
 
@@ -1061,19 +1033,15 @@ def nn_top1_blas(df: DataFrame, block_col: str, id_col: str,
 
     Oversized-block guard (mirrors ``cosine_pairs_blas``): complete
     enumeration is O(n²) per block, so blocks beyond ``max_block_rows``
-    fail fast by default (``on_oversize="error"``) rather than silently
-    job-killing at corpus scale — EXACT top-1 has no sub-quadratic
-    complete algorithm (the nearest neighbor can sit at any cosine, so
-    LSH bucketing cannot guarantee it); route genuinely hot blocks
-    through the ANN index paths (IVF/PQ per-query top-k) and accept
-    approximate neighbors, or opt into the quadratic with
-    ``on_oversize="exact"``.
+    fail fast at runtime rather than silently job-killing at corpus
+    scale — EXACT top-1 has no sub-quadratic complete algorithm (the
+    nearest neighbor can sit at any cosine, so LSH bucketing cannot
+    guarantee it); route genuinely hot blocks through the ANN index
+    paths (IVF/PQ per-query top-k) and accept approximate neighbors, or
+    pass ``max_block_rows=None`` to accept the quadratic.
     """
     import pandas as pd
     from pyspark.sql import Window
-
-    if on_oversize not in ("error", "exact"):
-        raise ValueError(f"on_oversize must be error|exact, got {on_oversize!r}")
 
     e = df.select(
         F.col(block_col).alias("__blk"),
@@ -1091,13 +1059,13 @@ def nn_top1_blas(df: DataFrame, block_col: str, id_col: str,
     e = e.join(F.broadcast(counts), "__blk")
 
     guard = None
-    if max_block_rows is not None and on_oversize == "error":
+    if max_block_rows is not None:
         msg = (
             f"nn_top1_blas: a block exceeds max_block_rows={max_block_rows}; "
             "exact all-pairs top-1 is quadratic per block. Use a finer "
             "block_col, the ANN index paths (ivf_topk_indexed/"
             "pq_topk_indexed) for approximate neighbors, or pass "
-            "on_oversize='exact' to accept the quadratic."
+            "max_block_rows=None to accept the quadratic."
         )
 
         def _boom(key, pdf):  # runs only if an oversized block EXISTS
@@ -1120,8 +1088,6 @@ def nn_top1_blas(df: DataFrame, block_col: str, id_col: str,
         )
     )
 
-    mg = float(margin)
-
     def _cands(key, pdf):
         _, ci, cj = key
         mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf["__vec"]])
@@ -1137,7 +1103,7 @@ def nn_top1_blas(df: DataFrame, block_col: str, id_col: str,
             if g.size == 0:
                 return [], []
             row_max = g.max(axis=1, keepdims=True)
-            ia, ib = np.nonzero(g >= row_max - mg)
+            ia, ib = np.nonzero(g >= row_max - TIE_MARGIN)
             return src_ids[ia], dst_ids[ib]
 
         srcs, dsts = [], []
@@ -1193,12 +1159,8 @@ def cosine_topk_per_row_blas(df: DataFrame, block_col: str, id_col: str,
                              vec_col: str, k: int = 5,
                              threshold: float = 0.0,
                              chunk_rows: int = 1024,
-                             margin: float = 1e-9,
                              max_block_rows: int | None = 100_000,
-                             target_chunks_per_block: int = 16,
-                             reduction: str = "window",
-                             on_oversize: str = "error",
-                             route_target_recall: float = DEFAULT_TARGET_RECALL) -> DataFrame:
+                             on_oversize: str = "error") -> DataFrame:
     """Each row's EXACT top-k cosine neighbors within its block, at or
     above ``threshold`` — the LINEAR-output near-dup listing (output ≤
     k rows per input row) that replaces the all-pairs variant when the
@@ -1207,11 +1169,11 @@ def cosine_topk_per_row_blas(df: DataFrame, block_col: str, id_col: str,
 
     Same chunk-pair GEMM decomposition as ``nn_top1_blas``, generalized
     reduction: each chunk-pair group emits, per row, every partner whose
-    GEMM cosine is within ``margin`` of the row's k-th largest IN THAT
+    GEMM cosine is within ``TIE_MARGIN`` of the row's k-th largest IN THAT
     GROUP (a true global top-k partner ranks ≤ k within any group that
     contains it — a subset rank never exceeds the global rank — so it is
     always emitted by its group), intersected with the threshold
-    prescreen (GEMM ≥ threshold − margin, a superset of the exact
+    prescreen (GEMM ≥ threshold − TIE_MARGIN, a superset of the exact
     filter). Candidates are scored IN-TASK with the exact sequential
     double fold (``cumsum`` — bit-identical to the
     ``aggregate(zip_with(...))`` expression and the DuckDB oracle; same
@@ -1239,18 +1201,19 @@ def cosine_topk_per_row_blas(df: DataFrame, block_col: str, id_col: str,
       (block-scoped, shared quantizer, candidates bounded at
       n_probe·k per row — no corpus-wide candidate window, so the
       window-sort spill this exact path measures at its guard edge
-      disappears) at ``route_target_recall`` (default 0.9; measured
-      0.947 at the knobless probe). Bounded blocks stay EXACT; the
-      approximation is recall on oversized blocks only, and every
-      reported score is a true cosine.
-    - ``"exact"``: explicit opt-in to the unbounded quadratic.
+      disappears) at ``DEFAULT_TARGET_RECALL`` (0.9; measured 0.947 at
+      the knobless probe). Bounded blocks stay EXACT; the approximation
+      is recall on oversized blocks only, and every reported score is a
+      true cosine.
+
+    ``max_block_rows=None`` enumerates every block completely.
     """
     import pandas as pd
     from pyspark.sql import Window
 
-    if on_oversize not in ("route", "error", "exact"):
+    if on_oversize not in ("route", "error"):
         raise ValueError(
-            f"on_oversize must be route|error|exact, got {on_oversize!r}")
+            f"on_oversize must be route|error, got {on_oversize!r}")
 
     e = df.select(
         F.col(block_col).alias("__blk"),
@@ -1291,14 +1254,13 @@ def cosine_topk_per_row_blas(df: DataFrame, block_col: str, id_col: str,
                 big.select("__blk", "__id", "__vec"),
                 id_col="__id", vec_col="__vec", block_col="__blk",
                 k=k, threshold=threshold,
-                target_recall=route_target_recall,
                 # exact stats from the block agg: the routed input is a
                 # derived frame (post-join/filter) whose Catalyst size
                 # estimate inflates — r10 advice — and the real counts
                 # are already in hand
                 rows_hint=sum(r["__n"] for r in big_stats),
                 n_blocks_hint=len(big_stats), **knobs)
-    elif max_block_rows is not None and on_oversize == "error":
+    elif max_block_rows is not None:
         msg = (
             f"cosine_topk_per_row_blas: a block exceeds "
             f"max_block_rows={max_block_rows}; exact all-pairs top-k is "
@@ -1321,13 +1283,14 @@ def cosine_topk_per_row_blas(df: DataFrame, block_col: str, id_col: str,
     # rows x nchunks x k — with a FIXED chunk size, nchunks (and the
     # shuffle) grows linearly with block size (measured sf30: 60k-row
     # blocks -> 59 chunks -> 177M candidate rows -> 20 GB of window-sort
-    # spill at a 12g heap). Target ~16 chunks per block instead, floored
-    # at the caller's chunk_rows (small blocks keep their task
-    # granularity — the sf10 A/B showed finer chunks win when groups are
-    # scarce) and capped at 4096 so a group's GEMM matrix stays bounded
+    # spill at a 12g heap). Target TOPK_CHUNKS_PER_BLOCK (16) chunks per
+    # block instead, floored at the caller's chunk_rows (small blocks
+    # keep their task granularity — the sf10 A/B showed finer chunks win
+    # when groups are scarce) and capped at 4096 so a group's GEMM
+    # matrix stays bounded
     # (4096^2 doubles = 134 MB per Arrow task, Python-side).
     eff_chunk = F.least(
-        F.greatest(F.ceil(F.col("__n") / F.lit(int(target_chunks_per_block))),
+        F.greatest(F.ceil(F.col("__n") / F.lit(TOPK_CHUNKS_PER_BLOCK)),
                    F.lit(chunk_rows)),
         F.lit(4096))
     nchunks = F.greatest(F.lit(1), F.ceil(F.col("__n") / eff_chunk)).cast("int")
@@ -1343,7 +1306,6 @@ def cosine_topk_per_row_blas(df: DataFrame, block_col: str, id_col: str,
         )
     )
 
-    mg = float(margin)
     thr = float(threshold)
     kk = int(k)
 
@@ -1366,7 +1328,7 @@ def cosine_topk_per_row_blas(df: DataFrame, block_col: str, id_col: str,
                 kth = np.partition(g, w - kk, axis=1)[:, w - kk:w - kk + 1]
             else:
                 kth = np.full((g.shape[0], 1), -np.inf)
-            cut = np.maximum(kth - mg, thr - mg)
+            cut = np.maximum(kth - TIE_MARGIN, thr - TIE_MARGIN)
             ia, ib = np.nonzero(g >= cut)
             if not len(ia):
                 return [], [], []
@@ -1416,44 +1378,15 @@ def cosine_topk_per_row_blas(df: DataFrame, block_col: str, id_col: str,
     if guard is not None:
         cands = cands.unionByName(guard)
 
-    def _with_routed(out: DataFrame) -> DataFrame:
-        # routed blocks are already top-k-reduced per src by ivf_knn_join
-        # and block-disjoint from the exact rows — plain union
-        return out if routed is None else out.unionByName(routed)
-
-    if reduction == "window":
-        w = Window.partitionBy("src").orderBy(F.desc("cosine_sim"),
-                                              F.asc("dst"))
-        return _with_routed(
-            cands.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= kk)
-            .select("src", "dst", "cosine_sim")
-        )
-    if reduction != "aggregate":
-        raise ValueError(f"reduction must be window|aggregate, got {reduction!r}")
-    # Aggregate reduction (alternative, MEASURED WORSE here): the
-    # plausible theory was that collect_list+array_sort+slice avoids the
-    # window's partition sort and therefore its spill. The sf30/12g A/B
-    # (same session, bench-style eviction between runs) refuted it:
-    # aggregate shuffles 4.1 GB vs the window's 2.6 GB (partial
-    # collect_list arrays carry struct overhead the window's flat rows
-    # don't) and spills 19.3 GB vs 7.1 GB (ObjectHashAggregate's
-    # fallback spills harder than the sort), wall 126-146 s vs 120-122 s.
-    # Kept as an option because the trade can invert on hash-friendly
-    # shapes (few sources, huge candidate fan-in); output is bit-identical
-    # either way: array_sort on (-cosine, dst) == window (cosine desc,
-    # dst asc), and every (src, dst) pair is emitted by exactly one
-    # chunk-pair group so no dedup is needed.
-    item = F.struct((-F.col("cosine_sim")).alias("__negs"),
-                    F.col("dst").alias("dst"),
-                    F.col("cosine_sim").alias("cosine_sim"))
-    return _with_routed(
-        cands.groupBy("src")
-        .agg(F.slice(F.array_sort(F.collect_list(item)), 1, kk).alias("__t"))
-        .select("src", F.explode("__t").alias("__i"))
-        .select("src", F.col("__i.dst").alias("dst"),
-                F.col("__i.cosine_sim").alias("cosine_sim"))
+    w = Window.partitionBy("src").orderBy(F.desc("cosine_sim"), F.asc("dst"))
+    out = (
+        cands.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= kk)
+        .select("src", "dst", "cosine_sim")
     )
+    # routed blocks are already top-k-reduced per src by ivf_knn_join
+    # and block-disjoint from the exact rows — plain union
+    return out if routed is None else out.unionByName(routed)
 
 
 def ivf_knn_join(df: DataFrame, id_col: str = "vec_id",

@@ -44,16 +44,6 @@ def bpe_ish_token_count(text: Column | str) -> Column:
     return F.size(F.filter(pieces, lambda p: F.trim(p) != "")).cast("int")
 
 
-def stopword_hits(text: Column | str, stopwords: tuple[str, ...] = ("the", "a")) -> Column:
-    """Count of tokens that are stopwords."""
-    def is_stop(w: Column) -> Column:
-        c = F.lit(False)
-        for s in stopwords:
-            c = c | (w == s)
-        return c
-    return F.size(F.filter(tokens(text), is_stop)).cast("int")
-
-
 def quality_features(df: DataFrame, text_col: str = "text",
                      stopwords: tuple[str, ...] = ("the", "a")) -> DataFrame:
     """Per-document quality features (length / word stats / stopword

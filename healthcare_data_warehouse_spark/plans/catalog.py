@@ -3159,8 +3159,7 @@ def dedup_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                      route_target_recall=0.9)
     return cosine_topk_per_row_blas(
         e, block_col="label", id_col="vec_id", vec_col="embedding",
-        k=5, threshold=0.3, max_block_rows=32_768, on_oversize="route",
-        route_target_recall=0.9)
+        k=5, threshold=0.3, max_block_rows=32_768, on_oversize="route")
 
 
 @query(

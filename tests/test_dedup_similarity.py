@@ -441,11 +441,10 @@ def test_cosine_pairs_oversized_block_routes_bounded(spark):
 
 
 def test_cosine_pairs_oversize_error_and_low_threshold(spark):
-    """on_oversize='error' (and 'route' at thresholds too low for LSH)
-    raises at runtime ONLY when an oversized block exists."""
+    """Under the cap the routed operator equals complete enumeration; over
+    the cap at a threshold too low for LSH it degrades to the
+    output-capped top-k form."""
     import numpy as np
-    import pytest
-    from pyspark.errors import PythonException
 
     from healthcare_data_warehouse_spark.operators.similarity import (
         cosine_pairs_blas,
@@ -462,35 +461,24 @@ def test_cosine_pairs_oversize_error_and_low_threshold(spark):
         rows, "vec_id long, label string, embedding array<float>")
     kw = dict(block_col="label", id_col="vec_id", vec_col="embedding")
 
-    # under the cap: all three modes agree with the unbounded exact path
+    # under the cap: the routed operator agrees with the unbounded path
     base = set((r["id_a"], r["id_b"]) for r in cosine_pairs_blas(
         df, threshold=0.3, max_block_rows=None, **kw).collect())
-    for mode in ("route", "error", "exact"):
-        got = set((r["id_a"], r["id_b"]) for r in cosine_pairs_blas(
-            df, threshold=0.3, max_block_rows=100, on_oversize=mode,
-            **kw).collect())
-        assert got == base
+    got = set((r["id_a"], r["id_b"]) for r in cosine_pairs_blas(
+        df, threshold=0.3, max_block_rows=100, **kw).collect())
+    assert got == base
 
-    # over the cap at a routable threshold, 'error' still raises
-    with pytest.raises(PythonException, match="max_block_rows"):
-        cosine_pairs_blas(df, threshold=0.9, max_block_rows=10,
-                          on_oversize="error", **kw).collect()
-    # over the cap at a low threshold (un-routable for SRP), 'route'
+    # over the cap at a low threshold (un-routable for SRP) the operator
     # degrades to the output-CAPPED per-doc form: a non-empty SUBSET of
     # the true pair set, every pair genuinely >= threshold, canonical
-    # (id_a < id_b), at most cap_k pairs sourced per doc
+    # (id_a < id_b), at most CAPPED_TOPK pairs sourced per doc
     capped_rows = cosine_pairs_blas(df, threshold=0.3, max_block_rows=10,
-                                    on_oversize="route", **kw).collect()
+                                    **kw).collect()
     got = set((r["id_a"], r["id_b"]) for r in capped_rows)
     assert got and got <= base
     assert all(r["cosine_sim"] >= 0.3 for r in capped_rows)
     assert all(r["id_a"] < r["id_b"] for r in capped_rows)
     assert len(capped_rows) <= len(rows) * 5  # k=5 per doc, canonicalized
-    # explicit opt-in to the quadratic still matches exact
-    got = set((r["id_a"], r["id_b"]) for r in cosine_pairs_blas(
-        df, threshold=0.3, max_block_rows=10, on_oversize="exact",
-        **kw).collect())
-    assert got == base
 
 
 def test_routed_ivf_params_cost_model_cutover():
@@ -524,23 +512,12 @@ def test_routed_ivf_params_cost_model_cutover():
     assert k130["sample_cap"] == max(4096, 4 * k130["n_lists"])
     # constant rows/list: doubling the block doubles the list count
     assert routed_ivf_params(260_000)["n_lists"] == 2 * k130["n_lists"]
-    # the env/config override still forces a row threshold for A/B
-    from healthcare_data_warehouse_spark import config
-
-    old = config.ANN_JOIN_FIXED_LIST_CUTOVER_ROWS
-    try:
-        config.ANN_JOIN_FIXED_LIST_CUTOVER_ROWS = 100_000
-        assert routed_ivf_params(60_000) == {}
-        config.ANN_JOIN_FIXED_LIST_CUTOVER_ROWS = 0
-        assert routed_ivf_params(500)["n_lists"] == 1
-    finally:
-        config.ANN_JOIN_FIXED_LIST_CUTOVER_ROWS = old
 
 
 def test_nn_top1_oversize_guard(spark):
     """nn_top1_blas fails fast on an oversized block (exact top-1 has no
-    sub-quadratic complete path) and matches the unguarded result under
-    explicit opt-in."""
+    sub-quadratic complete path) and matches the unguarded result when
+    every block is under the cap."""
     import numpy as np
     import pytest
     from pyspark.sql import functions as F
@@ -564,9 +541,6 @@ def test_nn_top1_oversize_guard(spark):
     assert under == base
     with pytest.raises(PythonException, match="max_block_rows"):
         nn_top1_blas(df, max_block_rows=10, **kw).collect()
-    opt_in = sorted((r["src"], r["dst"]) for r in nn_top1_blas(
-        df, max_block_rows=10, on_oversize="exact", **kw).collect())
-    assert opt_in == base
 
 
 def test_nn_top1_blas_drops_zero_norm_rows(spark):
@@ -625,13 +599,11 @@ def test_cosine_topk_per_row_matches_naive_window(spark):
         .filter(F.col("__rn") <= k).collect())}
 
     for chunk_rows in (7, 100000):
-        for reduction in ("aggregate", "window"):
-            got = {(r["src"], r["dst"], r["cosine_sim"]) for r in
-                   cosine_topk_per_row_blas(
-                       emb, "label", "vec_id", "embedding", k=k,
-                       threshold=thr, chunk_rows=chunk_rows,
-                       reduction=reduction).collect()}
-            assert got == naive, (chunk_rows, reduction)
+        got = {(r["src"], r["dst"], r["cosine_sim"]) for r in
+               cosine_topk_per_row_blas(
+                   emb, "label", "vec_id", "embedding", k=k,
+                   threshold=thr, chunk_rows=chunk_rows).collect()}
+        assert got == naive, chunk_rows
 
 
 def test_cosine_topk_per_row_output_is_linear_bounded(spark):
@@ -817,9 +789,10 @@ def test_ann_knn_join_regime_gate_stamps_and_holds_output_contract(spark, monkey
     """ann_knn_join is size-gated like join_3way: the gate must stamp
     which regime ran, and BOTH regimes must hold the output contract
     (<= k neighbors per src, true-cosine scores, no self-pairs) on the
-    same corpus. Forcing the cutover to 0 exercises the fixed-list-size
-    branch at test scale."""
-    from healthcare_data_warehouse_spark import config, decisions
+    same corpus. A cost model that prices the fraction regime out
+    exercises the fixed-list-size branch at test scale."""
+    from healthcare_data_warehouse_spark import decisions
+    from healthcare_data_warehouse_spark.operators import similarity
     from healthcare_data_warehouse_spark.plans import catalog
 
     q = catalog.queries()["ann_knn_join"]
@@ -829,7 +802,13 @@ def test_ann_knn_join_regime_gate_stamps_and_holds_output_contract(spark, monkey
     d = decisions.drain()["ann_knn_join"]
     assert d["plan"] == "recall_fraction" and d["n_rows"] > 0
 
-    monkeypatch.setattr(config, "ANN_JOIN_FIXED_LIST_CUTOVER_ROWS", 0)
+    real_costs = similarity.ann_regime_costs
+
+    def fraction_priced_out(rows):
+        # effectively infinite, but an int: the gate stamps round() of it
+        return {**real_costs(rows), "fraction_cand_per_row": 1 << 62}
+
+    monkeypatch.setattr(similarity, "ann_regime_costs", fraction_priced_out)
     rows_fls = q(spark, SF_SMOKE).collect()
     d = decisions.drain()["ann_knn_join"]
     assert d["plan"] == "fixed_list_size"

@@ -1,17 +1,17 @@
 """The engine's environment surface is the deployment settings only.
 
 Every engine tuning value is a constant in ``config.py``; A/B arms are
-commits compared with ``tools/ab.py``, not env vars. This test scans
-the package source for every ``os.environ`` / ``os.getenv`` key so a
-new env knob cannot come back unnoticed."""
+commits compared with ``tools/ab.py``, not env vars. These tests scan
+the package source and ``bench.py`` for every ``os.environ`` /
+``os.getenv`` key so a new env knob cannot come back unnoticed."""
 
 from __future__ import annotations
 
 import ast
 import os
 
-PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
-    __file__))), "healthcare_data_warehouse_spark")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(REPO, "healthcare_data_warehouse_spark")
 
 DEPLOYMENT = {
     "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_SCRATCH", "SPARK_GRAFT_CPUS",
@@ -19,6 +19,12 @@ DEPLOYMENT = {
     # set/extended for Python workers and read to respect a caller's
     # spark-submit master; neither tunes the engine
     "PYTHONPATH", "PYSPARK_SUBMIT_ARGS",
+}
+# bench.py's harness contract: the fixture, the query subset and the
+# run conditions it stamps into its JSON line
+BENCH = {
+    "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_BENCH_ONLY", "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_DRIVER_MEM",
 }
 
 
@@ -71,3 +77,10 @@ def test_engine_env_keys_are_deployment_settings_only():
                         os.path.relpath(path, PKG))
     assert set(found) == DEPLOYMENT, {
         k: v for k, v in found.items() if k not in DEPLOYMENT}
+
+
+def test_bench_env_keys_are_its_harness_contract():
+    path = os.path.join(REPO, "bench.py")
+    with open(path) as fh:
+        found = env_keys(ast.parse(fh.read(), path))
+    assert found == BENCH, found ^ BENCH

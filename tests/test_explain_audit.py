@@ -1,7 +1,7 @@
-"""tools/explain_audit.py's single-partition-window audit on formatted
-plan snippets: it flags the exchange EnsureRequirements plans for an
+"""tools/explain_audit.py: its single-partition-window audit on formatted
+plan snippets (it flags the exchange EnsureRequirements plans for an
 unpartitioned window spec, not a keyed window over a width-1
-repartition."""
+repartition), and sections that regenerate byte for byte."""
 
 from __future__ import annotations
 
@@ -11,7 +11,9 @@ import sys
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "tools"))
 
-from explain_audit import _has_single_partition_window  # noqa: E402
+from conftest import SF_SMOKE  # noqa: E402
+from explain_audit import (  # noqa: E402
+    REPO, _has_single_partition_window, query_section)
 
 
 def _plan(arguments: str) -> str:
@@ -59,3 +61,21 @@ def test_width_one_repartition_under_a_window_is_not_flagged():
         _plan("SinglePartition, REPARTITION_BY_NUM"))
     assert not _has_single_partition_window(
         _plan("hashpartitioning(k#1L, 200), ENSURE_REQUIREMENTS"))
+
+
+def test_a_regenerated_section_is_byte_identical(spark):
+    """Two plannings of one query differ in expression ids and exchange
+    plan ids; the printed section must not, so that a diff of
+    docs/EXPLAINS.md shows only plan changes."""
+    import re
+
+    from healthcare_data_warehouse_spark.plans import catalog
+
+    q = catalog.queries()["agg_by_agegroup"]
+    first, second = ("\n".join(query_section("agg_by_agegroup",
+                                             q(spark, SF_SMOKE)))
+                     for _ in range(2))
+    assert first == second
+    assert "Exchange" in first and "plan_id=N" in first
+    assert not re.search(r"#\d|plan_id=\d|RDD\[\d", first)
+    assert REPO not in first

@@ -40,3 +40,21 @@ def test_dense_key_does_not_single_partition(spark):
     # the physical plan must not contain a global (empty-frame) window sort
     plan = keyed._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
+
+
+def test_dense_key_refuses_to_renumber_after_its_persist_is_released(spark):
+    """The offsets are counted once, on the persisted range partitions.
+    Planned again without that persist, the range exchange samples new
+    bounds, so the old offsets would give wrong keys; the operator must
+    fail loudly instead."""
+    import pytest
+
+    from healthcare_data_warehouse_spark.operators.keys import release
+
+    df = spark.range(0, 5000, numPartitions=4).select(
+        (F.col("id") * 7919 % 5000).alias("k"))
+    pins: list = []
+    keyed = add_dense_key(df, ["k"], key_col="sk", num_partitions=8, pins=pins)
+    release(pins)
+    with pytest.raises(Exception, match="add_dense_key"):
+        keyed.select("k", "sk").collect()
