@@ -17,7 +17,6 @@ AS_OF_DATE = "2026-08-13"
 # dbt fact_visits.sql:40-44 — Laplace, epsilon=0.1, sensitivity=1.0, clamp>=0).
 DP_EPSILON = 0.1
 DP_SENSITIVITY = 1.0
-DP_SEED = 42
 
 # Privacy-audit thresholds (reference: privacy_engine.py:27-39).
 K_ANONYMITY = 5

@@ -7,10 +7,8 @@ from .expressions import (  # noqa: F401
     dec_sum,
     dsum,
     hash_uniform,
-    laplace_noise,
     laplace_noise_hash,
     valid_record,
     visit_cohort,
-    with_privacy_noise,
     with_privacy_noise_hash,
 )

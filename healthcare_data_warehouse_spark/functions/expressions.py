@@ -27,7 +27,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.window import WindowSpec
 
-from ..config import AS_OF_DATE, DP_EPSILON, DP_SEED, DP_SENSITIVITY
+from ..config import AS_OF_DATE, DP_EPSILON, DP_SENSITIVITY
 
 # ---------------------------------------------------------------------------
 # Anonymization / privacy (reference: scripts/etl.py:35-37, 65-72)
@@ -43,31 +43,9 @@ def anonymize(col: Column | str) -> Column:
     return F.sha2(F.col(col) if isinstance(col, str) else col, 256)
 
 
-def laplace_noise(epsilon: float = DP_EPSILON, sensitivity: float = DP_SENSITIVITY,
-                  seed: int = DP_SEED) -> Column:
-    """Laplace(0, sensitivity/epsilon) noise via inverse-CDF of uniform.
-
-    Reference: ``np.random.laplace(0, sensitivity/epsilon)``
-    (scripts/etl.py:65-72) and the SQL inverse-CDF variant in
-    fact_visits.sql:41-50. Seeded ``F.rand`` keeps a fixed input
-    partitioning reproducible run-to-run, but per-row values still differ
-    from numpy's RNG — correctness checks are statistical (SURVEY.md §7.4).
-    """
-    scale = sensitivity / epsilon
-    u = F.rand(seed) - F.lit(0.5)
-    return -F.lit(scale) * F.signum(u) * F.log(1 - 2 * F.abs(u))
-
-
-def with_privacy_noise(cost: Column | str, epsilon: float = DP_EPSILON,
-                       sensitivity: float = DP_SENSITIVITY, seed: int = DP_SEED) -> Column:
-    """cost + Laplace noise, clamped at 0 (fact_visits.sql:40-44)."""
-    c = F.col(cost) if isinstance(cost, str) else cost
-    return F.greatest(F.lit(0.0), c + laplace_noise(epsilon, sensitivity, seed))
-
-
 # Salt for the hash-derived DP uniform. A *fixed* salt keeps results
-# reproducible run-to-run (the testability contract above); rotating it per
-# release re-randomizes the noise without touching code.
+# reproducible run-to-run; rotating it per release re-randomizes the noise
+# without touching code.
 DP_HASH_SALT = "lap1:"
 
 # 2^52 as a double — exact. (v + 0.5) / 2^52 with v drawn from 52 md5 bits
@@ -133,12 +111,11 @@ def laplace_noise_hash(key: Column | str, epsilon: float = DP_EPSILON,
                        salt: str = DP_HASH_SALT) -> Column:
     """Laplace(0, sensitivity/epsilon) noise keyed on a row identifier.
 
-    Same inverse-CDF as ``laplace_noise`` but the uniform comes from
-    ``hash_uniform`` (md5 bits) instead of ``F.rand``: per-row values are a
-    pure function of the key, independent of partitioning, and replayable
-    bit-for-bit by the DuckDB oracle (verified: 0/150000 mismatches at
-    sf0.1 after 2dp rounding). Reference semantics unchanged
-    (np.random.laplace, scripts/etl.py:65-72).
+    Inverse-CDF of a uniform that comes from ``hash_uniform`` (md5 bits)
+    instead of ``F.rand``: per-row values are a pure function of the key,
+    independent of partitioning, and replayable bit-for-bit by the DuckDB
+    oracle (verified: 0/150000 mismatches at sf0.1 after 2dp rounding).
+    Reference semantics unchanged (np.random.laplace, scripts/etl.py:65-72).
     """
     scale = sensitivity / epsilon
     u = hash_uniform(key, salt) - F.lit(0.5)

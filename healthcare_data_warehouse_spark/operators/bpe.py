@@ -151,8 +151,7 @@ def bpe_merge_table(spark, df: DataFrame, text_col: str = "text",
 
 
 def bpe_segment(df: DataFrame, merges: list[tuple[int, str, str, int]],
-                text_col: str = "text", id_col: str = "doc_id",
-                broadcast_vocab: bool = True) -> DataFrame:
+                text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Apply a learned merge table to the corpus: per document, the
     subword-token count and mean subword length — the 'how well does this
     vocab compress my corpus' readout used to size tokenizer vocabs.
@@ -167,7 +166,7 @@ def bpe_segment(df: DataFrame, merges: list[tuple[int, str, str, int]],
     (149 s) and folding ~60k word types (<2 s of fold work). Merges MUST
     be applied in rank order (BPE semantics).
 
-    The join-back BROADCASTS the word-type stats by default: the
+    The join-back BROADCASTS the word-type stats: the
     occurrence stream is corpus-sized but its key is the Heaps-small
     vocabulary, so a shuffle join is maximally skewed (every partition
     holds few distinct keys) and sorts the whole corpus — measured at
@@ -175,9 +174,7 @@ def bpe_segment(df: DataFrame, merges: list[tuple[int, str, str, int]],
     of the CPU-bound tokenize-explode. Both per-word stats fold out of
     ONE aggregate emitting a single struct column, so the rank-ordered
     fold chain is evaluated once per type, not once per output column
-    (the broadcast boundary materializes the struct). For a corpus whose
-    type count outgrows the driver, pass broadcast_vocab=False and AQE
-    plans the join (skew-splitting the hot words)."""
+    (the broadcast boundary materializes the struct)."""
     from .skew import spread
 
     word = F.explode(tokens(F.col(text_col)))
@@ -189,14 +186,12 @@ def bpe_segment(df: DataFrame, merges: list[tuple[int, str, str, int]],
     stats = F.expr(
         f"aggregate({syms}, struct(CAST(0 AS BIGINT) AS n, CAST(0 AS BIGINT) AS c), "
         "(a, s) -> struct(a.n + 1 AS n, a.c + length(s) AS c))")
-    wstats = (
+    wstats = F.broadcast(
         df.select(F.explode(tokens(F.col(text_col))).alias("word"))
         .filter(F.col("word") != "")
         .distinct()
         .select("word", stats.alias("__s"))
     )
-    if broadcast_vocab:
-        wstats = F.broadcast(wstats)
     return (
         per_word.join(wstats, "word")
         .groupBy(id_col)

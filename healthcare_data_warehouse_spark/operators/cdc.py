@@ -1,4 +1,4 @@
-"""Change-data-capture operators: keyed snapshot diff and change feeds.
+"""Change-data-capture operator: keyed snapshot diff.
 
 Reference analog: the warehouse's incremental-load pattern (scripts/etl.py
 re-extracts and upserts; SURVEY §2 J5 anti-join incremental) only ever asks
@@ -70,17 +70,3 @@ def table_diff(old: DataFrame, new: DataFrame, keys: list[str],
         )
         .filter(F.col(CHANGE_COL).isNotNull())
     )
-
-
-def change_feed(old: DataFrame, new: DataFrame, keys: list[str],
-                compare_cols: list[str] | None = None) -> DataFrame:
-    """The diff joined back to the NEW row images (old images for deletes)
-    — the row-level change feed an SCD2/upsert consumer applies. Same
-    single keyed shuffle family as ``table_diff`` (the join reuses the
-    key partitioning)."""
-    d = table_diff(old, new, keys, compare_cols)
-    upserts = d.filter(F.col(CHANGE_COL) != "delete").join(new, keys, "inner")
-    deletes = (
-        d.filter(F.col(CHANGE_COL) == "delete").join(old, keys, "inner")
-    )
-    return upserts.unionByName(deletes, allowMissingColumns=False)

@@ -95,15 +95,6 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text",
     )
 
 
-def drop_exact_dups(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
-    """Keep the min-id representative of every exact-duplicate group."""
-    keep = exact_dedup_groups(df, text_col, id_col).select(
-        F.col("keep_id").alias(id_col)
-    )
-    return df.join(keep, id_col, "left_semi")
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
@@ -212,7 +203,7 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     s·(s-1)/2 pairs, so the cap bounds the output at
     ``buckets × max_bucket_size²/2`` regardless of input skew. Degenerate
     buckets are near-exact duplicates anyway — the exact-dedup pass
-    (``drop_exact_dups``) owns those.
+    (``exact_dedup_groups``) owns those.
 
     Pairing is ``bucket_pairs``: the bucket-size window, the per-bucket
     id list, and the pair fan-out all run on ONE (band, band_hash)

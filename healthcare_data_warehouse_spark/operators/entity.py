@@ -16,7 +16,7 @@ Three stages, all engine-side:
    and fat, or a plain within-block self-join when the key is selective.
 2. **Scoring** — native ``levenshtein`` (JVM codegen; Jaro-Winkler and
    soundex are also built-in alternatives) with an edit threshold.
-3. **Clustering** — ``graph.connected_components`` over match edges:
+3. **Clustering** — ``graph.connected_components`` over the match pairs:
    matching is symmetric but not transitive, and an entity id must be —
    the component's minimum record id becomes the canonical id
    (deterministic, partitioning-independent).
@@ -26,8 +26,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from .graph import connected_components
 
 
 def candidate_pairs(df: DataFrame, id_col: str, name_col: str,
@@ -49,17 +47,4 @@ def candidate_pairs(df: DataFrame, id_col: str, name_col: str,
         .select("id_a", "id_b", dist.alias("dist"))
         .filter(F.col("dist") >= 0)  # threshold form returns -1 when above
         .filter(F.col("dist") <= max_edit)
-    )
-
-
-def resolve_entities(df: DataFrame, id_col: str, name_col: str,
-                     block: Column, max_edit: int = 1) -> DataFrame:
-    """Assign every record an ``entity_id`` (min record id of its match
-    cluster). Unmatched records are their own entity."""
-    pairs = candidate_pairs(df, id_col, name_col, block, max_edit)
-    comp = connected_components(pairs, "id_a", "id_b")
-    return (
-        df.join(comp.withColumnRenamed("node", id_col), id_col, "left")
-        .withColumn("entity_id", F.coalesce("component", F.col(id_col)))
-        .drop("component")
     )

@@ -331,18 +331,3 @@ def image_features(df: DataFrame) -> DataFrame:
     return spread(df.select("doc_id", "payload"), "doc_id").mapInPandas(
         _fn, IMAGE_FEATURE_SCHEMA
     )
-
-
-def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Real-decode counterpart of ``resize``: nearest-neighbor on pixels."""
-    def _fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "payload": [ppm_resize(bytes(b), out_w, out_h)
-                            for b in pdf["payload"]],
-                "out_w": out_w,
-                "out_h": out_h,
-            })
-
-    return df.select("doc_id", "payload").mapInPandas(_fn, RESIZE_SCHEMA)

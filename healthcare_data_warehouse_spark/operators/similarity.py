@@ -149,57 +149,6 @@ def _adc_shortlist(cand: DataFrame, refine: int | None,
     return cand.orderBy(F.asc("__adc"), F.asc(id_col)).limit(refine)
 
 
-def ivf_topk(df: DataFrame, query_vec_id: int, k: int = 10, n_lists: int = 16,
-             n_probe: int | None = None, vec_col: str = "embedding",
-             id_col: str = "vec_id",
-             seed: int = 42,
-             target_recall: float = DEFAULT_TARGET_RECALL) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: a KMeans coarse quantizer
-    assigns every vector to a list; queries score only the ``n_probe``
-    lists whose centroids are closest to the query vector.
-
-    At 100 TB the assignment happens once at ingest (the list id is a
-    partition column → probing is partition pruning, not a filter); here
-    the quantizer trains on the fly with a fixed seed.
-
-    ``n_probe=None`` (default) resolves from ``target_recall`` against
-    the measured calibration table (see resolve_n_probe).
-    """
-    if n_probe is None:
-        n_probe = resolve_n_probe(n_lists, target_recall)
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array  # noqa: F401
-
-    # Backfill edge: KMeans.fit refuses an empty dataset, and a missing
-    # query id has no vector to probe with — both mean "no neighbors",
-    # not an error. Empty result, stable schema.
-    if df.filter(F.col(id_col) == query_vec_id).isEmpty():
-        return df.select(
-            id_col, "label", F.lit(0.0).alias("cosine_sim")).limit(0)
-
-    spark = df.sparkSession
-    vecs = df.withColumn("__v", array_to_vector(F.col(vec_col).cast("array<double>")))
-    km = KMeans(k=n_lists, seed=seed, featuresCol="__v", predictionCol="__list")
-    model = km.fit(vecs)
-    assigned = model.transform(vecs).drop("__v")
-
-    import numpy as np
-
-    centers = model.clusterCenters()
-    qrow = df.filter(F.col(id_col) == query_vec_id).select(vec_col).first()
-    q = np.array(qrow[0], dtype=np.float64)
-    dists = [float(np.linalg.norm(q - np.asarray(c))) for c in centers]
-    probe_lists = sorted(range(len(centers)), key=lambda i: dists[i])[:n_probe]
-
-    qdf = df.filter(F.col(id_col) == query_vec_id).select(F.col(vec_col).alias("__qv"))
-    scored = (
-        assigned.filter(F.col("__list").isin(probe_lists) & (F.col(id_col) != query_vec_id))
-        .crossJoin(F.broadcast(qdf))
-        .select(id_col, "label", cosine(F.col(vec_col), F.col("__qv")).alias("cosine_sim"))
-    )
-    return scored.orderBy(F.desc("cosine_sim"), F.asc(id_col)).limit(k)
-
-
 def ivf_build_index(df: DataFrame, index_dir: str, n_lists: int = 16,
                     vec_col: str = "embedding", id_col: str = "vec_id",
                     seed: int = 42) -> list[list[float]]:
@@ -211,8 +160,7 @@ def ivf_build_index(df: DataFrame, index_dir: str, n_lists: int = 16,
     JSON next to the vectors.
 
     This is the 100 TB shape: the O(corpus) quantizer work happens once per
-    ingest, not per query (ivf_topk's train-per-call is the small-data
-    convenience path only).
+    ingest, not per query; ``ivf_topk_indexed`` is the query side.
     """
     import json
     import os
@@ -442,73 +390,10 @@ def _pq_assign(df: DataFrame, books: list[list[list[float]]],
     return df.mapInPandas(gen, schema)
 
 
-def pq_topk(df: DataFrame, query_vec_id: int, k: int = 10, m: int = 8,
-            codebook_k: int = 16, refine: int | None = None,
-            vec_col: str = "embedding", id_col: str = "vec_id",
-            seed: int = 42,
-            target_recall: float = DEFAULT_TARGET_RECALL) -> DataFrame:
-    """Product-quantization (PQ) approximate top-k with ADC scoring and
-    exact re-rank — the memory-bound ANN path (Jégou et al., "Product
-    Quantization for Nearest Neighbor Search", TPAMI 2011).
-
-    Index side: every vector is L2-normalized (so L2 ranking ≡ cosine
-    ranking: ‖a−b‖² = 2−2·cos when ‖a‖=‖b‖=1), split into ``m``
-    subvectors, and each subspace gets a ``codebook_k``-centroid KMeans
-    codebook; a vector's code is its m nearest-centroid ids — 64 dims
-    of float32 compress to m bytes. At 100 TB the codes are computed
-    ONCE at ingest and stored as an array<int> column; only the
-    codebooks (m × k × dim/m floats — driver-tiny) persist off-table.
-
-    Query side (asymmetric distance computation): the query's exact
-    distance to every centroid of every subspace forms an m×k lookup
-    table, baked into the plan as literal arrays; a candidate's
-    approximate distance is m array lookups summed — no per-row float
-    vector math, no shuffle, one scan. The best ``refine`` candidates
-    get exact cosine re-ranked, which recovers most of the recall PQ
-    loses to quantization.
-
-    Training is driver-side seeded numpy k-means on a deterministic
-    hash-sample (``_pq_codebooks``) and assignment one Arrow pass
-    (``_pq_assign``) — identical codebooks to ``pq_build_index``, so
-    this per-call path and the materialized index return the same
-    results.
-    """
-    if df.filter(F.col(id_col) == query_vec_id).isEmpty():
-        return df.select(
-            id_col, "label", F.lit(0.0).alias("cosine_sim")).limit(0)
-    if refine is None:
-        refine = resolve_refine(k, target_recall)
-
-    books = _pq_codebooks(df, m, codebook_k, vec_col, id_col, seed)
-    assigned = _pq_assign(df, books, vec_col)
-
-    qrow = df.filter(F.col(id_col) == query_vec_id).select(vec_col).first()
-    tables = pq_adc_tables(books, qrow[0])
-    approx = F.lit(0.0)
-    for j, tbl in enumerate(tables):
-        lit_tbl = F.array(*[F.lit(v) for v in tbl])
-        approx = approx + F.element_at(lit_tbl, F.element_at("pq_code", j + 1) + 1)
-
-    cand = _adc_shortlist(
-        assigned.filter(F.col(id_col) != query_vec_id)
-        .select(id_col, "label", vec_col, approx.alias("__adc")),
-        refine, id_col)
-    qdf = df.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("__qv"))
-    return (
-        cand.crossJoin(F.broadcast(qdf))
-        .select(id_col, "label",
-                cosine(F.col(vec_col), F.col("__qv")).alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
-        .limit(k)
-    )
-
-
 def pq_build_index(df: DataFrame, index_dir: str, m: int = 8,
                    codebook_k: int = 16, vec_col: str = "embedding",
                    id_col: str = "vec_id", seed: int = 42) -> list[list[list[float]]]:
-    """Ingest-time PQ index build — the 100 TB shape the per-call
-    ``pq_topk`` only approximates (mirrors ``ivf_build_index``): train the
+    """Ingest-time PQ index build (mirrors ``ivf_build_index``): train the
     m per-subspace KMeans codebooks ONCE over the corpus, assign every
     vector its m-byte code, and materialize the table with the code as an
     ``array<int>`` column. Only the codebooks (m × codebook_k × dim/m

@@ -361,9 +361,7 @@ def auto_join(big: DataFrame, small: DataFrame, on: str, how: str = "inner",
     return salted_join(big, small, on, salt_buckets=buckets, how=how)
 
 
-def auto_agg(df: DataFrame, key: str, measure: str,
-             hot_threshold: float = 0.2, sample_fraction: float = 0.1,
-             seed: int = 7) -> DataFrame:
+def auto_agg(df: DataFrame, key: str, measure: str) -> DataFrame:
     """Skew-adaptive count+sum aggregation — resolved by MEASUREMENT to
     the plain aggregate for these collapsing aggregates: Spark's
     hash-aggregate computes map-side partials, so each map task emits at

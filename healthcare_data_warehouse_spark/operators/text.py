@@ -35,15 +35,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text)).cast("int")
 
 
-def bpe_ish_token_count(text: Column | str) -> Column:
-    """BPE-flavored token estimate: split on word boundaries AND digit
-    groups AND punctuation (a cheap proxy for subword tokenizers used to
-    budget LLM training tokens at corpus scale)."""
-    t = F.col(text) if isinstance(text, str) else text
-    pieces = F.split(F.trim(t), r"(?=[^\w])|(?<=[^\w])|(?<=\d)(?=\D)|(?<=\D)(?=\d)")
-    return F.size(F.filter(pieces, lambda p: F.trim(p) != "")).cast("int")
-
-
 def quality_features(df: DataFrame, text_col: str = "text",
                      stopwords: tuple[str, ...] = ("the", "a")) -> DataFrame:
     """Per-document quality features (length / word stats / stopword
@@ -305,22 +296,3 @@ def redact_pii(text: Column | str) -> Column:
     for _, pattern, tag in PII_PATTERNS:
         out = F.regexp_replace(out, pattern, tag)
     return F.when(t.rlike("[0-9@]"), out).otherwise(t)
-
-
-def pii_hit_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document count of each PII pattern class (scrub audit: how much
-    PII did the corpus contain, by type) — ``regexp_count`` per pattern,
-    single projection, behind the same digit/``@`` necessary-condition
-    guard as ``redact_pii`` (no pattern can match without one). The guard
-    is NULL-preserving: NULL text yields NULL counts (what the unguarded
-    ``regexp_count`` returned), never 0."""
-    guard = F.col(text_col).rlike("[0-9@]")
-    return df.select(
-        "*",
-        *[
-            F.when(F.col(text_col).isNull(), F.lit(None))
-            .when(guard, F.regexp_count(F.col(text_col), F.lit(p)))
-            .otherwise(0).cast("long").alias(f"n_{name}")
-            for name, p, _ in PII_PATTERNS
-        ],
-    )

@@ -3263,8 +3263,7 @@ def skew_auto_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.skew import auto_agg
 
     li = _t(spark, sf_dir, "lineitem")
-    return auto_agg(li, "l_returnflag", "l_extendedprice",
-                    sample_fraction=0.5)
+    return auto_agg(li, "l_returnflag", "l_extendedprice")
 
 
 @query(
@@ -5299,9 +5298,10 @@ def entity_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     master-patient-index primitive the reference's trusted patient_id
     skips): name-prefix blocking bounds the pair space to
     within-block², then native banded levenshtein (threshold arg →
-    early-exit DP) keeps pairs within 1 edit. Stage 3 (connected-
-    components entity ids) is certified by graph_components_* and
-    tests/test_entity.py's transitive-closure case."""
+    early-exit DP) keeps pairs within 1 edit. Stage 3 is
+    ``graph.connected_components`` over these pairs, certified by
+    graph_components_* and tests/test_entity.py's transitive-closure
+    case."""
     from ..operators.entity import candidate_pairs
 
     c = _t(spark, sf_dir, "customer")
@@ -7435,8 +7435,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the m-byte codes are a stored array<int> column; the query is the
     stored-code ADC lookup (m element_at sums — no KMeans fit, no
     per-row float vector math) + exact cosine re-rank of the refine
-    set. Train-per-call ``pq_topk`` remains the small-data convenience
-    path only."""
+    set."""
     import hashlib
     import os
     import tempfile

@@ -17,7 +17,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from . import catalog
 
@@ -35,29 +35,11 @@ GOLD_QUERIES = (
 )
 
 
-# Tables the gold card set reads repeatedly. Deliberately NOT lineitem:
-# shared-scan caching is for the relations every card re-reads and that
-# fit executor storage (dims + the order fact's projected columns); at
-# 100 TB you cache dimensions and let the biggest fact stream.
-GOLD_SHARED_TABLES = ("customer", "orders", "nation", "region", "events")
-
-
 def materialize_gold(spark: SparkSession, sf_dir: str, gold_dir: str,
                      queries: tuple[str, ...] = GOLD_QUERIES,
-                     shared_scan: bool = False,
-                     shared_tables: tuple[str, ...] = GOLD_SHARED_TABLES,
                      pii_check: bool = True) -> dict:
     """Run each gold query and persist its (small) result as parquet.
     Returns the manifest (also written to gold_dir/_manifest.json).
-
-    ``shared_scan=True`` turns the refresh into a multi-query batch over
-    SHARED base scans: the input tables are persisted once and every gold
-    query's plan picks the cached relation up automatically (Spark's
-    CacheManager substitutes any analyzed subplan that matches a cached
-    plan — ``load_table`` builds the identical plan each call, so all N
-    queries hit one InMemoryRelation instead of N parquet scans each).
-    The cache is dropped before returning — it exists for the duration of
-    the batch, a scheduling decision, not ambient state.
 
     ``pii_check=True`` (default) enforces the SURVEY §7.3 invariant on
     every card before it is written: the physical plan must not scan a
@@ -65,50 +47,31 @@ def materialize_gold(spark: SparkSession, sf_dir: str, gold_dir: str,
     licensed to read raw ``c_name``, and only to hash it). A violating
     query raises ``PIILeakError`` and nothing is materialized for it."""
     from ..operators.pii_guard import assert_no_pii_scan
-    from ..sources.loaders import load_table
 
     qs = catalog.queries()
     if pii_check:
-        # Pre-pass, BEFORE any shared-scan persist: the invariant is
-        # about what each card's own plan reads from storage, and the
-        # uncached plan shows the true pruned parquet ReadSchema (a
-        # cached full-table relation would embed its full-column build
-        # scan in every substituted plan and mask the signal). Raises
-        # before anything is materialized.
+        # Pre-pass: raises before anything is materialized.
         for name in queries:
             assert_no_pii_scan(qs[name](spark, sf_dir))
     manifest: dict = {"sf_dir": sf_dir, "tables": {}}
     small_file_rows = 100_000
-    cached = []
-    if shared_scan:
-        for t in shared_tables:
-            df = load_table(spark, sf_dir, t).persist()
-            cached.append(df)
-    try:
-        for name in queries:
-            df = qs[name](spark, sf_dir)
-            path = os.path.join(gold_dir, name)
-            # Single-file output is a dashboard nicety, not a requirement:
-            # only coalesce when the result is actually report-sized, so a
-            # gold query that unexpectedly returns a large result keeps a
-            # parallel final stage instead of silently single-threading
-            # the write.
-            n = df.count()
-            out = df.coalesce(1) if n <= small_file_rows else df
-            out.write.mode("overwrite").parquet(path)
-            manifest["tables"][name] = {
-                "rows": n,
-                "refreshed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
-    finally:
-        for df in cached:
-            df.unpersist()
+    for name in queries:
+        df = qs[name](spark, sf_dir)
+        path = os.path.join(gold_dir, name)
+        # Single-file output is a dashboard nicety, not a requirement:
+        # only coalesce when the result is actually report-sized, so a
+        # gold query that unexpectedly returns a large result keeps a
+        # parallel final stage instead of silently single-threading
+        # the write.
+        n = df.count()
+        out = df.coalesce(1) if n <= small_file_rows else df
+        out.write.mode("overwrite").parquet(path)
+        manifest["tables"][name] = {
+            "rows": n,
+            "refreshed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        }
     os.makedirs(gold_dir, exist_ok=True)
     with open(os.path.join(gold_dir, "_manifest.json"), "w") as fh:
         json.dump(manifest, fh)
     return manifest
 
-
-def read_gold(spark: SparkSession, gold_dir: str, name: str) -> DataFrame:
-    """Dashboard-side read: gold parquet, no fact scan."""
-    return spark.read.parquet(os.path.join(gold_dir, name))

@@ -155,13 +155,6 @@ def write_bucketed(df: DataFrame, table: str, key: str, buckets: int = 8,
         write_bucket_spec(loc, buckets, key)
 
 
-def cobucketed_join(spark: SparkSession, left_table: str, right_table: str,
-                    key: str, how: str = "inner") -> DataFrame:
-    """Join two same-bucketed tables on the bucket key — planned with zero
-    shuffle (no Exchange below the join in the physical plan)."""
-    return spark.table(left_table).join(spark.table(right_table), key, how)
-
-
 def _source_fingerprint(sf_dir: str, tables: tuple[str, ...]) -> str:
     """Stable digest of the SOURCE parquet files a layout was built from
     (relative name + size + mtime_ns of every file under each table

@@ -86,36 +86,6 @@ def upsert_to_path(spark, path: str, updates: DataFrame, keys: list[str]) -> Dat
     return spark.read.parquet(path)
 
 
-def partitioned_write(df: DataFrame, path: str, partition_cols: list[str],
-                      mode: str = "overwrite") -> None:
-    """Parquet write partitioned by low-cardinality derived columns
-    (init.sql:96-109 analog) → partition pruning on read."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def backfill_partitions(df: DataFrame, path: str,
-                        partition_cols: list[str]) -> None:
-    """Replace ONLY the partitions present in ``df`` (dynamic partition
-    overwrite) — the backfill/late-data primitive.
-
-    A corrected or late-arriving slice of the fact (one month, one
-    hospital-year) rewrites just its own ``partition_cols`` directories;
-    every other partition's files are untouched. The full-table
-    alternative (mode=overwrite, static) deletes everything first — at
-    100 TB that's rewriting the warehouse to fix a day. The conf is set
-    per-write here (session-scoped in Spark) and restored after.
-    """
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    saved = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set(key, saved)
-    spark.catalog.refreshByPath(path)
-
-
 def evolve_schema(df: DataFrame, target: "T.StructType") -> DataFrame:
     """Conform ``df`` to ``target`` schema: add missing columns as typed
     NULLs, cast type-widened columns, drop extras, fix column order.

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from healthcare_data_warehouse_spark.sources.bucketing import cobucketed_join, write_bucketed
+from healthcare_data_warehouse_spark.sources.bucketing import write_bucketed
 from healthcare_data_warehouse_spark.sources.loaders import load_table
 
 from conftest import SF_SMOKE
@@ -17,7 +17,7 @@ def test_cobucketed_join_has_no_exchange(spark):
     write_bucketed(li.select("o_orderkey", "l_extendedprice", "l_quantity"),
                    "b_lineitem", "o_orderkey", buckets=8)
     try:
-        joined = cobucketed_join(spark, "b_orders", "b_lineitem", "o_orderkey")
+        joined = spark.table("b_orders").join(spark.table("b_lineitem"), "o_orderkey")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         # co-located: the join reads bucket files directly — no shuffle
         assert "Exchange hashpartitioning" not in plan
@@ -71,8 +71,8 @@ def test_order_layout_attach_reuses_completed_files(spark):
         # attached, not rewritten: df_fn consulted only for the schema,
         # and the attached table carries the bucket spec (exchange-free
         # self-join on the bucket key)
-        j = cobucketed_join(spark, "bkt_attach_dst", "bkt_attach_src",
-                            "l_orderkey")
+        j = spark.table("bkt_attach_dst").join(
+            spark.table("bkt_attach_src"), "l_orderkey")
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "Exchange hashpartitioning" not in plan
         assert j.count() > 0

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from healthcare_data_warehouse_spark.operators.cdc import change_feed, table_diff
+from healthcare_data_warehouse_spark.operators.cdc import table_diff
 
 
 @pytest.fixture()
@@ -52,14 +52,3 @@ def test_table_diff_compare_subset_and_validation(spark, states):
     assert set(rows) == {2, 4, 6}
     with pytest.raises(ValueError, match="absent from new side"):
         table_diff(old, new.drop("tag"), ["k"], compare_cols=["tag"])
-
-
-def test_change_feed_row_images(spark, states):
-    old, new = states
-    feed = change_feed(old, new, ["k"]).collect()
-    by_key = {r.k: r for r in feed}
-    assert set(by_key) == {2, 3, 5, 6, 4}
-    # upserts carry NEW images, deletes carry OLD images
-    assert by_key[2].amount == 21.0 and by_key[2].tag == "b2"
-    assert by_key[6].change_type == "insert" and by_key[6].amount == 60.0
-    assert by_key[4].change_type == "delete" and by_key[4].tag == "d"

@@ -9,7 +9,6 @@ import numpy as np
 import pyspark.sql.functions as F
 
 from healthcare_data_warehouse_spark.operators.dedup import (
-    drop_exact_dups,
     exact_dedup_groups,
     jaccard_pairs,
     lsh_candidate_pairs,
@@ -40,8 +39,7 @@ def test_exact_dedup(spark):
     df = _docs(spark)
     groups = {r["keep_id"]: r["dup_count"] for r in exact_dedup_groups(df).collect()}
     assert groups[1] == 2  # docs 1,2 identical
-    kept = sorted(r["doc_id"] for r in drop_exact_dups(df).collect())
-    assert kept == [1, 3, 4]
+    assert sorted(groups) == [1, 3, 4]  # one min-id keeper per group
 
 
 def test_minhash_lsh_finds_near_dups(spark):

@@ -3,10 +3,8 @@
 import pytest
 from pyspark.sql import functions as F
 
-from healthcare_data_warehouse_spark.operators.entity import (
-    candidate_pairs,
-    resolve_entities,
-)
+from healthcare_data_warehouse_spark.operators.entity import candidate_pairs
+from healthcare_data_warehouse_spark.operators.graph import connected_components
 
 
 @pytest.fixture(scope="module")
@@ -41,8 +39,12 @@ def test_candidate_pairs_blocked_and_thresholded(records):
 
 
 def test_resolution_closes_transitively(records):
-    out = {r["rec_id"]: r["entity_id"]
-           for r in resolve_entities(records, "rec_id", "name", _block()).collect()}
+    pairs = candidate_pairs(records, "rec_id", "name", _block())
+    comp = connected_components(pairs, "id_a", "id_b")
+    resolved = (
+        records.join(comp.withColumnRenamed("node", "rec_id"), "rec_id", "left")
+        .withColumn("entity_id", F.coalesce("component", "rec_id")))
+    out = {r["rec_id"]: r["entity_id"] for r in resolved.collect()}
     assert out[1] == out[2] == out[3] == 1   # chain closed to min id
     assert out[4] == 4                        # singleton keeps own id
     assert out[5] == out[6] == 5

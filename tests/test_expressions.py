@@ -14,12 +14,11 @@ from healthcare_data_warehouse_spark.functions.expressions import (
     age_years,
     anonymize,
     hash_uniform,
-    laplace_noise,
     laplace_noise_hash,
     olaplace_noise,
     round2,
     visit_cohort,
-    with_privacy_noise,
+    with_privacy_noise_hash,
 )
 
 
@@ -65,17 +64,6 @@ def test_anonymize_is_sha256(spark):
     df = spark.createDataFrame([("Alice Smith",)], ["name"])
     got = df.select(anonymize("name").alias("h")).collect()[0]["h"]
     assert got == hashlib.sha256(b"Alice Smith").hexdigest()
-
-
-def test_laplace_noise_statistics(spark):
-    # Laplace(0, b): mean |X| = b. With epsilon=0.1, sensitivity=1 → b=10.
-    n = 20000
-    df = spark.range(n).select(laplace_noise(epsilon=0.1, sensitivity=1.0).alias("x"))
-    stats = df.agg(
-        F.avg(F.abs(F.col("x"))).alias("mean_abs"), F.avg("x").alias("mean")
-    ).collect()[0]
-    assert abs(stats["mean_abs"] - 10.0) < 1.0
-    assert abs(stats["mean"]) < 1.0
 
 
 def test_laplace_noise_hash_statistics(spark):
@@ -133,8 +121,8 @@ def test_hash_uniform_in_open_unit_interval(spark):
 
 
 def test_privacy_noise_clamped_nonnegative(spark):
-    df = spark.range(5000).select((F.col("id") % 3).cast("double").alias("cost"))
-    noised = df.select(with_privacy_noise("cost").alias("c"))
+    df = spark.range(5000).select("id", (F.col("id") % 3).cast("double").alias("cost"))
+    noised = df.select(with_privacy_noise_hash("cost", "id").alias("c"))
     assert noised.filter(F.col("c") < 0).count() == 0
 
 

@@ -230,7 +230,7 @@ def test_auto_agg_hot_key_matches_plain(spark):
     assert choose_salt_buckets(hot, "k", sample_fraction=0.5) > 1
 
     got = {r["k"]: (r["cnt"], r["total"])
-           for r in auto_agg(hot, "k", "m", sample_fraction=0.5).collect()}
+           for r in auto_agg(hot, "k", "m").collect()}
     want = {r["k"]: (r["cnt"], r["total"])
             for r in hot.groupBy("k").agg(
                 F.count("*").alias("cnt"),
@@ -243,7 +243,7 @@ def test_auto_agg_hot_key_matches_plain(spark):
         [(f"k{i % 40}", float(i)) for i in range(1000)], "k string, m double")
     assert choose_salt_buckets(uni, "k", sample_fraction=0.5) == 1
     got_u = {r["k"]: (r["cnt"], r["total"])
-             for r in auto_agg(uni, "k", "m", sample_fraction=0.5).collect()}
+             for r in auto_agg(uni, "k", "m").collect()}
     want_u = {r["k"]: (r["cnt"], r["total"])
               for r in uni.groupBy("k").agg(
                   F.count("*").alias("cnt"),

@@ -111,7 +111,7 @@ def test_gold_materialization_roundtrip(spark):
 
     from healthcare_data_warehouse_spark.config import SCRATCH_DIR
     from healthcare_data_warehouse_spark.plans.catalog import queries
-    from healthcare_data_warehouse_spark.plans.gold import materialize_gold, read_gold
+    from healthcare_data_warehouse_spark.plans.gold import materialize_gold
 
     gold_dir = os.path.join(SCRATCH_DIR, "gold_test")
     shutil.rmtree(gold_dir, ignore_errors=True)
@@ -120,46 +120,10 @@ def test_gold_materialization_roundtrip(spark):
     assert set(manifest["tables"]) == {"agg_by_agegroup", "topk_diagnoses"}
     # gold read equals a fresh computation
     live = {tuple(r) for r in queries()["agg_by_agegroup"](spark, SF_SMOKE).collect()}
-    gold = {tuple(r) for r in read_gold(spark, gold_dir, "agg_by_agegroup").collect()}
+    gold_df = spark.read.parquet(os.path.join(gold_dir, "agg_by_agegroup"))
+    gold = {tuple(r) for r in gold_df.collect()}
     assert live == gold
     # dashboard read never scans the fact tables
-    plan = read_gold(spark, gold_dir, "agg_by_agegroup")._jdf.queryExecution().executedPlan().toString()
+    plan = gold_df._jdf.queryExecution().executedPlan().toString()
     assert "orders.parquet" not in plan and "customer.parquet" not in plan
-    shutil.rmtree(gold_dir, ignore_errors=True)
-
-
-def test_gold_shared_scan_batch_uses_cached_relations(spark):
-    import os
-
-    from healthcare_data_warehouse_spark.config import SCRATCH_DIR
-    from healthcare_data_warehouse_spark.plans.catalog import queries
-    from healthcare_data_warehouse_spark.plans.gold import materialize_gold, read_gold
-    from healthcare_data_warehouse_spark.sources.loaders import load_table
-
-    # Mechanism first: while a base table is persisted, ANY catalog query
-    # over it plans against the cached relation (CacheManager substitutes
-    # matching analyzed subplans), so one scan feeds the whole batch.
-    base = load_table(spark, SF_SMOKE, "orders").persist()
-    try:
-        plan = (queries()["agg_monthly_trend"](spark, SF_SMOKE)
-                ._jdf.queryExecution().executedPlan().toString())
-        assert "InMemoryTableScan" in plan
-    finally:
-        base.unpersist()
-
-    # End to end: the shared-scan batch writes the same gold tables as
-    # independent runs, and the cache is dropped afterwards.
-    gold_dir = os.path.join(SCRATCH_DIR, "gold_shared_test")
-    shutil.rmtree(gold_dir, ignore_errors=True)
-    names = ("agg_by_agegroup", "agg_monthly_trend", "case_visit_cohorts")
-    n_persisted_before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    materialize_gold(spark, SF_SMOKE, gold_dir, queries=names, shared_scan=True)
-    for name in names:
-        live = {tuple(r) for r in queries()[name](spark, SF_SMOKE).collect()}
-        gold = {tuple(r) for r in read_gold(spark, gold_dir, name).collect()}
-        assert live == gold
-    # batch-scoped cache: no NET persisted relations left behind (other
-    # session-long fixtures may legitimately hold their own)
-    n_persisted_after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    assert n_persisted_after <= n_persisted_before
     shutil.rmtree(gold_dir, ignore_errors=True)

@@ -172,38 +172,6 @@ def test_jsonl_failfast_on_corrupt_line(spark, tmp_path):
         read_jsonl(spark, str(tmp_path), schema).collect()
 
 
-def test_backfill_rewrites_only_its_partitions(spark, tmp_path):
-    import os
-
-    from healthcare_data_warehouse_spark.sources.sinks import (
-        backfill_partitions,
-        partitioned_write,
-    )
-
-    path = str(tmp_path / "fact")
-    full = spark.createDataFrame(
-        [(1, "2024-01", 10.0), (2, "2024-01", 20.0),
-         (3, "2024-02", 30.0), (4, "2024-03", 40.0)],
-        "id long, month string, v double")
-    partitioned_write(full, path, ["month"])
-
-    feb_files_before = set(os.listdir(os.path.join(path, "month=2024-02")))
-
-    # Corrected January arrives: backfill replaces ONLY month=2024-01.
-    fix = spark.createDataFrame([(1, "2024-01", 11.0), (5, "2024-01", 50.0)],
-                                "id long, month string, v double")
-    backfill_partitions(fix, path, ["month"])
-
-    out = spark.read.parquet(path)
-    assert out.count() == 4  # 2 new jan rows + feb + mar
-    jan = {r["id"]: r["v"] for r in out.filter("month = '2024-01'").collect()}
-    assert jan == {1: 11.0, 5: 50.0}  # old id=2 gone, id=1 corrected
-    # Untouched partitions keep their exact files (no rewrite).
-    assert set(os.listdir(os.path.join(path, "month=2024-02"))) == feb_files_before
-    # Static overwrite mode restored after the call.
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
-
-
 def test_evolve_schema_conforms_batches(spark):
     from pyspark.sql import types as T
 

@@ -22,31 +22,48 @@ def test_stateful_profiles_match_batch_totals(spark):
     assert s == b
 
 
-def test_ivf_topk_scores_are_exact_cosines_and_good_recall(spark):
+def _query_vec(emb):
+    return emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
+
+
+def _exact_sims(emb):
+    from healthcare_data_warehouse_spark.operators.similarity import brute_force_topk
+
+    return {r["vec_id"]: r["cosine_sim"]
+            for r in brute_force_topk(emb, query_vec_id=0, k=10**6).collect()}
+
+
+def _exact_top10(emb):
+    from healthcare_data_warehouse_spark.operators.similarity import brute_force_topk
+
+    return [r["vec_id"] for r in brute_force_topk(emb, query_vec_id=0, k=10).collect()]
+
+
+def test_ivf_topk_scores_are_exact_cosines_and_good_recall(spark, tmp_path):
     from healthcare_data_warehouse_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk,
+        ivf_build_index,
+        ivf_topk_indexed,
     )
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    exact = brute_force_topk(emb, query_vec_id=0, k=10).collect()
-    approx = ivf_topk(emb, query_vec_id=0, k=10, n_lists=8, n_probe=4).collect()
+    index_dir = str(tmp_path / "ivf")
+    ivf_build_index(emb, index_dir, n_lists=8)
+    approx = ivf_topk_indexed(spark, index_dir, _query_vec(emb), k=10,
+                              n_probe=4, exclude_id=0).collect()
     assert 0 < len(approx) <= 10
-    exact_sims = {r["vec_id"]: r["cosine_sim"]
-                  for r in brute_force_topk(emb, query_vec_id=0, k=10**6).collect()}
+    exact_sims = _exact_sims(emb)
     for r in approx:
         assert abs(r["cosine_sim"] - exact_sims[r["vec_id"]]) < 1e-12
     # recall against exact top-10 (random data → probing half the lists
     # should still recover a decent fraction)
-    recall = len({r["vec_id"] for r in approx} & {r["vec_id"] for r in exact}) / 10
+    recall = len({r["vec_id"] for r in approx} & set(_exact_top10(emb))) / 10
     assert recall >= 0.3
 
 
-def test_ivf_indexed_matches_on_the_fly_and_prunes_partitions(spark, tmp_path):
+def test_ivf_indexed_prunes_partitions(spark, tmp_path):
     from healthcare_data_warehouse_spark.operators.similarity import (
         ivf_build_index,
         ivf_probe_lists,
-        ivf_topk,
         ivf_topk_indexed,
     )
 
@@ -55,14 +72,8 @@ def test_ivf_indexed_matches_on_the_fly_and_prunes_partitions(spark, tmp_path):
     centers = ivf_build_index(emb, index_dir, n_lists=8)
     assert len(centers) == 8
 
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
+    qvec = _query_vec(emb)
     indexed = ivf_topk_indexed(spark, index_dir, qvec, k=10, n_probe=4, exclude_id=0)
-
-    # Same quantizer seed + same probe rule → identical results to the
-    # train-per-call convenience path.
-    fly = ivf_topk(emb, query_vec_id=0, k=10, n_lists=8, n_probe=4).collect()
-    got = indexed.collect()
-    assert [r["vec_id"] for r in got] == [r["vec_id"] for r in fly]
 
     # The scan must be partition-PRUNED to the n_probe lists: list_id is a
     # partition column, so the isin shows up in PartitionFilters, and the
@@ -81,33 +92,32 @@ def test_ivf_indexed_matches_on_the_fly_and_prunes_partitions(spark, tmp_path):
     assert dirs == {str(p) for p in probe}  # only the probed directories read
 
 
-def test_pq_topk_exact_rerank_scores_and_recall(spark):
+def test_pq_topk_exact_rerank_scores_and_recall(spark, tmp_path):
     from healthcare_data_warehouse_spark.operators.similarity import (
-        brute_force_topk,
-        pq_topk,
+        pq_build_index,
+        pq_topk_indexed,
     )
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    exact = brute_force_topk(emb, query_vec_id=0, k=10).collect()
-    approx = pq_topk(emb, query_vec_id=0, k=10, refine=150).collect()
+    index_dir = str(tmp_path / "pq")
+    pq_build_index(emb, index_dir)
+    approx = pq_topk_indexed(spark, index_dir, _query_vec(emb), k=10,
+                             refine=150, exclude_id=0).collect()
     assert 0 < len(approx) <= 10
     # re-ranked scores are EXACT cosines (ADC only selects candidates)
-    exact_sims = {r["vec_id"]: r["cosine_sim"]
-                  for r in brute_force_topk(emb, query_vec_id=0, k=10**6).collect()}
+    exact_sims = _exact_sims(emb)
     for r in approx:
         assert abs(r["cosine_sim"] - exact_sims[r["vec_id"]]) < 1e-12
     # uniform-random 64-dim vectors are PQ's worst case (quantization
     # noise ~ signal); a 30% refine still recovers most of top-10
     # (measured 0.9 at this seed — 0.6 leaves nondeterminism margin)
-    recall = len({r["vec_id"] for r in approx} & {r["vec_id"] for r in exact}) / 10
+    recall = len({r["vec_id"] for r in approx} & set(_exact_top10(emb))) / 10
     assert recall >= 0.6
 
 
-def test_pq_indexed_matches_on_the_fly_and_trains_nothing_at_query(spark, tmp_path):
+def test_pq_indexed_trains_nothing_at_query(spark, tmp_path):
     from healthcare_data_warehouse_spark.operators.similarity import (
-        brute_force_topk,
         pq_build_index,
-        pq_topk,
         pq_topk_indexed,
     )
 
@@ -120,26 +130,8 @@ def test_pq_indexed_matches_on_the_fly_and_trains_nothing_at_query(spark, tmp_pa
     stored = spark.read.parquet(str(tmp_path / "pq" / "vectors"))
     assert stored.filter(F.size("pq_code") != 8).count() == 0
 
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    indexed = pq_topk_indexed(spark, index_dir, qvec, k=10, refine=150,
-                              exclude_id=0)
-    got = indexed.collect()
-
-    # Same codebook seeds + same ADC rule → identical results to the
-    # train-per-call convenience path.
-    fly = pq_topk(emb, query_vec_id=0, k=10, refine=150).collect()
-    assert [r["vec_id"] for r in got] == [r["vec_id"] for r in fly]
-
-    # Recall no worse than the per-call path (same quantizer → equal sets),
-    # and scores are exact cosines.
-    exact = brute_force_topk(emb, query_vec_id=0, k=10).collect()
-    exact_sims = {r["vec_id"]: r["cosine_sim"]
-                  for r in brute_force_topk(emb, query_vec_id=0, k=10**6).collect()}
-    for r in got:
-        assert abs(r["cosine_sim"] - exact_sims[r["vec_id"]]) < 1e-12
-    recall = len({r["vec_id"] for r in got} & {r["vec_id"] for r in exact}) / 10
-    recall_fly = len({r["vec_id"] for r in fly} & {r["vec_id"] for r in exact}) / 10
-    assert recall >= recall_fly >= 0.6
+    indexed = pq_topk_indexed(spark, index_dir, _query_vec(emb), k=10,
+                              refine=150, exclude_id=0)
 
     # The query path must train NOTHING: its plan is a scan of the
     # materialized index (stored pq_code column) scored by element_at over
@@ -150,19 +142,6 @@ def test_pq_indexed_matches_on_the_fly_and_trains_nothing_at_query(spark, tmp_pa
     # exists in the stored index table (paths are truncated in the plan
     # string, so assert on the scanned schema instead).
     assert "pq_code:array<int>" in plan
-
-
-def test_pq_topk_empty_and_missing_query(spark, tmp_path):
-    import pyarrow as pa
-    import pyarrow.parquet as pq_
-    from healthcare_data_warehouse_spark.operators.similarity import pq_topk
-
-    s = pq_.read_schema(SF_SMOKE + "/embeddings.parquet")
-    empty = pa.table({c: pa.array([], type=s.field(c).type) for c in s.names},
-                     schema=s)
-    pq_.write_table(empty, str(tmp_path / "embeddings.parquet"))
-    df = spark.read.parquet(str(tmp_path / "embeddings.parquet"))
-    assert pq_topk(df, query_vec_id=0, k=10).collect() == []
 
 
 def test_ann_pq_topk_handles_absent_query_vector(spark, tmp_path):
@@ -206,23 +185,23 @@ def test_ann_defaults_resolve_from_recall_target():
     assert resolve_refine(10, target_recall=0.5) == 100
 
 
-def test_pq_unattainable_target_degrades_to_exact(spark):
-    """target_recall above the measured 0.96 ceiling must make pq_topk
-    exact — identical top-k to brute-force cosine — because the ADC
-    shortlist cap is dropped (the '>= this recall' contract holds by
-    construction instead of being quietly violated)."""
+def test_pq_unattainable_target_degrades_to_exact(spark, tmp_path):
+    """target_recall above the measured 0.96 ceiling must make
+    pq_topk_indexed exact — identical top-k to brute-force cosine —
+    because the ADC shortlist cap is dropped (the '>= this recall'
+    contract holds by construction instead of being quietly violated)."""
     from healthcare_data_warehouse_spark.operators.similarity import (
-        brute_force_topk,
-        pq_topk,
+        pq_build_index,
+        pq_topk_indexed,
     )
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    exact = [r["vec_id"] for r in
-             brute_force_topk(emb, query_vec_id=0, k=10).collect()]
+    index_dir = str(tmp_path / "pq")
+    pq_build_index(emb, index_dir)
     degraded = [r["vec_id"] for r in
-                pq_topk(emb, query_vec_id=0, k=10,
-                        target_recall=0.999).collect()]
-    assert degraded == exact
+                pq_topk_indexed(spark, index_dir, _query_vec(emb), k=10,
+                                exclude_id=0, target_recall=0.999).collect()]
+    assert degraded == _exact_top10(emb)
 
 
 def test_ivf_default_call_scans_resolved_probe_count(spark, tmp_path):

@@ -85,84 +85,6 @@ def test_stream_stream_funnel_matches_batch(spark):
     assert canon(stream_result.collect()) == canon(batch_result.collect())
 
 
-def test_incremental_ingest_exactly_once(spark, tmp_path):
-    """Checkpointed availableNow ingest: each run picks up only new files;
-    re-runs never duplicate; crash-recovery state lives in the checkpoint."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from healthcare_data_warehouse_spark.streaming.incremental import incremental_ingest
-
-    src, dest, ckpt = (str(tmp_path / d) for d in ("src", "dest", "ckpt"))
-    schema = T.StructType([T.StructField("id", T.LongType()),
-                           T.StructField("v", T.StringType())])
-
-    def write_batch(ids, tag):
-        spark.createDataFrame([(i, tag) for i in ids], schema) \
-            .coalesce(1).write.mode("append").parquet(src)
-
-    def ingest():
-        return incremental_ingest(
-            spark, src, dest, ckpt, schema,
-            transform=lambda df: df.withColumn("v_up", F.upper("v")))
-
-    write_batch([1, 2, 3], "a")
-    assert ingest() >= 1
-    out = spark.read.parquet(dest)
-    assert out.count() == 3 and out.filter(F.col("v_up") == "A").count() == 3
-
-    write_batch([4, 5], "b")
-    ingest()
-    assert spark.read.parquet(dest).count() == 5  # only the 2 new rows added
-
-    assert ingest() == 0  # nothing new → no batch, no dups
-    assert spark.read.parquet(dest).count() == 5
-    ids = sorted(r["id"] for r in spark.read.parquet(dest).collect())
-    assert ids == [1, 2, 3, 4, 5]
-
-
-def test_incremental_ingest_rejects_batch_transform(spark, tmp_path):
-    import pytest
-    from pyspark.sql import types as T
-
-    from healthcare_data_warehouse_spark.streaming.incremental import incremental_ingest
-
-    schema = T.StructType([T.StructField("id", T.LongType())])
-    spark.createDataFrame([(1,)], schema).write.parquet(str(tmp_path / "s"))
-    with pytest.raises(ValueError):
-        incremental_ingest(
-            spark, str(tmp_path / "s"), str(tmp_path / "d"),
-            str(tmp_path / "c"), schema,
-            transform=lambda df: spark.createDataFrame([(1,)], schema))
-
-
-def test_stream_upsert_merges_by_key(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from healthcare_data_warehouse_spark.streaming.incremental import stream_upsert
-
-    src, table, ckpt = (str(tmp_path / d) for d in ("s", "t", "c"))
-    schema = T.StructType([T.StructField("k", T.LongType()),
-                           T.StructField("v", T.StringType())])
-
-    def arrive(rows):
-        spark.createDataFrame(rows, schema).coalesce(1) \
-            .write.mode("append").parquet(src)
-
-    arrive([(1, "a"), (2, "b")])
-    assert stream_upsert(spark, src, table, ckpt, schema, ["k"]) >= 1
-    assert spark.read.parquet(table).count() == 2
-
-    arrive([(2, "b2"), (3, "c")])  # update k=2, insert k=3
-    stream_upsert(spark, src, table, ckpt, schema, ["k"])
-    out = {r["k"]: r["v"] for r in spark.read.parquet(table).collect()}
-    assert out == {1: "a", 2: "b2", 3: "c"}
-
-    # Nothing new → no batch; table unchanged.
-    assert stream_upsert(spark, src, table, ckpt, schema, ["k"]) == 0
-    assert spark.read.parquet(table).count() == 3
-
-
 def test_streaming_trending_topk_matches_batch(spark, tmp_path):
     """The foreachBatch-ranked leaderboard equals the batch twin: with
     AvailableNow the final micro-batch snapshot IS the full aggregate,

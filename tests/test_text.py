@@ -6,7 +6,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from healthcare_data_warehouse_spark.operators.text import (
-    bpe_ish_token_count,
     fingerprint,
     lang_id,
     quality_features,
@@ -18,13 +17,6 @@ def test_token_count(spark):
     df = spark.createDataFrame([("one two  three",), ("single",)], ["text"])
     got = [r["n"] for r in df.select(token_count("text").alias("n")).collect()]
     assert got == [3, 1]
-
-
-def test_bpe_ish_token_count_splits_subwords(spark):
-    df = spark.createDataFrame([("hello, world42 x",)], ["text"])
-    n = df.select(bpe_ish_token_count("text").alias("n")).collect()[0]["n"]
-    # hello , world 42 x  (punctuation and digit boundaries split)
-    assert n == 5
 
 
 def test_lang_id_picks_profile(spark):
@@ -54,7 +46,7 @@ def test_quality_features_values(spark):
 
 
 def test_redact_pii_planted(spark):
-    from healthcare_data_warehouse_spark.operators.text import pii_hit_counts, redact_pii
+    from healthcare_data_warehouse_spark.operators.text import redact_pii
 
     df = spark.createDataFrame(
         [
@@ -71,11 +63,6 @@ def test_redact_pii_planted(spark):
     assert out[2]["t"] == "ssn [SSN] phone [PHONE] ip [IP]"
     assert out[3]["t"] == "call [PHONE] or [PHONE]"
     assert out[4]["t"] == "no pii here, just 1234 and a-b-c"
-
-    counts = {r["doc_id"]: r for r in pii_hit_counts(df).collect()}
-    assert counts[2]["n_ssn"] == 1 and counts[2]["n_phone"] == 1
-    assert counts[2]["n_ipv4"] == 1 and counts[1]["n_email"] == 1
-    assert counts[3]["n_phone"] == 2 and counts[4]["n_phone"] == 0
 
 
 def test_bm25_matches_numpy_replica(spark):
@@ -157,22 +144,6 @@ def test_ngram_hashes_counts_match_string_ngrams(spark):
             .agg(F.collect_list("count").alias("c")).collect()
         }
         assert by_str == by_hash
-
-
-def test_pii_hit_counts_null_preserving(spark):
-    """NULL text → NULL counts (what unguarded regexp_count returned);
-    the digit/@ guard must not silently turn NULL into 0."""
-    from healthcare_data_warehouse_spark.operators.text import pii_hit_counts
-
-    df = spark.createDataFrame(
-        [(1, "mail me at a@b.co"), (2, "no pii here"), (3, None)],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r for r in pii_hit_counts(df).collect()}
-    assert out[1]["n_email"] == 1
-    assert out[2]["n_email"] == 0
-    assert all(out[3][f"n_{n}"] is None
-               for n in ("email", "ssn", "phone", "ipv4"))
 
 
 def test_dup_ngram_coverage_bigrams(spark):

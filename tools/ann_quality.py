@@ -27,10 +27,8 @@ def main() -> None:
 
     from healthcare_data_warehouse_spark.operators.similarity import (
         brute_force_topk,
-        ivf_topk,
         lsh_topk,
         lsh_topk_multitable,
-        pq_topk,
     )
     from healthcare_data_warehouse_spark.session import get_spark
     from healthcare_data_warehouse_spark.sources.loaders import load_table
@@ -50,8 +48,7 @@ def main() -> None:
         pq_topk_indexed,
     )
 
-    # ingest-time indexes built ONCE (the 100 TB serving path); the
-    # train-per-call variants are timed too, as the convenience path
+    # ingest-time indexes built ONCE (the 100 TB serving path)
     idx = tempfile.mkdtemp(prefix="ann_quality_")
     ivf_dir, pq_dir = os.path.join(idx, "ivf"), os.path.join(idx, "pq")
     t0 = time.perf_counter()
@@ -71,8 +68,6 @@ def main() -> None:
             emb, q, k=k, n_planes=8, probe_hamming=1),
         "SRP-LSH 4 tables x 5 planes, H<=1": lambda q: lsh_topk_multitable(
             emb, q, k=k, n_planes=5, n_tables=4, probe_hamming=1),
-        "IVF train-per-call (16 lists, probe 4)": lambda q: ivf_topk(
-            emb, q, k=k, n_lists=16, n_probe=4),
         "IVF indexed (16 lists, probe 4)": lambda q: ivf_topk_indexed(
             spark, ivf_dir, qvecs[q], k=k, n_probe=4, exclude_id=q),
         # probe sweep: the recall knob, measured — recall must climb
@@ -85,8 +80,6 @@ def main() -> None:
         "IVF indexed (16 lists, probe 16 = exhaustive)": lambda q:
             ivf_topk_indexed(spark, ivf_dir, qvecs[q], k=k, n_probe=16,
                              exclude_id=q),
-        "PQ train-per-call (m=8, refine 100)": lambda q: pq_topk(
-            emb, q, k=k, m=8, codebook_k=16, refine=100),
         "PQ indexed (m=8, refine 100)": lambda q: pq_topk_indexed(
             spark, pq_dir, qvecs[q], k=k, refine=100, exclude_id=q),
         # refine sweep: PQ's recall knob — the ADC shortlist size fed to

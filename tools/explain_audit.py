@@ -248,7 +248,7 @@ def query_section(name: str, df) -> list[str]:
                 name in SAFE_GLOBAL_WINDOW:
             note = f"single-partition window, safe: {SAFE_GLOBAL_WINDOW[name]}"
         out.append(f"- {note}")
-    out.append("\n```\n" + plan.strip()[:4000] + "\n```\n")
+    out.append("\n```\n" + plan.strip() + "\n```\n")
     return out
 
 
