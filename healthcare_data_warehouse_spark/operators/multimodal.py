@@ -1,13 +1,13 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 north_star scope. Images/audio/video ride through the engine as ``binary``
-columns with metadata; decode/resize/frame-sample run as Arrow-batched
+columns with metadata; decode/frame-sample run as Arrow-batched
 ``mapInPandas`` stages. Codec-library formats (JPEG/MP3/H264) are not
 decodable in this container, so ``decode_media`` stays honestly gated and
 the generic stages use deterministic byte-level fakes — but PCM-WAV and
 PPM(P6) need only the stdlib + numpy, so for those two the decode layer
 further down is GENUINE: RIFF/PPM parse, real samples/pixels, features
-computed from the decoded signal, real nearest-neighbor resize.
+computed from the decoded signal.
 """
 
 from __future__ import annotations
@@ -32,8 +32,8 @@ def decode_media(payload: bytes) -> object:
     """Codec-library decoder hook (PIL/av/librosa) for JPEG/MP3/H264-class
     formats. Not available in this container. PCM-WAV and PPM(P6) do NOT
     go through this hook: decode_wav / decode_ppm below are genuine
-    stdlib+numpy decoders (real samples/pixels, real features, real
-    nearest-neighbor resize) and back the certified multimodal queries."""
+    stdlib+numpy decoders (real samples/pixels, real features) and back
+    the certified multimodal queries."""
     raise NotImplementedError(
         "codec-library media decode (JPEG/MP3/H264) requires image/audio libs "
         "not present in this environment; WAV and PPM payloads are genuinely "
@@ -44,7 +44,7 @@ def decode_media(payload: bytes) -> object:
 def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Arrow-batched feature extraction. Each batch is a pandas frame of
     whole rows; output schema is FEATURE_SCHEMA. Vectorized over the batch
-    — this is the shape a real decode/resize/embed stage takes."""
+    — this is the shape a real decode/embed stage takes."""
     for pdf in batches:
         payloads = pdf["payload"]
         yield pd.DataFrame({
@@ -67,33 +67,11 @@ def extract_features(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Resize / frame-sample plumbing (decode layer stubbed; the Spark-side
-# shapes — schema, batch iteration, explode of per-frame rows — are real)
+# Frame-sample plumbing (decode layer stubbed; the Spark-side shapes —
+# schema, batch iteration, explode of per-frame rows — are real)
 # ---------------------------------------------------------------------------
 
-RESIZE_SCHEMA = "doc_id long, payload binary, out_w int, out_h int"
 FRAME_SCHEMA = "doc_id long, frame_idx int, frame_payload binary"
-
-
-def resize_batches(target_w: int, target_h: int):
-    """mapInPandas stage shape for image resize. The pixel transform is a
-    deterministic fake (payload truncation proportional to target area) —
-    a real deployment swaps ONE line for PIL/opencv inside the batch loop;
-    partitioning, Arrow transfer, and schema are production-real."""
-    def _fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            scale = max(1, (256 * 256) // max(1, target_w * target_h))
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "payload": pdf["payload"].map(lambda b: bytes(b[: max(1, len(b) // scale)])),
-                "out_w": target_w,
-                "out_h": target_h,
-            })
-    return _fn
-
-
-def resize(df: DataFrame, w: int, h: int) -> DataFrame:
-    return df.select("doc_id", "payload").mapInPandas(resize_batches(w, h), RESIZE_SCHEMA)
 
 
 def sample_frames(df: DataFrame, every_n_bytes: int = 32) -> DataFrame:
@@ -277,18 +255,6 @@ def decode_ppm(payload: bytes):
         raise ValueError("only 8-bit PPM supported")
     raster = np.frombuffer(payload, dtype=np.uint8, count=w * h * 3, offset=i)
     return raster.reshape(h, w, 3)
-
-
-def ppm_resize(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """REAL nearest-neighbor resize on decoded pixels, re-encoded as P6."""
-    import numpy as np
-
-    img = decode_ppm(payload)
-    h, w = img.shape[:2]
-    ys = (np.arange(out_h) * h) // out_h
-    xs = (np.arange(out_w) * w) // out_w
-    out = img[ys][:, xs]
-    return b"P6\n%d %d\n255\n" % (out_w, out_h) + out.tobytes()
 
 
 def attach_ppm(df: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -501,6 +501,43 @@ CAPPED_TOPK = 5
 TOPK_CHUNKS_PER_BLOCK = 16
 
 
+def _block_rows(df: DataFrame, block_col: str, id_col: str,
+                vec_col: str) -> DataFrame:
+    """The ``(__blk, __id, __vec, __norm)`` rows every chunk-pair GEMM
+    operator starts from; ``__norm`` is the Catalyst norm expression the
+    in-task exact fold divides by."""
+    return df.select(
+        F.col(block_col).alias("__blk"),
+        F.col(id_col).alias("__id"),
+        F.col(vec_col).alias("__vec"),
+        norm(F.col(vec_col)).alias("__norm"),
+    )
+
+
+def _chunk_pairs(e: DataFrame, group_cols: list[str],
+                 chunk_rows: Column) -> DataFrame:
+    """Chunk-pair fan-out of ``e`` (``group_cols…, __n, __id, __vec,
+    __norm``; ``__n`` = rows in the row's group): each group splits into
+    ``ceil(__n / chunk_rows)`` hash-chunks ``__c`` (``xxhash64(__id)``,
+    no global row_number window), and every row is emitted once per
+    partner chunk p, keyed ``(min(__c, p), max(__c, p))`` as
+    ``(__i, __j)``. Grouping by ``group_cols + [__i, __j]`` then puts
+    every within-group pair in exactly one chunk-pair group. ``chunk_rows``
+    is a per-row Column: a literal, or an expression of ``__n``."""
+    nchunks = F.greatest(F.lit(1), F.ceil(F.col("__n") / chunk_rows)).cast("int")
+    chunk = F.pmod(F.xxhash64("__id"), nchunks).cast("int")
+    return (
+        e.withColumn("__c", chunk)
+        .withColumn("__p", F.explode(F.sequence(F.lit(0), nchunks - 1)))
+        .select(
+            *group_cols,
+            F.least("__c", "__p").alias("__i"),
+            F.greatest("__c", "__p").alias("__j"),
+            "__c", "__id", "__vec", "__norm",
+        )
+    )
+
+
 def _gemm_pair_survivors(e: DataFrame, group_cols: list[str],
                          chunk_rows: int, thr: float) -> DataFrame:
     """Chunk-pair GEMM core shared by the exact and the routed paths of
@@ -536,19 +573,7 @@ def _gemm_pair_survivors(e: DataFrame, group_cols: list[str],
 
     counts = e.groupBy(*group_cols).agg(F.count("*").alias("__n"))
     e = e.join(F.broadcast(counts), group_cols)
-    nchunks = F.greatest(F.lit(1), F.ceil(F.col("__n") / F.lit(chunk_rows))).cast("int")
-    chunk = F.pmod(F.xxhash64("__id"), nchunks).cast("int")
-    # One entry per partner chunk p: the row joins group (min(c,p), max(c,p)).
-    tagged = (
-        e.withColumn("__c", chunk)
-        .withColumn("__p", F.explode(F.sequence(F.lit(0), nchunks - 1)))
-        .select(
-            *group_cols,
-            F.least("__c", "__p").alias("__i"),
-            F.greatest("__c", "__p").alias("__j"),
-            "__c", "__id", "__vec", "__norm",
-        )
-    )
+    tagged = _chunk_pairs(e, group_cols, F.lit(chunk_rows))
 
     # GEMM stripe height (rows of G per slab) and exact-score batch
     # (pairs per cumsum call): both bound peak memory independent of
@@ -820,12 +845,7 @@ def cosine_pairs_blas(df: DataFrame, block_col: str, id_col: str,
     ``capped_topk`` regime is stamped into decisions so artifacts can't
     pass the capped output off as complete.
     """
-    e = df.select(
-        F.col(block_col).alias("__blk"),
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__vec"),
-        norm(F.col(vec_col)).alias("__norm"),
-    )
+    e = _block_rows(df, block_col, id_col, vec_col)
     thr = float(threshold)
 
     if max_block_rows is None:
@@ -893,156 +913,9 @@ def cosine_pairs_blas(df: DataFrame, block_col: str, id_col: str,
     return survivors.select("id_a", "id_b", "cosine_sim")
 
 
-def nn_top1_blas(df: DataFrame, block_col: str, id_col: str,
-                 vec_col: str, chunk_rows: int = 1024,
-                 max_block_rows: int | None = 100_000) -> DataFrame:
-    """Each row's EXACT top-1 cosine neighbor within its block
-    (deterministic argmax: score desc, neighbor id asc) — GEMM-speed
-    candidate generation, bit-exact final scoring.
-
-    Same chunk-pair decomposition as ``cosine_pairs_blas``, different
-    reduction: each chunk-pair GEMM emits, per row, every partner in the
-    group whose GEMM cosine is within ``TIE_MARGIN`` of that row's group
-    maximum (normally exactly one row; more only under near-ties). GEMM
-    and the sequential exact dot differ by < ~1.5e-14, so the row's true
-    argmax is always within the margin of its group's GEMM max and
-    therefore always emitted by its group. The union of per-group
-    candidates (~nchunks per row) is re-scored with the exact
-    expression and reduced by one window
-    argmax with the deterministic tie-break — identical output to
-    scoring all pairs exactly, at GEMM cost per candidate.
-
-    Returns (src, dst): src = every row id that has a neighbor in its
-    block, dst = its exact top-1 neighbor. The output feeds NN-graph
-    consumers (clustering, PageRank).
-
-    Oversized-block guard (mirrors ``cosine_pairs_blas``): complete
-    enumeration is O(n²) per block, so blocks beyond ``max_block_rows``
-    fail fast at runtime rather than silently job-killing at corpus
-    scale — EXACT top-1 has no sub-quadratic complete algorithm (the
-    nearest neighbor can sit at any cosine, so LSH bucketing cannot
-    guarantee it); route genuinely hot blocks through the ANN index
-    paths (IVF/PQ per-query top-k) and accept approximate neighbors, or
-    pass ``max_block_rows=None`` to accept the quadratic.
-    """
-    import pandas as pd
-    from pyspark.sql import Window
-
-    e = df.select(
-        F.col(block_col).alias("__blk"),
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__vec"),
-        norm(F.col(vec_col)).alias("__norm"),
-    )
-    # cosine is undefined against a zero vector: as a source its GEMM row
-    # is all zeros (row_max 0 emits EVERY partner), and its exact re-score
-    # is 0/0 = NaN, which Spark orders as the LARGEST double — the window
-    # argmax would pick a NaN-scored arbitrary partner. Drop zero-norm
-    # rows up front; they have no defined neighbor in either direction.
-    e = e.filter(F.col("__norm") > 0.0)
-    counts = e.groupBy("__blk").agg(F.count("*").alias("__n"))
-    e = e.join(F.broadcast(counts), "__blk")
-
-    guard = None
-    if max_block_rows is not None:
-        msg = (
-            f"nn_top1_blas: a block exceeds max_block_rows={max_block_rows}; "
-            "exact all-pairs top-1 is quadratic per block. Use a finer "
-            "block_col, the ANN index paths (ivf_topk_indexed/"
-            "pq_topk_indexed) for approximate neighbors, or pass "
-            "max_block_rows=None to accept the quadratic."
-        )
-
-        def _boom(key, pdf):  # runs only if an oversized block EXISTS
-            raise ValueError(msg)
-
-        guard = (
-            e.filter(F.col("__n") > max_block_rows)
-            .groupBy("__blk").applyInPandas(_boom, schema="src long, dst long")
-        )
-    nchunks = F.greatest(F.lit(1), F.ceil(F.col("__n") / F.lit(chunk_rows))).cast("int")
-    chunk = F.pmod(F.xxhash64("__id"), nchunks).cast("int")
-    tagged = (
-        e.withColumn("__c", chunk)
-        .withColumn("__p", F.explode(F.sequence(F.lit(0), nchunks - 1)))
-        .select(
-            "__blk",
-            F.least("__c", "__p").alias("__i"),
-            F.greatest("__c", "__p").alias("__j"),
-            "__c", "__id", "__vec", "__norm",
-        )
-    )
-
-    def _cands(key, pdf):
-        _, ci, cj = key
-        mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf["__vec"]])
-        ids = pdf["__id"].to_numpy()
-        norms = pdf["__norm"].to_numpy(dtype=np.float64)
-        # normalize BEFORE the GEMM (see _gemm_pair_survivors): entries
-        # become true cosines at any vector scale instead of raw dots
-        # that can under/overflow ahead of the norm-product division
-        mat = mat / np.where(norms == 0.0, 1.0, norms)[:, None]
-
-        def emit(g, src_ids, dst_ids):
-            # per source row: all partners within margin of its row max
-            if g.size == 0:
-                return [], []
-            row_max = g.max(axis=1, keepdims=True)
-            ia, ib = np.nonzero(g >= row_max - TIE_MARGIN)
-            return src_ids[ia], dst_ids[ib]
-
-        srcs, dsts = [], []
-        if ci == cj:
-            if len(ids) < 2:
-                return pd.DataFrame({"src": [], "dst": []}).astype("int64")
-            g = mat @ mat.T
-            np.fill_diagonal(g, -np.inf)  # a row is not its own neighbor
-            s, d = emit(g, ids, ids)
-            srcs.append(s); dsts.append(d)
-        else:
-            a_mask = (pdf["__c"] == ci).to_numpy()
-            A, B = mat[a_mask], mat[~a_mask]
-            if len(A) and len(B):
-                aid, bid = ids[a_mask], ids[~a_mask]
-                g = A @ B.T
-                s, d = emit(g, aid, bid)
-                srcs.append(s); dsts.append(d)
-                s, d = emit(g.T, bid, aid)
-                srcs.append(s); dsts.append(d)
-        if not srcs:
-            return pd.DataFrame({"src": [], "dst": []}).astype("int64")
-        return pd.DataFrame({
-            "src": np.concatenate(srcs).astype("int64"),
-            "dst": np.concatenate(dsts).astype("int64"),
-        })
-
-    cands = tagged.groupBy("__blk", "__i", "__j").applyInPandas(
-        _cands, schema="src long, dst long")
-    if guard is not None:
-        cands = cands.unionByName(guard)
-
-    keyed = e.select("__id", "__vec", "__norm")
-    exact = dot(F.col("a.__vec"), F.col("b.__vec")) / (
-        F.col("a.__norm") * F.col("b.__norm"))
-    scored = (
-        cands.join(keyed.alias("a"), cands.src == F.col("a.__id"))
-        .join(keyed.alias("b"), cands.dst == F.col("b.__id"))
-        .select("src", "dst", exact.alias("s"))
-    )
-    # belt-and-braces: zero-norm rows are filtered above, but a NaN score
-    # must never reach the argmax window (Spark sorts NaN as largest)
-    scored = scored.filter(~F.isnan(F.col("s")))
-    w = Window.partitionBy("src").orderBy(F.desc("s"), F.asc("dst"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("src", "dst")
-    )
-
-
 def cosine_topk_per_row_blas(df: DataFrame, block_col: str, id_col: str,
                              vec_col: str, k: int = 5,
-                             threshold: float = 0.0,
+                             threshold: float | None = 0.0,
                              chunk_rows: int = 1024,
                              max_block_rows: int | None = 100_000,
                              on_oversize: str = "error") -> DataFrame:
@@ -1050,10 +923,14 @@ def cosine_topk_per_row_blas(df: DataFrame, block_col: str, id_col: str,
     above ``threshold`` — the LINEAR-output near-dup listing (output ≤
     k rows per input row) that replaces the all-pairs variant when the
     pair count would be quadratic by semantics. Deterministic ordering:
-    score desc, neighbor id asc.
+    score desc, neighbor id asc. ``threshold=None`` is no score floor:
+    ``k=1, threshold=None`` is each row's exact nearest neighbour, the
+    NN graph the clustering and PageRank queries build on. A floor of
+    -1.0 is NOT the same: the exact fold of ``v`` against ``-v`` can
+    land a rounding step below -1.0 and would be dropped.
 
-    Same chunk-pair GEMM decomposition as ``nn_top1_blas``, generalized
-    reduction: each chunk-pair group emits, per row, every partner whose
+    Same chunk-pair fan-out as ``cosine_pairs_blas`` (``_chunk_pairs``),
+    top-k reduction: each chunk-pair group emits, per row, every partner whose
     GEMM cosine is within ``TIE_MARGIN`` of the row's k-th largest IN THAT
     GROUP (a true global top-k partner ranks ≤ k within any group that
     contains it — a subset rank never exceeds the global rank — so it is
@@ -1074,8 +951,11 @@ def cosine_topk_per_row_blas(df: DataFrame, block_col: str, id_col: str,
     vs 21.1 s at 4096: larger chunks DO cut candidate duplication
     (nchunks·k per row) but cost more in task granularity (fewer,
     lumpier GEMM groups under-use the 32 cores) than the smaller window
-    input saves. Zero-norm rows are dropped up
-    front (cosine undefined; same discipline as nn_top1_blas).
+    input saves. Zero-norm rows are dropped up front: cosine is
+    undefined against a zero vector (its exact score is 0/0 = NaN, which
+    Spark's window sorts as the LARGEST double), so they have no
+    neighbour in either direction, and a block with fewer than two
+    usable rows emits nothing.
 
     Returns (src, dst, cosine_sim). Oversized blocks (``max_block_rows``)
     are governed by ``on_oversize``:
@@ -1100,12 +980,7 @@ def cosine_topk_per_row_blas(df: DataFrame, block_col: str, id_col: str,
         raise ValueError(
             f"on_oversize must be route|error, got {on_oversize!r}")
 
-    e = df.select(
-        F.col(block_col).alias("__blk"),
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__vec"),
-        norm(F.col(vec_col)).alias("__norm"),
-    )
+    e = _block_rows(df, block_col, id_col, vec_col)
     e = e.filter(F.col("__norm") > 0.0)
     counts = e.groupBy("__blk").agg(F.count("*").alias("__n"))
     e = e.join(F.broadcast(counts), "__blk")
@@ -1178,21 +1053,17 @@ def cosine_topk_per_row_blas(df: DataFrame, block_col: str, id_col: str,
         F.greatest(F.ceil(F.col("__n") / F.lit(TOPK_CHUNKS_PER_BLOCK)),
                    F.lit(chunk_rows)),
         F.lit(4096))
-    nchunks = F.greatest(F.lit(1), F.ceil(F.col("__n") / eff_chunk)).cast("int")
-    chunk = F.pmod(F.xxhash64("__id"), nchunks).cast("int")
-    tagged = (
-        e.withColumn("__c", chunk)
-        .withColumn("__p", F.explode(F.sequence(F.lit(0), nchunks - 1)))
-        .select(
-            "__blk",
-            F.least("__c", "__p").alias("__i"),
-            F.greatest("__c", "__p").alias("__j"),
-            "__c", "__id", "__vec", "__norm",
-        )
-    )
+    tagged = _chunk_pairs(e, ["__blk"], eff_chunk)
 
-    thr = float(threshold)
+    thr = -np.inf if threshold is None else float(threshold)
+    # prescreen floor: finite even with no threshold, so the -inf
+    # diagonal (a row is not its own neighbor) never passes
+    pre = max(thr - TIE_MARGIN, np.finfo(np.float64).min)
     kk = int(k)
+
+    empty = pd.DataFrame({"src": pd.Series([], dtype="int64"),
+                          "dst": pd.Series([], dtype="int64"),
+                          "cosine_sim": pd.Series([], dtype="float64")})
 
     def _cands(key, pdf):
         _, ci, cj = key
@@ -1213,7 +1084,7 @@ def cosine_topk_per_row_blas(df: DataFrame, block_col: str, id_col: str,
                 kth = np.partition(g, w - kk, axis=1)[:, w - kk:w - kk + 1]
             else:
                 kth = np.full((g.shape[0], 1), -np.inf)
-            cut = np.maximum(kth - TIE_MARGIN, thr - TIE_MARGIN)
+            cut = np.maximum(kth - TIE_MARGIN, pre)
             ia, ib = np.nonzero(g >= cut)
             if not len(ia):
                 return [], [], []
@@ -1227,10 +1098,7 @@ def cosine_topk_per_row_blas(df: DataFrame, block_col: str, id_col: str,
         srcs, dsts, sims = [], [], []
         if ci == cj:
             if len(ids) < 2:
-                return pd.DataFrame({
-                    "src": pd.Series([], dtype="int64"),
-                    "dst": pd.Series([], dtype="int64"),
-                    "cosine_sim": pd.Series([], dtype="float64")})
+                return empty
             g = mat @ mat.T
             np.fill_diagonal(g, -np.inf)  # a row is not its own neighbor
             s, d, c = emit(g, ids, ids, raw, raw, norms, norms)
@@ -1248,10 +1116,7 @@ def cosine_topk_per_row_blas(df: DataFrame, block_col: str, id_col: str,
                 s, d, c = emit(g.T, bid, aid, B64, A64, nb, na)
                 srcs.append(s); dsts.append(d); sims.append(c)
         if not srcs:
-            return pd.DataFrame({
-                "src": pd.Series([], dtype="int64"),
-                "dst": pd.Series([], dtype="int64"),
-                "cosine_sim": pd.Series([], dtype="float64")})
+            return empty
         return pd.DataFrame({
             "src": np.concatenate(srcs).astype("int64"),
             "dst": np.concatenate(dsts).astype("int64"),

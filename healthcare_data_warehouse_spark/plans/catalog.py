@@ -43,7 +43,7 @@ from ..functions.expressions import (
     with_privacy_noise_hash,
 )
 from ..operators.keys import add_dense_key
-from ..sources.loaders import load_table, register_views
+from ..sources.loaders import load_table, register_views, source_fingerprint
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -297,6 +297,37 @@ _REVENUE = "l_extendedprice * (1 - l_discount)"
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
+
+
+def _derived_artifact(sf_dir: str, table: str, kind: str,
+                      build: Callable[[str], object]) -> str:
+    """Path of the temp-dir artifact (ANN index, tokenizer merges,
+    rollup) derived from ``table``: built once per source CONTENT and
+    then served. The name folds the table's ``source_fingerprint``
+    (file sizes + mtimes) into its tag, so regenerating the fixture in
+    place gets a fresh build instead of the previous corpus's artifact.
+    ``build(dir)`` writes a candidate under a pid- and thread-suffixed
+    path, and one ``os.rename`` claims the final name: a concurrent
+    builder (a bench run and an oracle check, or two server threads)
+    that loses the race discards its build and reads the winner's, and
+    no reader ever sees a half-written artifact."""
+    import hashlib
+    import os
+    import shutil
+    import tempfile
+    import threading
+
+    ident = f"{os.path.abspath(sf_dir)}|{source_fingerprint(sf_dir, (table,))}"
+    tag = hashlib.md5(ident.encode()).hexdigest()[:12]
+    path = os.path.join(tempfile.gettempdir(), f"hdw_{kind}_{tag}")
+    if not os.path.exists(path):
+        build_dir = f"{path}.build{os.getpid()}.{threading.get_ident()}"
+        build(build_dir)
+        try:
+            os.rename(build_dir, path)
+        except OSError:  # another builder claimed the name first
+            shutil.rmtree(build_dir, ignore_errors=True)
+    return path
 
 
 # ===========================================================================
@@ -3199,19 +3230,21 @@ def embedding_nn_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax: score desc, id asc), and connected components over the NN
     graph yield cluster assignments (component id = min member id).
 
-    Distributed shape: GEMM chunk-pair candidate generation with exact
-    re-score and deterministic argmax (similarity.nn_top1_blas — same
-    margin-superset technique as dedup_embedding_cosine, so the NN edge
-    set is bit-identical to scoring every pair with the expression dot)
-    → iterative min-label propagation
+    Distributed shape: exact top-1 per row, no score floor
+    (similarity.cosine_topk_per_row_blas at k=1, threshold=None — GEMM
+    chunk-pair candidates scored in-task with the exact fold, so the NN
+    edge set is bit-identical to scoring every pair with the expression
+    dot) → iterative min-label propagation
     (operators.graph.connected_components, one shuffle per round,
     lineage checkpoint-truncated). The oracle replays the exact same
     semantics with a recursive-CTE transitive closure."""
     from ..operators.graph import connected_components
-    from ..operators.similarity import nn_top1_blas
+    from ..operators.similarity import cosine_topk_per_row_blas
 
     e = _t(spark, sf_dir, "embeddings")
-    nn = nn_top1_blas(e, "label", "vec_id", "embedding")
+    nn = cosine_topk_per_row_blas(
+        e, "label", "vec_id", "embedding", k=1, threshold=None,
+    ).select("src", "dst")
     comp = connected_components(nn, max_iter=50)
     sizes = comp.groupBy("component").agg(F.count("*").alias("cluster_size"))
     return (
@@ -3457,14 +3490,15 @@ def knn_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic cost that motivates the approximate path. Runs through
     ``cosine_topk_per_row_blas`` with a constant block (the whole corpus
     is one block — fine at gate scale, guarded at 100k rows where the
-    IVF path takes over). threshold=-1 keeps every neighbor: a global
-    top-k has no natural score floor."""
+    IVF path takes over). threshold=None keeps every neighbor: a global
+    top-k has no natural score floor, and -1.0 is not "none" — the exact
+    fold of v against -v can land a rounding step below -1.0."""
     from ..operators.similarity import cosine_topk_per_row_blas
 
     e = _t(spark, sf_dir, "embeddings").withColumn("__all", F.lit(1))
     return cosine_topk_per_row_blas(
         e, block_col="__all", id_col="vec_id", vec_col="embedding",
-        k=5, threshold=-1.0)
+        k=5, threshold=None)
 
 
 @query(
@@ -3555,23 +3589,19 @@ def ann_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-k the 100 TB way: the KMeans quantizer runs once
-    at ingest (index build, cached per sf_dir) and materializes list_id as
-    a PARTITION column; the query scans only the n_probe nearest lists —
-    partition pruning, not a full-corpus filter."""
-    import hashlib
-    import os
-    import tempfile
-
+    at ingest (index build, cached per corpus content by
+    ``_derived_artifact``) and materializes list_id as a PARTITION
+    column; the query scans only the n_probe nearest lists — partition
+    pruning, not a full-corpus filter."""
     from ..operators.similarity import ivf_build_index, ivf_topk_indexed
 
     emb = _t(spark, sf_dir, "embeddings")
     if emb.isEmpty():  # backfill edge: nothing to index, nothing to probe
         return emb.select(
             "vec_id", "label", F.lit(0.0).alias("cosine_sim")).limit(0)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    index_dir = os.path.join(tempfile.gettempdir(), f"hdw_ivf_{tag}")
-    if not os.path.exists(os.path.join(index_dir, "centroids.json")):
-        ivf_build_index(emb, index_dir, n_lists=16)
+    index_dir = _derived_artifact(
+        sf_dir, "embeddings", "ivf",
+        lambda d: ivf_build_index(emb, d, n_lists=16))
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     # knobless call: n_probe resolves from the measured recall table to
     # hit the 0.9 default target (probe 12/16, 0.97 measured recall)
@@ -4461,40 +4491,25 @@ def vocab_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     breaks the gate.
 
     The merge table is a tokenizer ARTIFACT: built once per corpus
-    version at ingest, then served — same content-keyed cache +
-    atomic-claim discipline as ann_pq_topk's index (regenerating the
-    fixture in place invalidates the cache; concurrent harness
-    processes race one os.replace and the loser reads the winner's).
-    ``vocab_bpe_merges`` stays un-cached on purpose — it times the
+    version at ingest, then served (``_derived_artifact``: content-keyed,
+    atomically claimed — regenerating the fixture in place invalidates
+    it). ``vocab_bpe_merges`` stays un-cached on purpose — it times the
     build itself."""
-    import hashlib
-    import json as _json
-    import os as _os
-    import tempfile as _tempfile
+    import json
+    import os
 
     from ..operators.bpe import bpe_segment, learn_bpe_merges
 
     d = _t(spark, sf_dir, "documents")
-    src = _os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = _os.stat(src)
-        stamp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        stamp = str(sorted(
-            (f, _os.stat(_os.path.join(src, f)).st_mtime_ns)
-            for f in _os.listdir(src)) if _os.path.isdir(src) else "")
-    tag = hashlib.md5(
-        f"{_os.path.abspath(sf_dir)}|{stamp}|k8".encode()).hexdigest()[:12]
-    cache = _os.path.join(_tempfile.gettempdir(), f"hdw_bpe_{tag}.json")
-    if _os.path.exists(cache):
-        with open(cache) as fh:
-            merges = [tuple(m) for m in _json.load(fh)]
-    else:
-        merges = learn_bpe_merges(d, num_merges=8)
-        tmp = f"{cache}.build{_os.getpid()}"
-        with open(tmp, "w") as fh:
-            _json.dump(merges, fh)
-        _os.replace(tmp, cache)
+
+    def build(path):
+        os.makedirs(path, exist_ok=True)
+        with open(os.path.join(path, "merges.json"), "w") as fh:
+            json.dump(learn_bpe_merges(d, num_merges=8), fh)
+
+    path = _derived_artifact(sf_dir, "documents", "bpe8", build)
+    with open(os.path.join(path, "merges.json")) as fh:
+        merges = [tuple(m) for m in json.load(fh)]
     return bpe_segment(d, merges)
 
 
@@ -7436,10 +7451,6 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored-code ADC lookup (m element_at sums — no KMeans fit, no
     per-row float vector math) + exact cosine re-rank of the refine
     set."""
-    import hashlib
-    import os
-    import tempfile
-
     from ..operators.similarity import pq_build_index, pq_topk_indexed
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -7447,33 +7458,9 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     if qrow is None:  # empty table OR query vector absent: nothing to probe
         return emb.select(
             "vec_id", "label", F.lit(0.0).alias("cosine_sim")).limit(0)
-    # Cache key covers CONTENT, not just the path (mtime+size of the
-    # source parquet): regenerating the fixture in place invalidates the
-    # cached index instead of silently serving the previous corpus.
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        stamp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:  # directory-style table: stamp from member files
-        stamp = str(sorted(
-            (f, os.stat(os.path.join(src, f)).st_mtime_ns)
-            for f in os.listdir(src)) if os.path.isdir(src) else "")
-    tag = hashlib.md5(f"{os.path.abspath(sf_dir)}|{stamp}".encode()).hexdigest()[:12]
-    index_dir = os.path.join(tempfile.gettempdir(), f"hdw_pq_{tag}")
-    if not os.path.exists(os.path.join(index_dir, "codebooks.json")):
-        # Build under a pid-suffixed dir, then atomically claim the final
-        # name — two concurrent harness processes (bench + oracle-check)
-        # each build their own candidate and exactly one rename wins; the
-        # loser discards its build and reads the winner's. Never a
-        # half-written index at the final path.
-        import shutil
-
-        build_dir = f"{index_dir}.build{os.getpid()}"
-        pq_build_index(emb, build_dir, m=8, codebook_k=16)
-        try:
-            os.rename(build_dir, index_dir)
-        except OSError:  # another process won the claim
-            shutil.rmtree(build_dir, ignore_errors=True)
+    index_dir = _derived_artifact(
+        sf_dir, "embeddings", "pq",
+        lambda d: pq_build_index(emb, d, m=8, codebook_k=16))
     # knobless call: refine resolves from the measured recall table to
     # hit the 0.9 default target (shortlist 80*k, 0.96 measured recall)
     return pq_topk_indexed(spark, index_dir, qrow[0], k=10, exclude_id=0)
@@ -7496,40 +7483,25 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rollup_navigated_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly order trend answered by the AGGREGATE NAVIGATOR
     (plans/navigator.py): a (month, status)-grain rollup of mergeable
-    partial states materializes once per fact version (content-stamped
-    cache, atomic-rename claim — same discipline as ann_pq_topk's
-    index), and this query's coarser (month) grain re-aggregates those
+    partial states materializes once per fact version
+    (``_derived_artifact``: content-stamped, atomically claimed), and
+    this query's coarser (month) grain re-aggregates those
     partials — the plan reads ONLY the rollup parquet, never orders.
     Bit-exact vs the fact-level oracle because the stored sums are
     DECIMAL (associative): sum-of-sums equals the one-shot sum. The
     routing is what Catalyst lacks natively (materialized-view
     rewrite); tests/test_navigator.py pins both the equality and the
     no-fact-scan plan shape."""
-    import hashlib
-    import os as _os
-    import shutil
-    import tempfile
-
     from .navigator import Rollup, build_rollup, month_of, navigate, pick_rollup
 
-    src = _os.path.join(sf_dir, "orders.parquet")
-    try:
-        st = _os.stat(src)
-        stamp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        stamp = ""
-    tag = hashlib.md5(f"{_os.path.abspath(sf_dir)}|{stamp}".encode()).hexdigest()[:12]
-    path = _os.path.join(tempfile.gettempdir(), f"hdw_rollup_{tag}")
-    rollup = Rollup("orders_month_status", path, ("month", "o_orderstatus"))
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
+    grain = ["month", "o_orderstatus"]
+
+    def build(path):
         o = _t(spark, sf_dir, "orders").withColumn("month", month_of("o_orderdate"))
-        build_dir = f"{path}.build{_os.getpid()}"
-        build_rollup(o, ["month", "o_orderstatus"], "o_totalprice",
-                     build_dir, name=rollup.name)
-        try:
-            _os.rename(build_dir, path)
-        except OSError:
-            shutil.rmtree(build_dir, ignore_errors=True)
+        build_rollup(o, grain, "o_totalprice", path)
+
+    path = _derived_artifact(sf_dir, "orders", "rollup", build)
+    rollup = Rollup("orders_month_status", path, tuple(grain))
     chosen = pick_rollup([rollup], ["month"])
     assert chosen is not None
     return navigate(spark, chosen, ["month"])
@@ -8566,7 +8538,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors sit at the center of their similarity neighborhood — the
     canonical-representative signal near-dup cluster keep-policies use
     beyond plain min-id. Edges are the same per-label top-1 NN pairs
-    embedding_nn_clusters builds.
+    embedding_nn_clusters builds (cosine_topk_per_row_blas, k=1, no
+    score floor).
 
     Hash-green: per-iteration in-neighbor sums run over 1e-12
     integer micro-units summed exactly in DECIMAL(38,0) (associative —
@@ -8580,10 +8553,12 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     term ((1-0.85) + 0.85*(in + 0.0)) mirrors literally; the numpy
     replica pytest additionally pins values to 1e-9."""
     from ..operators.graph import pagerank
-    from ..operators.similarity import nn_top1_blas
+    from ..operators.similarity import cosine_topk_per_row_blas
 
     e = _t(spark, sf_dir, "embeddings")
-    nn = nn_top1_blas(e, "label", "vec_id", "embedding")
+    nn = cosine_topk_per_row_blas(
+        e, "label", "vec_id", "embedding", k=1, threshold=None,
+    ).select("src", "dst")
     return pagerank(nn).orderBy(F.desc("rank"), F.asc("node")).limit(50)
 
 

@@ -36,23 +36,21 @@ GOLD_QUERIES = (
 
 
 def materialize_gold(spark: SparkSession, sf_dir: str, gold_dir: str,
-                     queries: tuple[str, ...] = GOLD_QUERIES,
-                     pii_check: bool = True) -> dict:
+                     queries: tuple[str, ...] = GOLD_QUERIES) -> dict:
     """Run each gold query and persist its (small) result as parquet.
     Returns the manifest (also written to gold_dir/_manifest.json).
 
-    ``pii_check=True`` (default) enforces the SURVEY §7.3 invariant on
-    every card before it is written: the physical plan must not scan a
+    Every card is checked against the SURVEY §7.3 invariant before
+    anything is written: the physical plan must not scan a
     PII column (gold is post-staging — only the dim builders are
     licensed to read raw ``c_name``, and only to hash it). A violating
     query raises ``PIILeakError`` and nothing is materialized for it."""
     from ..operators.pii_guard import assert_no_pii_scan
 
     qs = catalog.queries()
-    if pii_check:
-        # Pre-pass: raises before anything is materialized.
-        for name in queries:
-            assert_no_pii_scan(qs[name](spark, sf_dir))
+    # Pre-pass: raises before anything is materialized.
+    for name in queries:
+        assert_no_pii_scan(qs[name](spark, sf_dir))
     manifest: dict = {"sf_dir": sf_dir, "tables": {}}
     small_file_rows = 100_000
     for name in queries:

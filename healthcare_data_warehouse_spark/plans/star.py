@@ -156,7 +156,7 @@ def fact_orders(spark: SparkSession, sf_dir: str | None = None,
     # future edit that threads a raw PII column through fails here, at
     # build time, instead of silently shipping it downstream. Gold and
     # serving plans get the stricter scan-level check
-    # (plans/gold.py materialize_gold pii_check).
+    # (plans/gold.py materialize_gold's pre-pass).
     from ..operators.pii_guard import DEFAULT_PII, PIILeakError
     leaked_out = set(fact.columns) & set(DEFAULT_PII)
     if leaked_out:

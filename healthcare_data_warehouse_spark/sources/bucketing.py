@@ -155,30 +155,6 @@ def write_bucketed(df: DataFrame, table: str, key: str, buckets: int = 8,
         write_bucket_spec(loc, buckets, key)
 
 
-def _source_fingerprint(sf_dir: str, tables: tuple[str, ...]) -> str:
-    """Stable digest of the SOURCE parquet files a layout was built from
-    (relative name + size + mtime_ns of every file under each table
-    path). Folding this into the layout tag means a fixture regenerated
-    IN PLACE at the same path gets a different tag — the stale
-    materialization is simply never attached (ensure_* builds fresh)
-    instead of silently serving old data."""
-    parts: list[str] = []
-    for t in tables:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.isdir(p):
-            for root, _dirs, files in os.walk(p):
-                for f in sorted(files):
-                    if f.startswith((".", "_")):
-                        continue
-                    st = os.stat(os.path.join(root, f))
-                    rel = os.path.relpath(os.path.join(root, f), p)
-                    parts.append(f"{t}/{rel}:{st.st_size}:{st.st_mtime_ns}")
-        elif os.path.exists(p):
-            st = os.stat(p)
-            parts.append(f"{t}:{st.st_size}:{st.st_mtime_ns}")
-    return "|".join(parts)
-
-
 def _order_layout_specs(spark: SparkSession, sf_dir: str):
     """(table, key, df_fn) for the two order-grained layout tables —
     names are content-addressed on the absolute sf_dir PLUS a source
@@ -187,10 +163,10 @@ def _order_layout_specs(spark: SparkSession, sf_dir: str):
     fixture regeneration invalidates the old layout by construction."""
     import hashlib
 
-    from .loaders import load_table
+    from .loaders import load_table, source_fingerprint
 
     ident = (os.path.abspath(sf_dir) + "\n"
-             + _source_fingerprint(sf_dir, ("orders", "lineitem")))
+             + source_fingerprint(sf_dir, ("orders", "lineitem")))
     tag = hashlib.md5(ident.encode()).hexdigest()[:12]
     return [
         (f"li_bkt_{tag}", "l_orderkey",

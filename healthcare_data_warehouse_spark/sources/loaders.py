@@ -76,6 +76,30 @@ def _table_stamp(path: str, _depth: int = 2):
         return None
 
 
+def source_fingerprint(sf_dir: str, tables: tuple[str, ...]) -> str:
+    """Stable digest of the SOURCE parquet files a layout was built from
+    (relative name + size + mtime_ns of every file under each table
+    path). Folding this into the layout tag means a fixture regenerated
+    IN PLACE at the same path gets a different tag — the stale
+    materialization is simply never attached (ensure_* builds fresh)
+    instead of silently serving old data."""
+    parts: list[str] = []
+    for t in tables:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isdir(p):
+            for root, _dirs, files in os.walk(p):
+                for f in sorted(files):
+                    if f.startswith((".", "_")):
+                        continue
+                    st = os.stat(os.path.join(root, f))
+                    rel = os.path.relpath(os.path.join(root, f), p)
+                    parts.append(f"{t}/{rel}:{st.st_size}:{st.st_mtime_ns}")
+        elif os.path.exists(p):
+            st = os.stat(p)
+            parts.append(f"{t}:{st.st_size}:{st.st_mtime_ns}")
+    return "|".join(parts)
+
+
 def _ensure_nanos_conf(spark: SparkSession) -> None:
     """The events table ships nanosecond INT64 timestamps; the batch
     reader needs ``nanosAsLong`` at SCAN time, so it must hold on every

@@ -205,53 +205,6 @@ def test_cosine_pairs_blas_matches_naive_pair_join(spark):
                 f"chunk_rows={chunk_rows}: score not bit-identical at {k}")
 
 
-def test_nn_top1_blas_matches_naive_argmax(spark):
-    """GEMM candidate generation + exact re-score must produce exactly
-    the naive all-pairs argmax edges (score desc, dst asc tie-break),
-    for both the single-chunk and multi-chunk regimes."""
-    from pyspark.sql import Window
-    from healthcare_data_warehouse_spark.operators.similarity import (
-        dot, nn_top1_blas, norm)
-    from healthcare_data_warehouse_spark.sources.loaders import load_table
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    e = emb.select("vec_id", "label", "embedding",
-                   norm(F.col("embedding")).alias("__n"))
-    a, b = e.alias("a"), e.alias("b")
-    sim = dot(F.col("a.embedding"), F.col("b.embedding")) / (
-        F.col("a.__n") * F.col("b.__n"))
-    sym = (a.join(b, (F.col("a.label") == F.col("b.label"))
-                  & (F.col("a.vec_id") != F.col("b.vec_id")))
-           .select(F.col("a.vec_id").alias("src"),
-                   F.col("b.vec_id").alias("dst"), sim.alias("s")))
-    w = Window.partitionBy("src").orderBy(F.desc("s"), F.asc("dst"))
-    naive = {(r["src"], r["dst"]) for r in (
-        sym.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1).select("src", "dst").collect())}
-
-    for chunk_rows in (11, 100000):
-        got = {(r["src"], r["dst"]) for r in nn_top1_blas(
-            emb, "label", "vec_id", "embedding",
-            chunk_rows=chunk_rows).collect()}
-        assert got == naive, f"chunk_rows={chunk_rows}"
-
-
-def test_nn_top1_blas_exact_ties_break_on_lowest_id(spark):
-    """Cloned vectors make cosine EXACTLY 1.0 against multiple partners —
-    the argmax must break ties on the lowest neighbor id, in both chunk
-    regimes (ties land in the same and in different chunk-pair groups)."""
-    from healthcare_data_warehouse_spark.operators.similarity import nn_top1_blas
-
-    v = [1.0, 2.0, 3.0, 4.0]
-    w = [4.0, -3.0, 2.0, -1.0]  # orthogonal-ish distractor
-    rows = [(0, 1, v), (1, 1, v), (2, 1, v), (3, 1, w)]
-    df = spark.createDataFrame(rows, "vec_id long, label int, embedding array<float>")
-    for chunk_rows in (1, 2, 100):
-        got = {r["src"]: r["dst"] for r in nn_top1_blas(
-            df, "label", "vec_id", "embedding", chunk_rows=chunk_rows).collect()}
-        assert got[0] == 1 and got[1] == 0 and got[2] == 0, (chunk_rows, got)
-
-
 def test_lsh_multitable_scores_exact_and_beats_single_table(spark):
     """Multi-table SRP-LSH: candidate scores are exact cosines, the
     result is a subset of the brute-force ordering, and the L-table
@@ -512,75 +465,19 @@ def test_routed_ivf_params_cost_model_cutover():
     assert routed_ivf_params(260_000)["n_lists"] == 2 * k130["n_lists"]
 
 
-def test_nn_top1_oversize_guard(spark):
-    """nn_top1_blas fails fast on an oversized block (exact top-1 has no
-    sub-quadratic complete path) and matches the unguarded result when
-    every block is under the cap."""
-    import numpy as np
-    import pytest
-    from pyspark.sql import functions as F
-    from pyspark.errors import PythonException
-
-    from healthcare_data_warehouse_spark.operators.similarity import (
-        nn_top1_blas,
-    )
-
-    rng = np.random.default_rng(13)
-    rows = [(i, "L", [float(x) for x in rng.standard_normal(8)])
-            for i in range(30)]
-    df = spark.createDataFrame(
-        rows, "vec_id long, label string, embedding array<float>")
-    kw = dict(block_col="label", id_col="vec_id", vec_col="embedding")
-
-    base = sorted((r["src"], r["dst"]) for r in nn_top1_blas(
-        df, max_block_rows=None, **kw).collect())
-    under = sorted((r["src"], r["dst"]) for r in nn_top1_blas(
-        df, max_block_rows=100, **kw).collect())
-    assert under == base
-    with pytest.raises(PythonException, match="max_block_rows"):
-        nn_top1_blas(df, max_block_rows=10, **kw).collect()
-
-
-def test_nn_top1_blas_drops_zero_norm_rows(spark):
-    """A zero vector has undefined cosine against everything: its GEMM
-    row is all zeros (row_max 0 would emit EVERY partner) and its exact
-    re-score is 0/0 = NaN, which Spark orders as the LARGEST double —
-    without the guard the window argmax picks a NaN-scored arbitrary
-    partner. Zero-norm rows must appear neither as src nor as dst, and
-    the remaining rows' edges must be unaffected."""
-    from healthcare_data_warehouse_spark.operators.similarity import nn_top1_blas
-
-    v = [1.0, 2.0, 3.0, 4.0]
-    w = [4.0, 3.0, 2.0, 1.0]
-    z = [0.0, 0.0, 0.0, 0.0]
-    rows = [(0, 1, v), (1, 1, w), (2, 1, z), (3, 1, z)]
-    df = spark.createDataFrame(
-        rows, "vec_id long, label int, embedding array<float>")
-    for chunk_rows in (1, 100):
-        got = {r["src"]: r["dst"] for r in nn_top1_blas(
-            df, "label", "vec_id", "embedding",
-            chunk_rows=chunk_rows).collect()}
-        assert got == {0: 1, 1: 0}, (chunk_rows, got)
-
-    # a block left with <2 usable rows after the zero-norm drop emits
-    # nothing rather than a degenerate edge
-    only_zero = spark.createDataFrame(
-        [(0, 1, z), (1, 1, v)], "vec_id long, label int, embedding array<float>")
-    assert nn_top1_blas(only_zero, "label", "vec_id", "embedding").count() == 0
-
-
 def test_cosine_topk_per_row_matches_naive_window(spark):
     """GEMM group-top-k candidates + exact re-score must equal the naive
     all-pairs top-k (threshold, score desc, dst asc) in both single- and
     multi-chunk regimes — including tiny chunk sizes that maximize the
-    number of chunk-pair groups a true neighbor can hide in."""
+    number of chunk-pair groups a true neighbor can hide in. ``(1,
+    None)`` is the exact nearest-neighbor graph (no score floor) that
+    embedding_nn_clusters and graph_pagerank build on."""
     from pyspark.sql import Window
     from healthcare_data_warehouse_spark.operators.similarity import (
         cosine_topk_per_row_blas, dot, norm)
     from healthcare_data_warehouse_spark.sources.loaders import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    k, thr = 3, 0.3
     e = emb.select("vec_id", "label", "embedding",
                    norm(F.col("embedding")).alias("__n"))
     a, b = e.alias("a"), e.alias("b")
@@ -589,19 +486,92 @@ def test_cosine_topk_per_row_matches_naive_window(spark):
     sym = (a.join(b, (F.col("a.label") == F.col("b.label"))
                   & (F.col("a.vec_id") != F.col("b.vec_id")))
            .select(F.col("a.vec_id").alias("src"),
-                   F.col("b.vec_id").alias("dst"), sim.alias("s"))
-           .filter(F.col("s") >= thr))
+                   F.col("b.vec_id").alias("dst"), sim.alias("s")))
     w = Window.partitionBy("src").orderBy(F.desc("s"), F.asc("dst"))
-    naive = {(r["src"], r["dst"], r["s"]) for r in (
-        sym.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k).collect())}
+    for k, thr in ((3, 0.3), (1, None)):
+        floored = sym if thr is None else sym.filter(F.col("s") >= thr)
+        naive = {(r["src"], r["dst"], r["s"]) for r in (
+            floored.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= k).collect())}
 
-    for chunk_rows in (7, 100000):
-        got = {(r["src"], r["dst"], r["cosine_sim"]) for r in
-               cosine_topk_per_row_blas(
-                   emb, "label", "vec_id", "embedding", k=k,
-                   threshold=thr, chunk_rows=chunk_rows).collect()}
-        assert got == naive, chunk_rows
+        for chunk_rows in (7, 100000):
+            got = {(r["src"], r["dst"], r["cosine_sim"]) for r in
+                   cosine_topk_per_row_blas(
+                       emb, "label", "vec_id", "embedding", k=k,
+                       threshold=thr, chunk_rows=chunk_rows).collect()}
+            assert got == naive, (k, thr, chunk_rows)
+
+
+def test_cosine_top1_exact_ties_break_on_lowest_id(spark):
+    """Cloned vectors make cosine EXACTLY 1.0 against multiple partners —
+    the k=1 neighbor must break ties on the lowest neighbor id, in every
+    chunk regime (ties land in the same and in different chunk-pair
+    groups)."""
+    from healthcare_data_warehouse_spark.operators.similarity import (
+        cosine_topk_per_row_blas)
+
+    v = [1.0, 2.0, 3.0, 4.0]
+    w = [4.0, -3.0, 2.0, -1.0]  # orthogonal-ish distractor
+    rows = [(0, 1, v), (1, 1, v), (2, 1, v), (3, 1, w)]
+    df = spark.createDataFrame(rows, "vec_id long, label int, embedding array<float>")
+    for chunk_rows in (1, 2, 100):
+        got = {r["src"]: r["dst"] for r in cosine_topk_per_row_blas(
+            df, "label", "vec_id", "embedding", k=1, threshold=None,
+            chunk_rows=chunk_rows).collect()}
+        assert got[0] == 1 and got[1] == 0 and got[2] == 0, (chunk_rows, got)
+
+
+def test_cosine_top1_drops_zero_norm_rows(spark):
+    """A zero vector has undefined cosine against everything: its exact
+    score is 0/0 = NaN, which Spark orders as the LARGEST double, so
+    without the drop the window would pick a NaN-scored arbitrary
+    partner. Zero-norm rows must appear neither as src nor as dst, and
+    the remaining rows' edges must be unaffected."""
+    from healthcare_data_warehouse_spark.operators.similarity import (
+        cosine_topk_per_row_blas)
+
+    v = [1.0, 2.0, 3.0, 4.0]
+    w = [4.0, 3.0, 2.0, 1.0]
+    z = [0.0, 0.0, 0.0, 0.0]
+    rows = [(0, 1, v), (1, 1, w), (2, 1, z), (3, 1, z)]
+    df = spark.createDataFrame(
+        rows, "vec_id long, label int, embedding array<float>")
+    for chunk_rows in (1, 100):
+        got = {r["src"]: r["dst"] for r in cosine_topk_per_row_blas(
+            df, "label", "vec_id", "embedding", k=1, threshold=None,
+            chunk_rows=chunk_rows).collect()}
+        assert got == {0: 1, 1: 0}, (chunk_rows, got)
+
+    # a block left with <2 usable rows after the zero-norm drop emits
+    # nothing rather than a degenerate edge
+    only_zero = spark.createDataFrame(
+        [(0, 1, z), (1, 1, v)], "vec_id long, label int, embedding array<float>")
+    assert cosine_topk_per_row_blas(
+        only_zero, "label", "vec_id", "embedding", k=1,
+        threshold=None).count() == 0
+
+
+def test_knn_join_exact_keeps_antiparallel_neighbors(spark, tmp_path):
+    """knn_join_exact has no score floor. For v = (1, 1, 1) against -v
+    the exact fold gives -3 / (sqrt(3) * sqrt(3)) = -1.0000000000000002,
+    a rounding step below -1.0, so a floor of -1.0 would drop both
+    edges of a two-row corpus; its oracle keeps them."""
+    import pandas as pd
+
+    from healthcare_data_warehouse_spark.plans import catalog
+
+    v = [1.0, 1.0, 1.0]
+    pd.DataFrame({
+        "vec_id": pd.Series([0, 1], dtype="int64"),
+        "embedding": [np.array(v, dtype=np.float32),
+                      -np.array(v, dtype=np.float32)],
+        "label": pd.Series([1, 1], dtype="int32"),
+    }).to_parquet(tmp_path / "embeddings.parquet")
+    got = {(r["src"], r["dst"]): r["cosine_sim"] for r in
+           catalog.queries()["knn_join_exact"](spark, str(tmp_path)).collect()}
+    assert set(got) == {(0, 1), (1, 0)}
+    assert all(s == -3.0 / (np.sqrt(3.0) * np.sqrt(3.0)) < -1.0
+               for s in got.values())
 
 
 def test_cosine_topk_per_row_output_is_linear_bounded(spark):
@@ -769,14 +739,22 @@ def test_cosine_topk_oversized_blocks_route_through_ivf(spark):
 
 
 def test_cosine_topk_on_oversize_error_still_raises(spark):
-    """Default on_oversize='error' keeps the fail-loud guard."""
+    """Default on_oversize='error' keeps the fail-loud guard, and with
+    every block under the cap the guarded result equals the unguarded
+    one (``max_block_rows=None``)."""
     import pytest
-    from py4j.protocol import Py4JJavaError
     from healthcare_data_warehouse_spark.operators.similarity import (
         cosine_topk_per_row_blas)
     from healthcare_data_warehouse_spark.sources.loaders import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
+    kw = dict(block_col="label", id_col="vec_id", vec_col="embedding",
+              k=1, threshold=None)
+    base = sorted(cosine_topk_per_row_blas(
+        emb, max_block_rows=None, **kw).collect())
+    under = sorted(cosine_topk_per_row_blas(
+        emb, max_block_rows=100, **kw).collect())
+    assert under == base
     with pytest.raises(Exception, match="max_block_rows"):
         cosine_topk_per_row_blas(
             emb, "label", "vec_id", "embedding", k=3, threshold=0.3,

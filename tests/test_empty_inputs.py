@@ -60,7 +60,7 @@ RISKY = [
     "text_normalize",           # pure projection over empty corpus
     "sample_weighted",          # weighted top-n window over empty groups
     "dedup_embedding_cosine",   # GEMM chunk-pair groups over zero vectors
-    "embedding_nn_clusters",    # nn_top1_blas + CC loop over zero vectors
+    "embedding_nn_clusters",    # exact top-1 + CC loop over zero vectors
     "graph_pagerank",           # power iteration over an empty NN graph
     "vocab_bpe_merges",         # BPE argmax loop over an empty vocabulary
     "vocab_bpe_segment",        # zero-merge fold applied to zero documents

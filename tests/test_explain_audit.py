@@ -79,3 +79,21 @@ def test_a_regenerated_section_is_byte_identical(spark):
     assert "Exchange" in first and "plan_id=N" in first
     assert not re.search(r"#\d|plan_id=\d|RDD\[\d", first)
     assert REPO not in first
+
+
+def test_lambda_names_do_not_leak_into_a_section(spark):
+    """PySpark names each lambda variable of ``zip_with``/``aggregate``
+    from a JVM-global counter (``lambda x_3#``), so the second build of a
+    query in one session prints other names than the first. The section
+    must not depend on what the session built before it."""
+    import re
+
+    from healthcare_data_warehouse_spark.plans import catalog
+
+    q = catalog.queries()["knn_join_exact"]
+    first, second = ("\n".join(query_section("knn_join_exact",
+                                             q(spark, SF_SMOKE)))
+                     for _ in range(2))
+    assert first == second
+    assert "lambda x_N#" in first
+    assert not re.search(r"lambda [A-Za-z]+_\d", first)

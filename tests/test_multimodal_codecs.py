@@ -15,7 +15,6 @@ from healthcare_data_warehouse_spark.operators.multimodal import (
     decode_ppm,
     decode_wav,
     image_features,
-    ppm_resize,
     synth_ppm,
     synth_wav,
 )
@@ -37,20 +36,13 @@ def test_wav_roundtrip_is_bit_exact():
         assert np.array_equal(x, want)  # decode returns the exact samples
 
 
-def test_ppm_decode_and_resize_pixels():
+def test_ppm_decode_pixels():
     p = synth_ppm(7, width=16, height=8)
     img = decode_ppm(p)
     assert img.shape == (8, 16, 3)
     # corner pixels follow the synthesis formula
     assert img[0, 0, 0] == 0 and img[0, 15, 0] == 255
     assert img[7, 0, 1] == 255 and img[0, 0, 2] == (0 + 0 + 7) % 256
-
-    small = decode_ppm(ppm_resize(p, 4, 2))
-    assert small.shape == (2, 4, 3)
-    # nearest-neighbor: output (y,x) samples input (y*8//2, x*16//4)
-    for y in range(2):
-        for x in range(4):
-            assert np.array_equal(small[y, x], img[(y * 8) // 2, (x * 16) // 4])
 
 
 def test_spark_audio_features_match_numpy(spark):

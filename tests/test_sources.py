@@ -118,20 +118,14 @@ def test_multimodal_decode_stub_raises():
         decode_media(b"\x89PNG")
 
 
-def test_multimodal_resize_and_frames(spark):
+def test_multimodal_frames(spark):
     from healthcare_data_warehouse_spark.operators.multimodal import (
         attach_binary,
-        resize,
         sample_frames,
     )
     from healthcare_data_warehouse_spark.sources.loaders import load_table
 
     d = attach_binary(load_table(spark, SF_SMOKE, "documents").limit(20))
-    r = resize(d, 64, 64)
-    assert r.count() == 20
-    row = r.first()
-    assert row["out_w"] == 64 and len(row["payload"]) >= 1
-
     frames = sample_frames(d, every_n_bytes=32)
     assert frames.count() > 20  # explode-shaped: more frames than docs
     per_doc = frames.groupBy("doc_id").count().collect()

@@ -156,6 +156,77 @@ def test_ann_pq_topk_handles_absent_query_vector(spark, tmp_path):
     assert set(out.columns) == {"vec_id", "label", "cosine_sim"}
 
 
+def test_ann_ivf_topk_follows_a_fixture_regenerated_in_place(spark, tmp_path):
+    """The IVF index is cached per corpus CONTENT, not per path: after
+    embeddings.parquet is rewritten in place (labels shifted), the query
+    must answer from the new rows instead of the index built over the
+    old ones."""
+    from healthcare_data_warehouse_spark.plans.catalog import queries
+
+    path = str(tmp_path / "embeddings.parquet")
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    emb.write.mode("overwrite").parquet(path)
+    first = queries()["ann_ivf_topk"](spark, str(tmp_path)).collect()
+    assert first and all(r["label"] < 1000 for r in first)
+
+    emb.withColumn("label", F.col("label") + 1000).write.mode(
+        "overwrite").parquet(path)
+    second = queries()["ann_ivf_topk"](spark, str(tmp_path)).collect()
+    assert second and all(r["label"] >= 1000 for r in second)
+
+
+def test_derived_artifact_concurrent_builders_agree(tmp_path):
+    """Builders racing on one cold artifact (server threads asking for
+    the same index) each build under their own path and one rename
+    wins: every caller gets the same complete artifact and no build
+    directory is left behind."""
+    import glob
+    import os
+    import shutil
+    import sys
+    import threading
+    import time
+
+    from healthcare_data_warehouse_spark.plans.catalog import _derived_artifact
+
+    (tmp_path / "t.parquet").write_bytes(b"x")
+
+    def build(d):
+        os.makedirs(d)
+        time.sleep(0.01)
+        with open(os.path.join(d, "part"), "w") as fh:
+            fh.write("complete")
+
+    paths, errors = [], []
+
+    def call():
+        try:
+            paths.append(_derived_artifact(str(tmp_path), "t", "stress", build))
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=call) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old)
+    try:
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        assert len(paths) == 16 and len(set(paths)) == 1
+        with open(os.path.join(paths[0], "part")) as fh:
+            assert fh.read() == "complete"
+        assert not glob.glob(paths[0] + ".build*")
+    finally:
+        for path in set(paths):
+            shutil.rmtree(path, ignore_errors=True)
+
+
 def test_ann_defaults_resolve_from_recall_target():
     """The knobless defaults must land on the measured >=0.9-recall
     operating points (tools/ann_quality.py sweep: IVF probe 12/16 =

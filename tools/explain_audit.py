@@ -142,13 +142,16 @@ AUDITED = [
 
 def normalize(plan: str) -> str:
     """Strip what changes between two plannings of the same plan: the
-    expression ids (``k#123L``), exchange ``plan_id``s, RDD ids and the
-    checkout and scratch paths, so that regenerating a section on an
-    unchanged commit prints the same bytes."""
+    expression ids (``k#123L``), the numeric suffix of PySpark's lambda
+    variables (``lambda x_3#``, drawn from a JVM-global counter),
+    exchange ``plan_id``s, RDD ids and the checkout and scratch paths,
+    so that regenerating a section on an unchanged commit prints the
+    same bytes."""
     from healthcare_data_warehouse_spark.config import SCRATCH_DIR
 
     plan = plan.replace(SCRATCH_DIR, "<scratch>").replace(REPO, "<repo>")
     plan = re.sub(r"#\d+", "#", plan)
+    plan = re.sub(r"(lambda [A-Za-z]+)_\d+#", r"\1_N#", plan)
     plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
     return re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
 
