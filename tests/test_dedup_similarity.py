@@ -465,13 +465,12 @@ def test_routed_ivf_params_cost_model_cutover():
     assert routed_ivf_params(260_000)["n_lists"] == 2 * k130["n_lists"]
 
 
-def test_cosine_topk_per_row_matches_naive_window(spark):
-    """GEMM group-top-k candidates + exact re-score must equal the naive
-    all-pairs top-k (threshold, score desc, dst asc) in both single- and
-    multi-chunk regimes — including tiny chunk sizes that maximize the
-    number of chunk-pair groups a true neighbor can hide in. ``(1,
-    None)`` is the exact nearest-neighbor graph (no score floor) that
-    embedding_nn_clusters and graph_pagerank build on."""
+def test_nn_top1_blas_matches_naive_argmax(spark):
+    """The exact nearest-neighbor graph that embedding_nn_clusters and
+    graph_pagerank build on -- cosine_topk_per_row_blas at k=1 with no
+    score floor -- must produce exactly the naive all-pairs argmax edges
+    (score desc, dst asc tie-break), for both the single-chunk and
+    multi-chunk regimes."""
     from pyspark.sql import Window
     from healthcare_data_warehouse_spark.operators.similarity import (
         cosine_topk_per_row_blas, dot, norm)
@@ -488,18 +487,50 @@ def test_cosine_topk_per_row_matches_naive_window(spark):
            .select(F.col("a.vec_id").alias("src"),
                    F.col("b.vec_id").alias("dst"), sim.alias("s")))
     w = Window.partitionBy("src").orderBy(F.desc("s"), F.asc("dst"))
-    for k, thr in ((3, 0.3), (1, None)):
-        floored = sym if thr is None else sym.filter(F.col("s") >= thr)
-        naive = {(r["src"], r["dst"], r["s"]) for r in (
-            floored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k).collect())}
+    naive = {(r["src"], r["dst"]) for r in (
+        sym.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1).select("src", "dst").collect())}
 
-        for chunk_rows in (7, 100000):
-            got = {(r["src"], r["dst"], r["cosine_sim"]) for r in
-                   cosine_topk_per_row_blas(
-                       emb, "label", "vec_id", "embedding", k=k,
-                       threshold=thr, chunk_rows=chunk_rows).collect()}
-            assert got == naive, (k, thr, chunk_rows)
+    for chunk_rows in (11, 100000):
+        got = {(r["src"], r["dst"]) for r in cosine_topk_per_row_blas(
+            emb, "label", "vec_id", "embedding", k=1, threshold=None,
+            chunk_rows=chunk_rows).collect()}
+        assert got == naive, f"chunk_rows={chunk_rows}"
+
+
+def test_cosine_topk_per_row_matches_naive_window(spark):
+    """GEMM group-top-k candidates + exact re-score must equal the naive
+    all-pairs top-k (threshold, score desc, dst asc) in both single- and
+    multi-chunk regimes — including tiny chunk sizes that maximize the
+    number of chunk-pair groups a true neighbor can hide in."""
+    from pyspark.sql import Window
+    from healthcare_data_warehouse_spark.operators.similarity import (
+        cosine_topk_per_row_blas, dot, norm)
+    from healthcare_data_warehouse_spark.sources.loaders import load_table
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    k, thr = 3, 0.3
+    e = emb.select("vec_id", "label", "embedding",
+                   norm(F.col("embedding")).alias("__n"))
+    a, b = e.alias("a"), e.alias("b")
+    sim = dot(F.col("a.embedding"), F.col("b.embedding")) / (
+        F.col("a.__n") * F.col("b.__n"))
+    sym = (a.join(b, (F.col("a.label") == F.col("b.label"))
+                  & (F.col("a.vec_id") != F.col("b.vec_id")))
+           .select(F.col("a.vec_id").alias("src"),
+                   F.col("b.vec_id").alias("dst"), sim.alias("s"))
+           .filter(F.col("s") >= thr))
+    w = Window.partitionBy("src").orderBy(F.desc("s"), F.asc("dst"))
+    naive = {(r["src"], r["dst"], r["s"]) for r in (
+        sym.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k).collect())}
+
+    for chunk_rows in (7, 100000):
+        got = {(r["src"], r["dst"], r["cosine_sim"]) for r in
+               cosine_topk_per_row_blas(
+                   emb, "label", "vec_id", "embedding", k=k,
+                   threshold=thr, chunk_rows=chunk_rows).collect()}
+        assert got == naive, chunk_rows
 
 
 def test_cosine_top1_exact_ties_break_on_lowest_id(spark):
@@ -738,23 +769,44 @@ def test_cosine_topk_oversized_blocks_route_through_ivf(spark):
             assert abs(r["cosine_sim"] - exact_score[key]) < 1e-9
 
 
+def test_nn_top1_oversize_guard(spark):
+    """The exact nearest-neighbor graph (cosine_topk_per_row_blas at k=1,
+    no score floor) fails fast on an oversized block under the default
+    on_oversize='error', and matches the unguarded result when every
+    block is under the cap."""
+    import numpy as np
+    import pytest
+    from pyspark.errors import PythonException
+
+    from healthcare_data_warehouse_spark.operators.similarity import (
+        cosine_topk_per_row_blas,
+    )
+
+    rng = np.random.default_rng(13)
+    rows = [(i, "L", [float(x) for x in rng.standard_normal(8)])
+            for i in range(30)]
+    df = spark.createDataFrame(
+        rows, "vec_id long, label string, embedding array<float>")
+    kw = dict(block_col="label", id_col="vec_id", vec_col="embedding",
+              k=1, threshold=None)
+
+    base = sorted((r["src"], r["dst"]) for r in cosine_topk_per_row_blas(
+        df, max_block_rows=None, **kw).collect())
+    under = sorted((r["src"], r["dst"]) for r in cosine_topk_per_row_blas(
+        df, max_block_rows=100, **kw).collect())
+    assert under == base
+    with pytest.raises(PythonException, match="max_block_rows"):
+        cosine_topk_per_row_blas(df, max_block_rows=10, **kw).collect()
+
+
 def test_cosine_topk_on_oversize_error_still_raises(spark):
-    """Default on_oversize='error' keeps the fail-loud guard, and with
-    every block under the cap the guarded result equals the unguarded
-    one (``max_block_rows=None``)."""
+    """Default on_oversize='error' keeps the fail-loud guard."""
     import pytest
     from healthcare_data_warehouse_spark.operators.similarity import (
         cosine_topk_per_row_blas)
     from healthcare_data_warehouse_spark.sources.loaders import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    kw = dict(block_col="label", id_col="vec_id", vec_col="embedding",
-              k=1, threshold=None)
-    base = sorted(cosine_topk_per_row_blas(
-        emb, max_block_rows=None, **kw).collect())
-    under = sorted(cosine_topk_per_row_blas(
-        emb, max_block_rows=100, **kw).collect())
-    assert under == base
     with pytest.raises(Exception, match="max_block_rows"):
         cosine_topk_per_row_blas(
             emb, "label", "vec_id", "embedding", k=3, threshold=0.3,
